@@ -415,10 +415,20 @@ def _bench_only():
     }
 
 
+def _sf_label(sf_dir: str) -> float:
+    """Scale factor parsed from a fixture dir name (``.../sf0.1`` →
+    0.1); -1.0 when the name carries none, so a diagnostic label never
+    crashes a run."""
+    try:
+        return float(sf_dir.rstrip("/").rsplit("sf", 1)[1])
+    except (IndexError, ValueError):
+        return -1.0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    sf = _sf_label(sf_dir)
 
     from skopje_spark.queries import load_all
     from skopje_spark.session import get_spark
@@ -451,8 +461,8 @@ def main() -> None:
             with open("/proc/stat") as fh:
                 vals = [int(x) for x in fh.readline().split()[1:]]
             return vals[7] if len(vals) > 7 else 0, sum(vals)
-        except OSError:  # non-Linux: field rides as null
-            return None
+        except (OSError, ValueError, IndexError):  # non-Linux or odd
+            return None  # /proc/stat: the field rides as null
 
     steal_start = _cpu_steal_snapshot()
     load_start = os.getloadavg()
@@ -514,13 +524,8 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     extra = {}
     if sf2_dir:
-        sf2 = (
-            float(sf2_dir.rstrip("/").rsplit("sf", 1)[-1])
-            if "sf" in sf2_dir
-            else -1.0
-        )
         extra = {
-            "sf2": sf2,
+            "sf2": _sf_label(sf2_dir),
             "queries_sf2": timings2,
             "run_spread_sf2": spreads2,
         }

@@ -22,11 +22,13 @@ plus hex/base-conversion string passes were the dominant per-gram CPU.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
+from skopje_spark.operators._checkpoint import checkpoint_generation
 from skopje_spark.queries.rounding import dround
 from skopje_spark.tables import ensure_parallelism
 
@@ -589,148 +591,72 @@ def simhash(
     )
 
 
-def _storage_rdd_ids(sc) -> set[int]:
-    """IDs of RDDs currently holding storage (cached or checkpointed).
-    Best-effort like :func:`_unpersist_rdd_ids`: on runtimes without the
-    private JVM bridge (Spark Connect) return empty and leave cleanup to
-    the context cleaner."""
-    try:
-        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
-    except Exception:  # pragma: no cover - connect/bridge-less runtime
-        return set()
-
-
-def _unpersist_rdd_ids(sc, ids: set[int]) -> None:
-    """Free storage for specific RDD ids (used to drop a superseded
-    ``localCheckpoint`` generation — ``DataFrame.unpersist`` does not
-    reach checkpoint blocks). Best-effort: if the private bridge is
-    unavailable the blocks are left to the context cleaner."""
-    if not ids:
-        return
-    try:
-        it = sc._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            kv = it.next()
-            if kv._1() in ids:
-                kv._2().unpersist(False)
-    except Exception:  # pragma: no cover - cleaner fallback
-        pass
-
-
-def _checkpoint_generation(df: DataFrame, prev_ids: set[int]) -> tuple[DataFrame, set[int]]:
-    """Materialize ``df`` into a fresh ``localCheckpoint`` generation,
-    then free the storage of the previous generation. Returns the
-    checkpointed frame (whose plan is a flat scan — lineage truncated)
-    and the RDD ids backing it."""
-    sc = df.sparkSession.sparkContext
-    before = _storage_rdd_ids(sc)
-    out = df.localCheckpoint(eager=True)
-    mine = _storage_rdd_ids(sc) - before
-    _unpersist_rdd_ids(sc, prev_ids)
-    return out, mine
-
-
-# broadcast the per-round label table only while it is provably small:
-# 4M nodes ≈ 64 MB framed (two longs + overhead) — the same gate shape
-# as graph.pagerank's _BROADCAST_NODES_MAX, with planner fallback above
-_BROADCAST_LABELS_MAX = int(os.environ.get("SKOPJE_BROADCAST_LABELS_MAX", 4_000_000))
+# Edge rows up to which connected components run as ONE executor task
+# (union-find over the streamed edge batches) instead of star rounds.
+# Measured on a 4-core VM, near-dup-shaped graphs (components of ~8,
+# ~1 node per edge), union-find vs star wall time, union-find worker
+# peak RSS:
+#   10k edges     0.9 s vs 11 s     123 MB
+#   100k edges    1.0 s vs 13 s     133 MB
+#   1M edges      3.7 s vs 44 s     238 MB
+#   4M edges     16 s   vs 126 s    457 MB
+# Star's per-round job overhead loses at every size on 4 cores, so the
+# gate is the one task's cost, not a time crossover: ~85 MB and ~4 s
+# per 1M edges, on one core. Past 4M that single task holds GBs while
+# star spreads the same work over every executor of a cluster.
+_ONE_TASK_EDGES_MAX = 4_000_000
 
 
 def neardup_clusters(
     pairs: DataFrame, *, id_a: str = "id_a", id_b: str = "id_b",
-    max_iterations: int = 20, algorithm: str = "label",
+    max_iterations: int = 20,
 ) -> DataFrame:
     """Connected components over a near-dup pair list → (doc_id,
     cluster_id) with cluster_id = min doc id in the component — the
     canonical-representative assignment that turns pairwise candidates
     into dedup groups.
 
-    ``algorithm="label"``: iterative min-label propagation (each node
-    adopts the smallest label among itself and its neighbors) until a
-    fixpoint, bounded by ``max_iterations``. Each round is one shuffle
-    (neighbor min) + one join; rounds needed = graph diameter — right
-    for the shallow graphs near-dup candidates produce (dups of dups
-    of X are dups of X).
+    The ``(src, dst)`` projection is checkpointed once (the upstream
+    pair generator runs a single time) and its row count rides that
+    materialization. Then ONE size decision picks the solve:
 
-    ``algorithm="star"``: large-star/small-star alternation (Kiveris
-    et al., "Connected Components in MapReduce and Beyond"), which
-    contracts long paths logarithmically — O(log² n) rounds on any
-    graph — the 100 TB path for deep or adversarial dup graphs.
+    - at most ``_ONE_TASK_EDGES_MAX`` edges: union-find in one executor
+      task (``coalesce(1).mapInPandas``) — one job, nothing collected
+      to the driver, the result stays a DataFrame;
+    - above it: large-star/small-star (:func:`_neardup_clusters_star`),
+      O(log² n) checkpointed rounds on any graph.
 
-    Scale notes: every iteration ends in an eager ``localCheckpoint``
-    that truncates lineage (otherwise the logical plan doubles per
-    round and Catalyst analysis itself becomes the bottleneck) and the
-    previous generation's storage is freed, so peak footprint is two
-    label tables regardless of round count. The final generation stays
-    checkpointed until the session drops it — one table, bounded. On a
-    multi-executor cluster prefer reliable ``checkpoint()`` (HDFS) if
-    executor loss mid-loop must be survivable.
+    Both give the component minimum, so the output does not depend on
+    the path. ``max_iterations`` bounds the star rounds only.
 
-    Convergence caveat: cluster ids are canonical (the true component
-    minimum) only when the loop reaches a fixpoint within
-    ``max_iterations``. If the cap cuts the loop short, every node
-    still gets exactly one row, but a deep component may surface as
-    several cluster ids (labels that are themselves relabeled nodes).
-    The star path runs one extra label-compression join after the loop
-    to collapse one remaining level; raise ``max_iterations`` for
-    adversarially deep graphs.
+    Ids keep the type of ``id_a ∪ id_b`` (e.g. int ∪ bigint → bigint),
+    nullable. A pair with a null id is not an edge and is dropped, so
+    an id seen only in such pairs gets no row.
     """
-    if algorithm == "star":
-        return _neardup_clusters_star(pairs, id_a=id_a, id_b=id_b,
-                                      max_iterations=max_iterations)
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm: {algorithm!r} (label|star)")
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    )
-    # undirected: propagate both ways, PLUS a tagged self-loop per
-    # node. The self-loop folds the node's own label into the same
-    # neighbor-min aggregation (min over N(x) ∪ {x}), so each round is
-    # ONE join + ONE groupBy — the old shape needed a second left join
-    # back onto the previous labels just to keep each node's own label
-    # and detect change; here the self-loop row carries the old label
-    # through the aggregation (max over the is_self rows) for an exact
-    # __changed flag. Checkpointed once so the (possibly expensive)
-    # upstream pair generator runs a single time, not once per
-    # iteration.
-    both = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).withColumn("is_self", F.lit(False))
-    selfloops = (
-        both.select(F.col("src")).distinct()
-        .select(
-            "src", F.col("src").alias("dst"), F.lit(True).alias("is_self")
+    id_type = pairs.select(id_a).union(pairs.select(id_b)).schema[0].dataType
+    n_obs = Observation()
+    edges, edge_ids = checkpoint_generation(
+        pairs.select(
+            F.col(id_a).cast(id_type).alias("src"),
+            F.col(id_b).cast(id_type).alias("dst"),
         )
-    )
-    # adjacency hash-partitioned by src ONCE: localCheckpoint preserves
-    # the partitioning, so every round's groupBy(src) is exchange-free;
-    # node/edge counts (for the gates below) ride the materialization
-    nodes_obs = Observation()
-    adj, adj_ids = _checkpoint_generation(
-        both.union(selfloops)
-        .repartition("src")
-        .observe(
-            nodes_obs,
-            F.sum(F.col("is_self").cast("long")).alias("n_nodes"),
-            F.count(F.lit(1)).alias("n_rows"),
-        ),
+        .dropna()
+        .observe(n_obs, F.count(F.lit(1)).alias("n")),
         set(),
     )
-    counts = nodes_obs.get
-    n_nodes = counts["n_nodes"] or 0
-    n_rows = counts["n_rows"] or 0
-    # LOCAL SOLVE below the broadcast gate: the distributed loop already
-    # holds the full label table in driver memory every round (it is
-    # broadcast), so once adjacency fits the same gate, collecting it
-    # ONCE and running union-find locally is the strictly cheaper plan —
-    # 1 job instead of 1 job per propagation round, with the identical
-    # min-id-per-component fixpoint (union-find tracks each root's
-    # minimum member). The same adaptive-algorithm principle as AQE's
-    # SMJ→BHJ demotion and the sample-trained kmeans quantizer; above
-    # the gate the distributed loop below runs unchanged — this is a
-    # small-graph fast path, not a local[32] tuning.
-    if n_rows <= _BROADCAST_LABELS_MAX:
-        rows = adj.collect()
+    if (n_obs.get["n"] or 0) > _ONE_TASK_EDGES_MAX:
+        return _neardup_clusters_star(
+            edges, max_iterations=max_iterations, edge_ids=edge_ids
+        )
+
+    out_rows = 1 << 16  # rows per yielded output batch
+
+    def union_find(batches):
+        # union by MIN id: each root IS its component minimum, the same
+        # label star converges to. Memory is one dict entry per node;
+        # the edge batches stream through.
+        import pandas as pd
+
         parent: dict = {}
 
         def find(x):
@@ -741,85 +667,36 @@ def neardup_clusters(
                 parent[x], x = r, parent[x]
             return r
 
-        for r in rows:
-            u, v = r["src"], r["dst"]
-            parent.setdefault(u, u)
-            parent.setdefault(v, v)
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                # union by MIN id: the root IS the component minimum,
-                # which is exactly the label-propagation fixpoint
-                lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                parent[hi] = lo
-        out_rows = [(x, find(x)) for x in parent]
-        spark = pairs.sparkSession
-        id_type = dict(zip(pairs.schema.names, pairs.schema.fields))[
-            id_a
-        ].dataType
-        from pyspark.sql.types import StructField, StructType
+        for b in batches:
+            for u, v in zip(b["src"].tolist(), b["dst"].tolist()):
+                parent.setdefault(u, u)
+                parent.setdefault(v, v)
+                ru, rv = find(u), find(v)
+                if ru != rv:
+                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
+                    parent[hi] = lo
+        nodes = list(parent)
+        for i in range(0, len(nodes), out_rows):
+            chunk = nodes[i:i + out_rows]
+            yield pd.DataFrame(
+                {"doc_id": chunk, "cluster_id": [find(x) for x in chunk]}
+            )
 
-        schema = StructType(
-            [
-                StructField("doc_id", id_type, False),
-                StructField("cluster_id", id_type, False),
-            ]
-        )
-        _unpersist_rdd_ids(spark.sparkContext, adj_ids)
-        return spark.createDataFrame(out_rows, schema)
-    labels = (
-        adj.filter(F.col("is_self"))
-        .select(F.col("src").alias("id"), F.col("src").alias("cluster_id"))
+    return edges.coalesce(1).mapInPandas(
+        union_find,
+        StructType([
+            StructField("doc_id", id_type),
+            StructField("cluster_id", id_type),
+        ]),
     )
-    # broadcast gate (the pagerank pattern): the label table is
-    # node-sized; below the gate broadcasting it makes each round ONE
-    # exchange-free stage over the src-partitioned adjacency (the join
-    # probes the broadcast, the groupBy reuses the checkpoint's
-    # partitioning). Above the gate — cluster-sized label tables — the
-    # planner keeps its own join strategy (the only correct shape).
-    bcast_labels = n_nodes <= _BROADCAST_LABELS_MAX
-    gen_ids: set[int] = set()
-    for _ in range(max_iterations):
-        lbl = F.broadcast(labels) if bcast_labels else labels
-        updated = (
-            adj.join(lbl, adj.dst == lbl.id)
-            .groupBy("src")
-            .agg(
-                F.min("cluster_id").alias("cluster_id"),
-                F.max(
-                    F.when(F.col("is_self"), F.col("cluster_id"))
-                ).alias("__old"),
-            )
-            .select(
-                F.col("src").alias("id"),
-                "cluster_id",
-                (F.col("cluster_id") < F.col("__old")).alias("__changed"),
-            )
-        )
-        # ONE job per round: the convergence metric rides the eager
-        # checkpoint's materialization via observe() — the separate
-        # filter(__changed).limit(1).count() probe job is gone
-        # (guide §2.6: cut driver-side job count; measured one of the
-        # two jobs per round was pure probe).
-        obs = Observation()
-        updated = updated.observe(
-            obs, F.sum(F.col("__changed").cast("long")).alias("n")
-        )
-        updated, gen_ids = _checkpoint_generation(updated, gen_ids)
-        n_changed = obs.get["n"] or 0
-        labels = updated.drop("__changed")
-        if n_changed == 0:
-            break
-    if gen_ids:
-        # labels now scans its own checkpoint generation; the adjacency
-        # checkpoint is no longer reachable from it
-        _unpersist_rdd_ids(adj.sparkSession.sparkContext, adj_ids)
-    return labels.select(F.col("id").alias("doc_id"), "cluster_id")
 
 
 def _neardup_clusters_star(
-    pairs: DataFrame, *, id_a: str, id_b: str, max_iterations: int,
+    edges: DataFrame, *, max_iterations: int = 20, edge_ids: Iterable[int] = (),
 ) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.).
+    """Large-star/small-star connected components (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond") over a ``(src,
+    dst)`` edge frame → (doc_id, cluster_id = component minimum).
 
     Each round rewires edges toward component minimums:
 
@@ -831,22 +708,36 @@ def _neardup_clusters_star(
     The edge set converges to a star forest — every non-root node holds
     exactly the edge (node, component-min). Both steps are one
     groupBy-min + one join (no ``collect_set``, so high-degree hubs
-    never materialize an adjacency list on one task), and each round is
-    checkpointed like the label loop. Rounds needed: O(log² n) on any
-    graph vs. O(diameter) for min-label — use this for deep chains.
+    never materialize an adjacency list on one task). Rounds needed:
+    O(log² n) on any graph, at most ``max_iterations``.
+
+    Every round ends in an eager ``localCheckpoint`` that truncates
+    lineage (otherwise the logical plan doubles per round), and the
+    previous generation — starting with the caller's ``edge_ids`` — is
+    freed, so peak footprint is two edge generations regardless of
+    round count. The final label generation stays checkpointed until
+    the session drops it. On a multi-executor cluster prefer reliable
+    ``checkpoint()`` (HDFS) if executor loss mid-loop must be
+    survivable.
+
+    Convergence caveat: cluster ids are canonical only when the loop
+    reaches a fixpoint within ``max_iterations``. If the cap cuts it
+    short, every node still gets exactly one row, but a deep component
+    may surface as several cluster ids; one label-compression join
+    after the loop collapses one remaining level.
     """
     nodes = (
-        pairs.select(F.col(id_a).alias("id"))
-        .union(pairs.select(F.col(id_b).alias("id")))
+        edges.select(F.col("src").alias("id"))
+        .union(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    nodes, node_ids = _checkpoint_generation(nodes, set())
+    nodes, node_ids = checkpoint_generation(nodes, set())
     # canonical orientation big→small, self-loops dropped
-    edges = pairs.select(
-        F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
-        F.least(F.col(id_a), F.col(id_b)).alias("v"),
+    canon = edges.select(
+        F.greatest(F.col("src"), F.col("dst")).alias("u"),
+        F.least(F.col("src"), F.col("dst")).alias("v"),
     ).filter(F.col("u") != F.col("v")).distinct()
-    edges, gen_ids = _checkpoint_generation(edges, set())
+    edges, gen_ids = checkpoint_generation(canon, set(edge_ids))
     prev_sig = None
     for _ in range(max_iterations):
         # --- large-star: over the symmetric adjacency ---
@@ -888,7 +779,7 @@ def _neardup_clusters_star(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.hash("u", "v").cast("bigint")).alias("h"),
         )
-        edges, gen_ids = _checkpoint_generation(small, gen_ids)
+        edges, gen_ids = checkpoint_generation(small, gen_ids)
         sig_row = obs.get
         sig = (sig_row["n"], sig_row["h"])
         if sig == prev_sig:
@@ -897,8 +788,8 @@ def _neardup_clusters_star(
     # collapse to one edge per node before labeling: if the loop hit
     # max_iterations (or the cheap signature collided and stopped early)
     # a node may still hold several edges — min(v) degrades to one
-    # (possibly non-minimal) label per node, like the label path,
-    # instead of emitting duplicate doc_id rows
+    # (possibly non-minimal) label per node instead of emitting
+    # duplicate doc_id rows
     roots = edges.groupBy("u").agg(F.min("v").alias("v"))
     # one extra label-compression join: after an early cut a label can
     # itself be a relabeled node — follow one parent hop (u→v→gv) so a
@@ -916,7 +807,7 @@ def _neardup_clusters_star(
     )
     # materialize the answer, then free everything intermediate; the
     # one final (doc_id, cluster_id) generation is what the caller reads
-    labels, _ = _checkpoint_generation(labels, node_ids | gen_ids)
+    labels, _ = checkpoint_generation(labels, node_ids | gen_ids)
     return labels
 
 

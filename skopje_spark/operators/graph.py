@@ -1,11 +1,13 @@
 """Iterative graph analytics on edge DataFrames: fixed-iteration
 PageRank.
 
-Companion to the connected-components fixpoint in
-``operators/dedup.py`` (neardup_clusters): where that converges a
-labeling, this powers importance scoring over a relationship graph —
-e.g. ranking suppliers by how central they are to high-degree
-customers, or domains by inbound links in a crawl.
+Companion to connected components in ``operators/dedup.py``
+(neardup_clusters: one-task union-find on small graphs, star rounds on
+large ones): where that labels components, this powers importance
+scoring over a relationship graph — e.g. ranking suppliers by how
+central they are to high-degree customers, or domains by inbound links
+in a crawl. Both bound lineage with the checkpoint generations of
+``operators/_checkpoint.py``, which free each superseded generation.
 
 Scale shape per iteration: one shuffle to aggregate contributions by
 destination (sum is a partial agg — map-side combined), one join of
@@ -27,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from skopje_spark.operators._checkpoint import checkpoint_generation
 
 __all__ = ["pagerank"]
 
@@ -172,6 +176,7 @@ def pagerank(
     # per-iteration cost collapses to one map-side join + the
     # map-side-combined inflow aggregation (bytes ∝ nodes, not edges).
     small_graph = n <= _BROADCAST_NODES_MAX
+    rank_ids: set[int] = set()
     for it in range(iters):
         per_src = (
             ranks.join(
@@ -207,7 +212,8 @@ def pagerank(
                 ).alias("rank"),
             )
         # O(nodes) rows; truncating lineage every checkpoint_interval
-        # iterations keeps plan depth constant regardless of iters
+        # iterations keeps plan depth constant regardless of iters, and
+        # freeing the superseded generation keeps storage constant too
         # (skipped after the last iteration — the caller's action
         # materializes the final plan anyway)
         if (
@@ -215,5 +221,5 @@ def pagerank(
             and (it + 1) % checkpoint_interval == 0
             and it + 1 < iters
         ):
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks, rank_ids = checkpoint_generation(ranks, rank_ids)
     return ranks.select("node", (F.col("rank") * F.lit(float(n))).alias("norm_rank"))

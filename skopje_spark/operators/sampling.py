@@ -270,8 +270,9 @@ def leakage_safe_split(
     ``cluster_id`` (the component representative) alongside
     ``out_col`` for audit.
 
-    Scale: LSH banding + iterative min-label propagation are the
-    existing bucketed/bounded plans (nothing all-pairs); the final
+    Scale: LSH banding + connected components (one-task union-find
+    on small pair graphs, checkpointed star rounds on large ones) are
+    the existing bucketed/bounded plans (nothing all-pairs); the final
     assignment is one broadcast-sized join of cluster labels (rows ∝
     documents IN clusters, a small fraction of any deduped corpus)
     plus the same narrow hash-range expression as split_assign.

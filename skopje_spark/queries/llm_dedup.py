@@ -266,10 +266,10 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clusters: embedding-cosine candidate pairs →
     connected components → (doc_id, cluster_id = min id in component).
 
-    Spark side: iterative min-label propagation
-    (:func:`skopje_spark.operators.dedup.neardup_clusters`); oracle
-    side: a recursive CTE computing min reachable id — genuinely
-    different algorithms, same fixpoint, hash-compared.
+    Spark side: :func:`skopje_spark.operators.dedup.neardup_clusters`,
+    whose graph is small enough here for its one-task union-find;
+    oracle side: a recursive CTE computing min reachable id —
+    genuinely different algorithms, same fixpoint, hash-compared.
     """
     from skopje_spark.operators.dedup import neardup_clusters
     from skopje_spark.operators.similarity import blocked_neardup_pairs
@@ -312,17 +312,19 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same fixpoint as q_dedup_clusters, computed with the
     large-star/small-star alternation (Kiveris et al.) — the O(log² n)
-    100 TB path for deep dup graphs — against the identical
-    recursive-CTE oracle. Three genuinely different algorithms
-    (min-label, star, recursive CTE) must all agree."""
-    from skopje_spark.operators.dedup import neardup_clusters
+    path ``neardup_clusters`` takes above its edge-count gate, called
+    directly so the oracle covers it at fixture scale — against the
+    identical recursive-CTE oracle. Three genuinely different
+    algorithms (union-find, star, recursive CTE) must all agree."""
+    from skopje_spark.operators.dedup import _neardup_clusters_star
     from skopje_spark.operators.similarity import blocked_neardup_pairs
 
     e = load_table(spark, sf_dir, "embeddings")
     pairs = blocked_neardup_pairs(
         e, id_col="vec_id", vec_col="embedding", block_col="label", threshold=0.4
     )
-    return neardup_clusters(pairs, algorithm="star").orderBy("doc_id")
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    return _neardup_clusters_star(edges).orderBy("doc_id")
 
 
 @register(
@@ -877,8 +879,9 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping and every single assignment are hash-pinned.
 
     Scale: the leakage graph comes from the existing bucketed pair
-    generators; label propagation is the bounded iterative plan;
-    the final assignment is a narrow hash-range expression — the
+    generators; connected components run as one union-find task on
+    small graphs and as bounded star rounds on large ones; the final
+    assignment is a narrow hash-range expression — the
     corpus never shuffles for the split itself."""
     from skopje_spark.operators.sampling import leakage_safe_split
     from skopje_spark.operators.similarity import blocked_neardup_pairs

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 
 import pytest
 
@@ -24,7 +25,8 @@ def pytest_configure(config):
 
 def _slow_tier_nodeids() -> set[str]:
     """Measured slow tier (tests/slow_tier.txt): '<seconds> <nodeid>'
-    lines from the full-suite duration profile, comments ignored."""
+    lines from the full-suite duration profile, comments ignored.
+    Node ids are returned relative to ``tests/``."""
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "slow_tier.txt")
     ids: set[str] = set()
@@ -37,10 +39,25 @@ def _slow_tier_nodeids() -> set[str]:
                 parts = line.split(None, 1)
                 nodeid = parts[1] if len(parts) == 2 else parts[0]
                 ids.add(nodeid.removeprefix("tests/"))
-                ids.add(nodeid)
     except OSError:
         pass
     return ids
+
+
+def _warn_stale_slow_ids(slow_ids: set[str], collected: set[str]) -> None:
+    """One warning naming the slow-tier ids, in the collected files,
+    that match no collected test — a renamed test would otherwise move
+    silently from the slow tier into the fast lane."""
+    files = {nodeid.split("::", 1)[0] for nodeid in collected}
+    stale = sorted(
+        nodeid for nodeid in slow_ids - collected
+        if nodeid.split("::", 1)[0] in files
+    )
+    if stale:
+        warnings.warn(
+            "tests/slow_tier.txt lists ids that match no collected test: "
+            + ", ".join(stale)
+        )
 
 
 def pytest_collection_modifyitems(config, items):
@@ -51,15 +68,18 @@ def pytest_collection_modifyitems(config, items):
     at least one fast test — are DESELECTED unless SKOPJE_FULL_TESTS=1.
     Deselection (not skip) keeps the output and exit-code contract
     identical for the driver."""
+    slow_ids = _slow_tier_nodeids()
+    if not any("::" in arg for arg in config.args):  # whole files collected
+        _warn_stale_slow_ids(
+            slow_ids, {item.nodeid.removeprefix("tests/") for item in items}
+        )
     if os.environ.get("SKOPJE_FULL_TESTS"):
         return
-    slow_ids = _slow_tier_nodeids()
     keep, drop = [], []
     for item in items:
         is_slow = (
             item.get_closest_marker("slow") is not None
-            or item.nodeid in slow_ids
-            or f"tests/{item.nodeid}" in slow_ids
+            or item.nodeid.removeprefix("tests/") in slow_ids
         )
         (drop if is_slow else keep).append(item)
     if drop:

@@ -37,8 +37,10 @@ def test_bucketed_join_has_zero_shuffles(spark, bucketed_tables):
 
 
 def test_unbucketed_same_join_shuffles_both_sides(spark):
-    a = spark.range(2000).select(F.col("id").alias("o_key")).hint("merge")
-    b = spark.range(6000).select((F.col("id") % 2000).alias("o_key"))
+    # 4 source partitions, like the 4 buckets: on one core a
+    # single-partition source needs no exchange at all
+    a = spark.range(0, 2000, 1, 4).select(F.col("id").alias("o_key")).hint("merge")
+    b = spark.range(0, 6000, 1, 4).select((F.col("id") % 2000).alias("o_key"))
     joined = a.join(b, "o_key")
     # same join shape over unbucketed sources: exchanges on both sides
     assert num_shuffles(joined) >= 2

@@ -398,15 +398,68 @@ def test_token_count_known_values(spark):
     assert df.select(token_count(F.col("t")).alias("n")).collect()[0]["n"] == 5
 
 
-def test_neardup_clusters_transitive(spark):
-    """Chains collapse to one component; disjoint pairs stay apart."""
-    from skopje_spark.operators.dedup import neardup_clusters
+def _clusters_per_regime(monkeypatch, pairs, **kw):
+    """``neardup_clusters`` under each of its two size-selected paths —
+    gate 0 forces star, a huge gate the one-task union-find — as
+    ``{regime: {doc_id: cluster_id}}``."""
+    from skopje_spark.operators import dedup
 
+    out = {}
+    for regime, gate in (("star", 0), ("union_find", 1 << 62)):
+        monkeypatch.setattr(dedup, "_ONE_TASK_EDGES_MAX", gate)
+        rows = dedup.neardup_clusters(pairs, **kw).collect()
+        got = {r["doc_id"]: r["cluster_id"] for r in rows}
+        assert len(got) == len(rows)  # one row per node
+        out[regime] = got
+    return out
+
+
+def _same_clusters(monkeypatch, pairs, **kw):
+    """Both paths must give identical labels; returns them."""
+    per = _clusters_per_regime(monkeypatch, pairs, **kw)
+    assert per["star"] == per["union_find"]
+    return per["star"]
+
+
+def test_neardup_clusters_transitive(spark, monkeypatch):
+    """Chains collapse to one component; disjoint pairs stay apart."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a bigint, id_b bigint"
     )
-    got = {r["doc_id"]: r["cluster_id"] for r in neardup_clusters(pairs).collect()}
+    got = _same_clusters(monkeypatch, pairs)
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+
+
+_BIG = 2**53 + 1  # first integer a double cannot hold
+
+
+@pytest.mark.parametrize(
+    "rows, ddl, want",
+    [
+        # past 2^53: a float detour would merge or shift these ids
+        ([(_BIG + 2, _BIG), (_BIG + 1, _BIG + 2), (_BIG + 3, _BIG + 4)],
+         "id_a bigint, id_b bigint",
+         {_BIG: _BIG, _BIG + 1: _BIG, _BIG + 2: _BIG,
+          _BIG + 3: _BIG + 3, _BIG + 4: _BIG + 3}),
+        # int ∪ bigint → bigint: typing both ids from id_a loses id_b
+        ([(5, 2**31 + 7), (3, 5)], "id_a int, id_b bigint",
+         {3: 3, 5: 3, 2**31 + 7: 3}),
+        # a pair with a null id is not an edge
+        ([(1, None), (None, 2), (None, None), (3, 4), (4, None)],
+         "id_a bigint, id_b bigint", {3: 3, 4: 3}),
+    ],
+    ids=["past_2_53", "int_and_bigint", "null_ids"],
+)
+def test_neardup_clusters_id_types(spark, monkeypatch, rows, ddl, want):
+    """Output ids keep the widened, nullable id_a ∪ id_b type exactly."""
+    from pyspark.sql.types import LongType
+
+    from skopje_spark.operators.dedup import neardup_clusters
+
+    pairs = spark.createDataFrame(rows, ddl)
+    assert _same_clusters(monkeypatch, pairs) == want
+    for f in neardup_clusters(pairs).schema.fields:
+        assert f.dataType == LongType() and f.nullable
 
 
 # --- multimodal ------------------------------------------------------
@@ -516,12 +569,10 @@ def test_winnow_fingerprints_edit_robust(spark):
     assert s1 != s2       # but the edit is detectable
 
 
-def test_neardup_clusters_star_matches_label(spark):
-    """Large-star/small-star reaches the same fixpoint as min-label
-    propagation on assorted graph shapes."""
+def test_neardup_clusters_regimes_agree_on_random_graphs(spark, monkeypatch):
+    """Large-star/small-star reaches the same fixpoint as the one-task
+    union-find on assorted graph shapes."""
     import random
-
-    from skopje_spark.operators.dedup import neardup_clusters
 
     random.seed(23)
     edges = set()
@@ -531,61 +582,38 @@ def test_neardup_clusters_star_matches_label(spark):
         for _ in range(40):
             edges.add((random.choice(ids), random.choice(ids)))
     pairs = spark.createDataFrame(sorted(edges), "id_a bigint, id_b bigint")
-    by_label = {
-        r["doc_id"]: r["cluster_id"]
-        for r in neardup_clusters(pairs, algorithm="label", max_iterations=60).collect()
-    }
-    by_star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in neardup_clusters(pairs, algorithm="star").collect()
-    }
-    assert by_star == by_label
+    got = _same_clusters(monkeypatch, pairs)
+    assert len(set(got.values())) >= 3  # the disjoint ranges stay apart
 
 
-def test_neardup_clusters_star_deep_chain_bounded(spark):
-    """A 60-node path graph: min-label would need 60 diameter rounds;
-    the star alternation contracts it in O(log n) checkpointed rounds
-    (pre-checkpoint lineage growth made this shape hang)."""
-    from skopje_spark.operators.dedup import neardup_clusters
-
+def test_neardup_clusters_deep_chain_bounded(spark, monkeypatch):
+    """A 60-node path graph: star contracts it in O(log n) checkpointed
+    rounds (pre-checkpoint lineage growth made this shape hang), well
+    inside max_iterations; union-find needs no rounds at all."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], "id_a bigint, id_b bigint"
     )
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in neardup_clusters(pairs, algorithm="star", max_iterations=12).collect()
-    }
+    got = _same_clusters(monkeypatch, pairs, max_iterations=12)
     assert got == {i: 0 for i in range(61)}
 
 
-def test_neardup_clusters_label_deep_chain_checkpointed(spark):
-    """min-label on a 25-deep path completes in bounded time: each round
-    is checkpointed so the plan stays flat instead of doubling 25x."""
-    from skopje_spark.operators.dedup import neardup_clusters
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(25)], "id_a bigint, id_b bigint"
-    )
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in neardup_clusters(pairs, max_iterations=30).collect()
-    }
-    assert got == {i: 0 for i in range(26)}
-
-
-def test_neardup_clusters_frees_intermediate_generations(spark):
-    """At most the final label generation stays in storage after the
-    loop — superseded checkpoints are unpersisted as they are replaced."""
-    from skopje_spark.operators.dedup import neardup_clusters
+def test_neardup_clusters_frees_intermediate_generations(spark, monkeypatch):
+    """On either path at most one generation stays in storage — the
+    edge checkpoint union-find reads, or star's final labels;
+    superseded checkpoints are unpersisted as they are replaced."""
+    from skopje_spark.operators import dedup
 
     sc = spark.sparkContext
-    before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a bigint, id_b bigint"
     )
-    neardup_clusters(pairs).collect()
-    after = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
-    assert len(after - before) <= 1
+    for gate in (0, 1 << 62):
+        monkeypatch.setattr(dedup, "_ONE_TASK_EDGES_MAX", gate)
+        before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+        out = dedup.neardup_clusters(pairs)
+        out.collect()
+        after = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+        assert len(after - before) <= 1, gate
 
 
 # --- quantitative accuracy floors (no query is "rows >= 0"-verified) --
@@ -830,19 +858,18 @@ def test_bloom_no_false_negatives_and_low_fpp(spark):
     assert hits_fresh <= 5       # ~0 expected at this m/n
 
 
-def test_neardup_clusters_star_nonconverged_one_row_per_node(spark):
+def test_neardup_clusters_star_nonconverged_one_row_per_node(spark, monkeypatch):
     """Cut off before the star-forest fixpoint: every node still gets
     exactly ONE (doc_id, cluster_id) row — the post-loop min-collapse
-    degrades to a possibly-non-minimal label, never duplicate rows."""
-    from skopje_spark.operators.dedup import neardup_clusters
-
-    pairs = spark.createDataFrame(
+    and one-hop label compression degrade to a possibly-non-minimal
+    label, never duplicate or dropped rows. max_iterations bounds star
+    only, so union-find still gives the canonical labels."""
+    per = _clusters_per_regime(monkeypatch, spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a bigint, id_b bigint"
-    )
-    rows = neardup_clusters(pairs, algorithm="star", max_iterations=1).collect()
-    ids = [r["doc_id"] for r in rows]
-    assert sorted(ids) == list(range(41))        # one row per node, no dupes
-    assert all(r["cluster_id"] <= r["doc_id"] for r in rows)
+    ), max_iterations=1)
+    assert sorted(per["star"]) == list(range(41))  # one row per node
+    assert all(c <= d for d, c in per["star"].items())
+    assert per["union_find"] == {i: 0 for i in range(41)}
 
 
 def test_bloom_non_multiple_of_8_bits(spark):
@@ -935,18 +962,19 @@ def test_bloom_rejects_smaller_probe_range(spark):
         might_contain(train, bm, "key", num_bits=64)
 
 
-def test_star_clusters_every_node_labeled_on_early_cut(spark):
+def test_star_clusters_every_node_labeled_on_early_cut(spark, monkeypatch):
     """A deep chain with max_iterations=1: the star loop cannot
     converge, but the post-loop min-collapse + one-hop label
     compression must still emit exactly one row per node (ids may be
     non-canonical — the documented early-cut degradation)."""
-    from skopje_spark.operators.dedup import neardup_clusters
+    from skopje_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "_ONE_TASK_EDGES_MAX", 0)  # force star
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
-    out = neardup_clusters(
-        chain, id_a="id_a", id_b="id_b", max_iterations=1, algorithm="star"
+    out = dedup.neardup_clusters(
+        chain, id_a="id_a", id_b="id_b", max_iterations=1
     ).collect()
     ids = [r["doc_id"] for r in out]
     assert sorted(ids) == list(range(13))  # one row per node, none dropped

@@ -71,7 +71,7 @@ def test_purge_three_tiers(spark, tmp_path):
 
 def test_purge_noop_when_clean(spark, tmp_path):
     path = str(tmp_path / "t")
-    versioned_write(_k(spark, 0, 10), path)
+    versioned_write(_k(spark, 0, 10).coalesce(1), path)
     assert versioned_purge(spark, path) == 0  # no commit
     versioned_delete(spark, path, "k = 0")  # 1 row of 10 in one file
     # below default threshold when the file holds >=10 rows: no-op

@@ -177,6 +177,26 @@ def test_pagerank_star_and_symmetry(spark):
     assert all(abs(v - 1.0) < 1e-9 for v in cr.values()), cr
 
 
+def test_pagerank_frees_superseded_rank_generations(spark):
+    """With checkpoint_interval=1 every iteration but the last
+    checkpoints the ranks; each superseded generation is freed, so the
+    storage a run leaves behind does not grow with iters."""
+    from skopje_spark.operators.graph import pagerank
+
+    sc = spark.sparkContext
+    cycle = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
+    )
+
+    def left_behind(iters):
+        before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+        out = pagerank(cycle, iters=iters, checkpoint_interval=1)
+        out.collect()
+        return len({i.id() for i in sc._jsc.sc().getRDDStorageInfo()} - before)
+
+    assert left_behind(6) == left_behind(2)
+
+
 def test_pagerank_rejects_dangling_nodes(spark):
     from skopje_spark.operators.graph import pagerank
 
