@@ -13,17 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def storage_rdd_ids(sc) -> set[int]:
-    """IDs of RDDs currently holding storage (cached or checkpointed).
-    Best-effort like :func:`unpersist_rdd_ids`: on runtimes without the
-    private JVM bridge (Spark Connect) return empty and leave cleanup to
-    the context cleaner."""
-    try:
-        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
-    except Exception:  # pragma: no cover - connect/bridge-less runtime
-        return set()
-
-
 def unpersist_rdd_ids(sc, ids: set[int]) -> None:
     """Free storage for specific RDD ids (used to drop a superseded
     ``localCheckpoint`` generation). Best-effort: if the private bridge
@@ -44,10 +33,14 @@ def checkpoint_generation(df: DataFrame, prev_ids: set[int]) -> tuple[DataFrame,
     """Materialize ``df`` into a fresh ``localCheckpoint`` generation,
     then free the storage of the previous generation. Returns the
     checkpointed frame (whose plan is a flat scan — lineage truncated)
-    and the RDD ids backing it."""
-    sc = df.sparkSession.sparkContext
-    before = storage_rdd_ids(sc)
+    and the id of the RDD backing it. Only that RDD is the generation's
+    own: a cache the same job happens to fill, the caller's or another
+    thread's, is left alone."""
     out = df.localCheckpoint(eager=True)
-    mine = storage_rdd_ids(sc) - before
-    unpersist_rdd_ids(sc, prev_ids)
+    unpersist_rdd_ids(df.sparkSession.sparkContext, prev_ids)
+    try:
+        # the checkpointed plan is a LogicalRDD over the stored RDD
+        mine = {out._jdf.queryExecution().analyzed().rdd().id()}
+    except Exception:  # pragma: no cover - connect/bridge-less runtime
+        mine = set()
     return out, mine

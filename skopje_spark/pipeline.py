@@ -23,15 +23,22 @@ not N materializations. That is the property that lets the same graph
 run on 60k rows locally and 100 TB on a cluster: the engine never
 inserts a collect/cache between stages unless the user opts in via
 ``cache=True`` (useful when one source feeds many sinks).
+
+``Pipeline.run`` starts each node as soon as its inputs are ready, the
+way the reference fans out one task per download chunk
+(``src/extract/http.rs``), so one branch's driver work overlaps
+another branch's Spark stages.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 @dataclass
@@ -48,7 +55,6 @@ class PipelineContext:
 @dataclass
 class _Node:
     name: str
-    kind: str  # 'source' | 'transform' | 'sink'
     fn: Callable
     deps: tuple[str, ...] = ()
     cache: bool = False
@@ -83,57 +89,67 @@ class Pipeline:
     def source(self, name: str, fn: Callable[[PipelineContext], DataFrame],
                *, cache: bool = False) -> str:
         """Register an extract node (`Extract` analog)."""
-        return self._add(_Node(name, "source", fn, (), cache))
+        return self._add(_Node(name, fn, (), cache))
 
     def transform(self, name: str, fn: Callable, *, deps: list[str],
                   cache: bool = False) -> str:
         """Register a transform node; ``fn(ctx, *parent_dfs)``."""
-        return self._add(_Node(name, "transform", fn, tuple(deps), cache))
+        return self._add(_Node(name, fn, tuple(deps), cache))
 
     def sink(self, name: str, fn: Callable[[PipelineContext, DataFrame], Any],
              *, dep: str) -> str:
         """Register a load node (`Load` analog); the only effectful kind."""
-        return self._add(_Node(name, "sink", fn, (dep,)))
+        return self._add(_Node(name, fn, (dep,)))
 
     # -- execution ----------------------------------------------------------
-    def _topo_order(self) -> list[_Node]:
-        order: list[_Node] = []
-        seen: dict[str, int] = {}  # 0=visiting, 1=done
-
-        def visit(name: str) -> None:
-            state = seen.get(name)
-            if state == 1:
-                return
-            if state == 0:
-                raise ValueError(f"cycle through node {name!r}")
-            seen[name] = 0
-            for d in self._nodes[name].deps:
-                visit(d)
-            seen[name] = 1
-            order.append(self._nodes[name])
-
-        for name in self._nodes:
-            visit(name)
-        return order
-
     def run(self, spark: SparkSession,
             conf: dict[str, Any] | None = None) -> dict[str, Any]:
-        """Execute the graph: compose all plans, then run each sink.
+        """Execute the graph. A node starts once all its dependencies
+        have returned; at most ``min(len(nodes), defaultParallelism)``
+        run at once, and a free slot goes to the earliest-registered
+        ready node, so on one core nodes run in registration order. Node
+        threads inherit the caller's local properties and session tags,
+        and label their jobs ``<pipeline>/<node>``.
 
-        Returns ``{node_name: DataFrame | sink_result}`` so callers can
-        inspect intermediate plans (still lazy) after the run.
+        If a node raises, running nodes finish, no further node starts,
+        and the first exception is re-raised unchanged. Two sinks that
+        write the same target must be ordered by a dependency: versioned
+        writes assume one writer per commit.
+
+        Returns ``{node_name: DataFrame | sink_result}`` in registration
+        order so callers can inspect intermediate plans (still lazy).
         """
         ctx = PipelineContext(spark=spark, conf=dict(conf or {}))
+        pending = list(self._nodes.values())
+        slots = max(1, min(len(pending), spark.sparkContext.defaultParallelism))
         out: dict[str, Any] = {}
-        for node in self._topo_order():
-            if node.kind == "source":
-                df = node.fn(ctx)
-            elif node.kind == "transform":
-                df = node.fn(ctx, *[out[d] for d in node.deps])
-            else:  # sink — the action boundary
-                out[node.name] = node.fn(ctx, out[node.deps[0]])
-                continue
-            if node.cache:
-                df = df.cache()
-            out[node.name] = df
-        return out
+        running: dict[Future, _Node] = {}
+        failure: Exception | None = None
+        with ThreadPoolExecutor(slots, thread_name_prefix=self.name) as pool:
+            while True:
+                if failure is None:
+                    ready = [n for n in pending if all(d in out for d in n.deps)]
+                    for node in ready[:slots - len(running)]:
+                        pending.remove(node)
+                        # wrapped per node: every thread gets its own copy
+                        # of the caller's local properties
+                        task = inheritable_thread_target(spark)(self._run_node)
+                        args = [out[d] for d in node.deps]
+                        running[pool.submit(task, ctx, node, args)] = node
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in finished:
+                    node = running.pop(fut)
+                    try:
+                        out[node.name] = fut.result()
+                    except Exception as e:
+                        failure = failure or e
+        if failure is not None:
+            raise failure
+        return {name: out[name] for name in self._nodes}
+
+    def _run_node(self, ctx: PipelineContext, node: _Node, args: list) -> Any:
+        ctx.spark.sparkContext.setJobDescription(f"{self.name}/{node.name}")
+        result = node.fn(ctx, *args)
+        return result.cache() if node.cache else result

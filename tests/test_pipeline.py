@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 import zipfile
 
 import pytest
@@ -50,6 +52,142 @@ def test_pipeline_rejects_cycles_and_dups(spark):
         p.source("a", lambda ctx: None)
     with pytest.raises(ValueError, match="unknown"):
         p.transform("t", lambda ctx, x: x, deps=["missing"])
+
+
+def _slots(monkeypatch, spark, n):
+    """Make ``run`` see ``n`` cores, so the pool bound it derives is
+    the same at any ``SPARK_GRAFT_CPUS``."""
+    monkeypatch.setattr(type(spark.sparkContext), "defaultParallelism",
+                        property(lambda sc: n))
+
+
+class _Log:
+    """Thread-safe ``(event, node)`` log that nodes write into."""
+
+    def __init__(self):
+        self.events: list[tuple[str, str]] = []
+        self._lock = threading.Lock()
+
+    def add(self, event: str, node: str) -> None:
+        with self._lock:
+            self.events.append((event, node))
+
+    def node(self, name: str, value=None, *, sleep: float = 0.0, error=None):
+        def fn(ctx, *parents):
+            self.add("start", name)
+            time.sleep(sleep)
+            if error is not None:
+                raise error
+            self.add("end", name)
+            return value
+        return fn
+
+    def index(self, event: str, node: str) -> int:
+        return self.events.index((event, node))
+
+
+def test_pipeline_runs_independent_sinks_concurrently(spark, monkeypatch):
+    """Two sinks that each wait for the other can only both finish if
+    they run at the same time."""
+    _slots(monkeypatch, spark, 2)
+    barrier = threading.Barrier(2, timeout=10)
+    p = Pipeline("pair")
+    p.source("a", lambda ctx: "a")
+    p.sink("sa", lambda ctx, x: (barrier.wait(), x)[1], dep="a")
+    p.sink("sb", lambda ctx, x: (barrier.wait(), x)[1], dep="a")
+    out = p.run(spark)
+    assert (out["sa"], out["sb"]) == ("a", "a")
+
+
+def test_pipeline_one_core_runs_nodes_in_registration_order(spark, monkeypatch):
+    _slots(monkeypatch, spark, 1)
+    log = _Log()
+    p = Pipeline("serial")
+    p.source("a", log.node("a"))
+    p.sink("sa", log.node("sa"), dep="a")
+    p.source("b", log.node("b"))
+    p.transform("ab", log.node("ab"), deps=["a", "b"])
+    p.sink("sab", log.node("sab"), dep="ab")
+    p.run(spark)
+    assert log.events == [(e, n) for n in ["a", "sa", "b", "ab", "sab"]
+                          for e in ("start", "end")]
+
+
+def test_pipeline_node_starts_after_all_its_deps_return(spark):
+    log = _Log()
+    p = Pipeline("diamond")
+    p.source("fast", log.node("fast"))
+    p.source("slow", log.node("slow", sleep=0.3))
+    p.transform("left", log.node("left", sleep=0.1), deps=["fast"])
+    p.transform("join", log.node("join"), deps=["left", "slow"])
+    p.sink("save", log.node("save"), dep="join")
+    p.run(spark)
+    for name, node in p._nodes.items():
+        for d in node.deps:
+            assert log.index("end", d) < log.index("start", name)
+
+
+class _NodeFailed(RuntimeError):
+    pass
+
+
+def test_pipeline_failure_stops_new_nodes_and_reraises(spark, monkeypatch):
+    """The failing node's own exception reaches the caller; a node
+    already running finishes; nothing downstream of the failure, or
+    not yet started, runs."""
+    _slots(monkeypatch, spark, 2)
+    log = _Log()
+    boom = _NodeFailed("bad input")
+    p = Pipeline("failing")
+    p.source("slow", log.node("slow", sleep=0.3))
+    p.source("bad", log.node("bad", error=boom))
+    p.sink("after_bad", log.node("after_bad"), dep="bad")
+    p.sink("after_slow", log.node("after_slow"), dep="slow")
+    with pytest.raises(_NodeFailed) as info:
+        p.run(spark)
+    assert info.value is boom
+    assert ("end", "slow") in log.events
+    assert {n for _, n in log.events} == {"slow", "bad"}
+
+
+def test_pipeline_nodes_inherit_job_group_and_name_their_jobs(spark):
+    sc = spark.sparkContext
+    seen = {}
+
+    def probe(name):
+        def fn(ctx, *parents):
+            seen[name] = (sc.getLocalProperty("spark.jobGroup.id"),
+                          sc.getLocalProperty("spark.job.description"))
+            return name
+        return fn
+
+    p = Pipeline("tagged")
+    p.source("a", probe("a"))
+    p.source("b", probe("b"))
+    p.sink("sa", probe("sa"), dep="a")
+    sc.setJobGroup("caller-group", "caller description")
+    try:
+        p.run(spark)
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == {n: ("caller-group", f"tagged/{n}") for n in ("a", "b", "sa")}
+
+
+def test_pipeline_run_leaves_no_threads_and_keeps_result_order(spark):
+    log = _Log()
+    p = Pipeline("order")
+    p.source("z", log.node("z", "Z", sleep=0.1))
+    p.source("a", log.node("a", "A"))
+    p.transform("m", log.node("m", "M"), deps=["z", "a"])
+    p.sink("b", log.node("b", "B"), dep="a")
+    p.sink("c", log.node("c", "C"), dep="m")
+    threads = threading.active_count()
+    out = p.run(spark)
+    assert threading.active_count() == threads
+    assert list(out.items()) == [("z", "Z"), ("a", "A"), ("m", "M"),
+                                 ("b", "B"), ("c", "C")]
 
 
 def test_json_source_multiline_and_lines(spark, tmp_path):

@@ -197,6 +197,30 @@ def test_pagerank_frees_superseded_rank_generations(spark):
     assert left_behind(6) == left_behind(2)
 
 
+def test_checkpoint_generation_frees_only_its_own_rdd(spark):
+    """A cache the first generation's job fills is the caller's, not
+    the generation's: the next generation frees generation 1 and leaves
+    that cache in storage."""
+    from skopje_spark.operators._checkpoint import checkpoint_generation
+
+    sc = spark.sparkContext
+
+    def stored():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
+    base = spark.range(0, 100).select((F.col("id") * 3).alias("x")).cache()
+    g1, ids1 = checkpoint_generation(base.select((F.col("x") + 1).alias("x")), set())
+    filled = stored() - before  # base's cache and generation 1
+    assert len(filled) == 2 and len(ids1) == 1 and ids1 < filled
+    g2, ids2 = checkpoint_generation(g1.select((F.col("x") * 2).alias("x")), ids1)
+    after = stored()
+    assert filled - ids1 <= after  # the caller's cache survives
+    assert not ids1 & after and ids2 <= after
+    assert g2.agg(F.sum("x")).first()[0] == sum((3 * i + 1) * 2 for i in range(100))
+    base.unpersist()
+
+
 def test_pagerank_rejects_dangling_nodes(spark):
     from skopje_spark.operators.graph import pagerank
 
