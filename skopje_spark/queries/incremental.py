@@ -1489,7 +1489,7 @@ def q_versioned_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_merge_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-only commit rebase under the driver gate
-    (sinks/versioned.py:_attempt_rebase): a writer pinned to v0 loses
+    (sinks/versioned.py:_rebase): a writer pinned to v0 loses
     the CAS race to a key-disjoint interloper append, and resolves it
     by REBASING its already-staged merge onto the new latest — pure
     driver-side manifest arithmetic plus one CAS, no Spark job, no
@@ -1915,7 +1915,7 @@ def q_lake_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_versioned_segment_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level manifest economics under the driver gate
-    (sinks/versioned.py:_write_segments/_split_refs_for_merge): a
+    (sinks/versioned.py:_write_segments/_split_segments): a
     key-clustered orders table is committed with small manifest
     segments, then a narrow MERGE must carry most segments BY
     REFERENCE — the commit's own ``n_segments_opened`` <

@@ -1290,90 +1290,6 @@ def versioned_refold_refs(
     )
 
 
-def _split_refs_for_merge(
-    path: str, version: int, stats_key: str, bounds: tuple
-) -> tuple[list[dict], list[dict], int] | None:
-    """Segment-diff planning for a MERGE: split the base version's
-    segment refs into (closed_refs, open_entries, total_segments) —
-    closed segments PROVABLY hold no file whose key range intersects
-    the update-key bounds, so they ride into the next manifest BY
-    REFERENCE, never parsed and never re-serialized; only the open
-    segments' entries are materialized for per-file candidacy.
-    Returns None when the fast path cannot apply (legacy flat
-    manifest, NaN keys, stats-unsafe key type, all-NULL keys make it
-    pointless to split — caller falls back to the full
-    materialization, which is always correct)."""
-    lo, hi, has_nan, n_nonnull = bounds
-    if (
-        has_nan
-        or n_nonnull == 0
-        or not isinstance(lo, _STATS_SAFE)
-        or not isinstance(hi, _STATS_SAFE)
-    ):
-        return None
-    with open(os.path.join(path, f"v={version}", _MANIFEST_NAME)) as f:
-        man = json.load(f)
-    if "segments" not in man:
-        return None
-    closed: list[dict] = []
-    open_entries: list[dict] = []
-    for ref in man["segments"]:
-        st = (ref.get("stats") or {}).get(stats_key)
-        skip = False
-        if st is not None:
-            mn, mx = st.get("min"), st.get("max")
-            if (
-                mn is not None
-                and mx is not None
-                and not _stat_nan(mn)
-                and not _stat_nan(mx)
-            ):
-                try:
-                    skip = mx < lo or mn > hi
-                except TypeError:
-                    skip = False
-        if skip:
-            closed.append(ref)
-        else:
-            with open(os.path.join(path, ref["path"])) as f:
-                open_entries.extend(json.load(f))
-    return closed, open_entries, len(man["segments"])
-
-
-def _split_refs_for_bounds(
-    path: str, version: int, resolved: list[dict]
-) -> tuple[list[dict], list[dict], int] | None:
-    """Multi-bound twin of :func:`_split_refs_for_merge` for the
-    bounds-dict DELETE / REPLACE WHERE shapes: a segment ANY resolved
-    bound's ref aggregates prove disjoint holds no matching row and
-    rides by reference (a {"day": d, "source": s} delete on a
-    source-clustered table closes the day-matching segments the
-    source aggregates close). Returns None on a legacy flat
-    manifest."""
-    with open(os.path.join(path, f"v={version}", _MANIFEST_NAME)) as f:
-        man = json.load(f)
-    if "segments" not in man:
-        return None
-    closed: list[dict] = []
-    open_entries: list[dict] = []
-    bounds = [
-        (
-            u["key"], _stat_encode(u["lo"]), _stat_encode(u["hi"]),
-            u.get("vals"),
-        )
-        for u in resolved
-    ]
-    for ref in man["segments"]:
-        if any(
-            _ref_disjoint(ref, sc, lo, hi, vs) for sc, lo, hi, vs in bounds
-        ):
-            closed.append(ref)
-        else:
-            with open(os.path.join(path, ref["path"])) as f:
-                open_entries.extend(json.load(f))
-    return closed, open_entries, len(man["segments"])
-
-
 def _write_manifest_dir(
     target: str, schema_json: dict, entries: list[dict],
     meta: dict[str, str] | None,
@@ -1447,43 +1363,67 @@ def _ref_disjoint(ref: dict, stats_col: str, lo, hi, vals=None) -> bool:
         return False  # cross-type compare proves nothing
 
 
+def _split_segments(
+    path: str, man: dict, bounds: list[tuple]
+) -> tuple[list[dict], list[dict], int | None]:
+    """THE segment splitter for reads and commits: split a raw
+    manifest's segment refs into (closed_refs, open_entries,
+    n_segments). ``bounds`` holds (stats_col, lo, hi, vals) conjuncts;
+    a segment ANY of them proves disjoint by its ref aggregates
+    (:func:`_ref_disjoint`) holds no matching row, so it is never
+    opened and a commit carries it into the next manifest BY
+    REFERENCE, never re-serialized. A {"day": d, "source": s} bound on
+    a source-clustered table closes the day-matching segments the
+    source aggregates close. No bounds (or stat-less refs) open
+    everything. A legacy flat manifest returns ``([], files, None)``."""
+    if "files" in man:
+        return [], man["files"], None
+    closed: list[dict] = []
+    open_entries: list[dict] = []
+    for ref in man["segments"]:
+        if any(_ref_disjoint(ref, *b) for b in bounds):
+            closed.append(ref)
+        else:
+            with open(os.path.join(path, ref["path"])) as f:
+                open_entries.extend(json.load(f))
+    return closed, open_entries, len(man["segments"])
+
+
+def _resolved_ref_bounds(resolved: list[dict]) -> list[tuple]:
+    """:func:`_split_segments` conjuncts of resolved bounds, in the
+    canonical stats domain."""
+    return [
+        (
+            u["key"], _stat_encode(u["lo"]), _stat_encode(u["hi"]),
+            u.get("vals"),
+        )
+        for u in resolved
+    ]
+
+
 def _pruned_manifest_entries(
     path: str, version: int, stats_col, lo=None, hi=None, *,
     ref_bounds: list[tuple] | None = None,
 ) -> tuple[list[dict], dict, int, int]:
     """Two-level manifest pruning for point/range reads: open ONLY the
-    segment files whose ref-level aggregate [min, max] can intersect
-    the given bound(s) — a narrow lookup on a clustered 800k-file
-    table parses a handful of kilobyte segments, not the whole
-    manifest. ``ref_bounds`` passes SEVERAL (stats_col, lo, hi)
-    conjuncts: ANY bound proving disjointness closes the segment, so
-    a {"day": d, "source": s} read on a source-clustered table skips
-    the day-matching segments the source aggregates close. Segments
-    without usable aggregate stats (legacy flat manifests, stat-less
-    columns, NaN folds) are opened conservatively; per-entry pruning
-    then re-filters, so the result feeding :func:`_interval_split` is
-    identical to the full read. Returns (entries, schema_json,
-    segments_opened, segments_total)."""
+    segment files whose ref-level aggregates can intersect the given
+    bound(s) (:func:`_split_segments`) — a narrow lookup on a clustered
+    800k-file table parses a handful of kilobyte segments, not the
+    whole manifest. ``ref_bounds`` passes SEVERAL (stats_col, lo, hi[,
+    vals]) conjuncts. Per-entry pruning then re-filters, so the result
+    feeding :func:`_interval_split` is identical to the full read.
+    Returns (entries, schema_json, segments_opened, segments_total);
+    a flat manifest counts as one opened segment."""
     bounds = (
         ref_bounds if ref_bounds is not None else [(stats_col, lo, hi)]
     )
     bounds = [b if len(b) == 4 else (*b, None) for b in bounds]
     with open(os.path.join(path, f"v={version}", _MANIFEST_NAME)) as f:
         man = json.load(f)
-    if "files" in man:
-        return man["files"], man["schema"], 1, 1
-    out: list[dict] = []
-    opened = 0
-    for ref in man["segments"]:
-        if any(
-            _ref_disjoint(ref, sc, lo_, hi_, vs)
-            for sc, lo_, hi_, vs in bounds
-        ):
-            continue  # proven disjoint: never opened
-        opened += 1
-        with open(os.path.join(path, ref["path"])) as f:
-            out.extend(json.load(f))
-    return out, man["schema"], opened, len(man["segments"])
+    closed, entries, n = _split_segments(path, man, bounds)
+    if n is None:
+        return entries, man["schema"], 1, 1
+    return entries, man["schema"], n - len(closed), n
 
 
 def _commit_manifest(
@@ -3484,14 +3424,7 @@ def versioned_read_where(
     # skips day-matching segments the source aggregates close), then
     # per-entry tier on every bound
     entries, _, seg_opened, seg_total = _pruned_manifest_entries(
-        path, v, None,
-        ref_bounds=[
-            (
-                u["key"], _stat_encode(u["lo"]), _stat_encode(u["hi"]),
-                u.get("vals"),
-            )
-            for u in resolved
-        ],
+        path, v, None, ref_bounds=_resolved_ref_bounds(resolved)
     )
     if metrics is not None:
         metrics["segments_opened"] = seg_opened
@@ -3682,92 +3615,206 @@ def _bucket_prune_candidates(
     return cand, carried
 
 
-def _key_bounds(updates: DataFrame, key: str) -> tuple:
-    """(min, max, has_nan, n_nonnull) of the update keys — one tiny
-    agg job over the (already computed) update frame, run only when a
-    lost commit race makes a rebase worth proving."""
+def _base_snapshot(path: str, expected_version) -> tuple[int, dict]:
+    """THE base-snapshot resolver of every DML commit: (base version,
+    raw manifest). The base is the latest unless ``expected_version``
+    pins it (the OCC loop's compare-and-swap base)."""
+    base_v = (
+        latest_version(path)
+        if expected_version is _UNGUARDED
+        else expected_version
+    )
+    if base_v is None:
+        raise FileNotFoundError(f"no committed version at {path}")
+    with open(os.path.join(path, f"v={base_v}", _MANIFEST_NAME)) as f:
+        return base_v, json.load(f)
+
+
+def _carried_markers(
+    n_carried: int, closed_refs: list[dict], n_segments: int | None
+) -> dict[str, str]:
+    """``n_files_carried`` (open-segment files kept plus every closed
+    segment's members) and, over a segmented base, how many kilobyte
+    segments the commit opened vs carried by reference."""
+    out = {
+        "n_files_carried": str(
+            n_carried + sum(int(r["n"]) for r in closed_refs)
+        )
+    }
+    if n_segments is not None:
+        out["n_segments_total"] = str(n_segments)
+        out["n_segments_opened"] = str(n_segments - len(closed_refs))
+    return out
+
+
+def _key_bounds(frame: DataFrame, keys: list[str]) -> list[tuple]:
+    """Per key column, (min, max, has_nan, n_nonnull) of ``frame``'s
+    keys — ONE tiny agg job over the (already computed) key frame. The
+    planner prunes segments and files by these bounds; the first key's
+    bounds are also the rebase's added-file disjointness proof."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import DoubleType, FloatType
 
-    ktype = updates.schema[key].dataType
-    nan_agg = (
-        F.max(F.isnan(F.col(key)))
-        if isinstance(ktype, (FloatType, DoubleType))
-        else F.lit(False)
-    )
-    row = updates.agg(
-        F.min(key).alias("lo"),
-        F.max(key).alias("hi"),
-        F.count(key).alias("n"),
-        nan_agg.alias("has_nan"),
-    ).first()
+    aggs = []
+    for i, k in enumerate(keys):
+        nan_agg = (
+            F.max(F.isnan(F.col(k)))
+            if isinstance(frame.schema[k].dataType, (FloatType, DoubleType))
+            else F.lit(False)
+        )
+        aggs += [
+            F.min(k).alias(f"lo{i}"),
+            F.max(k).alias(f"hi{i}"),
+            nan_agg.alias(f"nan{i}"),
+            F.count(k).alias(f"n{i}"),
+        ]
+    row = frame.agg(*aggs).first()
     # canonical stats domain (dates → ISO strings) so the bounds
     # compare directly against manifest/segment stats values
+    return [
+        (
+            _stat_encode(row[f"lo{i}"]),
+            _stat_encode(row[f"hi{i}"]),
+            bool(row[f"nan{i}"]),
+            int(row[f"n{i}"]),
+        )
+        for i in range(len(keys))
+    ]
+
+
+def _bounds_usable(bounds: tuple) -> bool:
+    """Key bounds prune only when they are stats-safe, NaN-free and
+    non-empty (all-NULL keys match nothing but prove nothing either)."""
+    lo, hi, has_nan, n_nonnull = bounds
     return (
-        _stat_encode(row["lo"]),
-        _stat_encode(row["hi"]),
-        bool(row["has_nan"]),
-        int(row["n"]),
+        n_nonnull > 0
+        and not has_nan
+        and isinstance(lo, _STATS_SAFE)
+        and isinstance(hi, _STATS_SAFE)
     )
 
 
-def _attempt_rebase(
+def _plan_key_candidates(
     spark: SparkSession,
+    path: str,
+    base_v: int,
+    man: dict,
+    frame: DataFrame,
+    keys: list[str],
+    mapping: dict[str, str],
+) -> tuple[list[dict], list[dict], list[dict], int | None, tuple]:
+    """THE key-candidate planner of MERGE, UPSERT and key-frame DELETE:
+    which base files may hold a row whose key tuple is in ``frame``
+    (already cast to the table's types). Returns (closed_refs,
+    candidates, carried, n_segments, first_key_bounds):
+
+    1. segment tier — segments whose aggregate first-key range cannot
+       intersect the keys ride by reference, never parsed;
+    2. :func:`_match_files` — per-file interval join of the DISTINCT
+       first keys against the open entries' stats;
+    3. composite keys — a file provably disjoint from the key range
+       on ANY key column cannot hold a full-tuple match, so each
+       extra key prunes by driver interval arithmetic (a merge keyed
+       (id, source) prunes on the source PARTITION even when id leads);
+    4. :func:`_bucket_prune_candidates` — a bucketed key prunes by the
+       keys' exact bucket set (hash-scattered keys span every
+       interval, so only set membership can close files)."""
+    bounds = _key_bounds(frame, keys)
+    sk0 = mapping.get(keys[0], keys[0])
+    closed_refs, open_entries, n_segments = _split_segments(
+        path, man,
+        [(sk0, *bounds[0][:2], None)] if _bounds_usable(bounds[0]) else [],
+    )
+    cand, carried = _match_files(
+        spark, path, open_entries, frame, keys[0], stats_key=sk0
+    )
+    for k, b in zip(keys[1:], bounds[1:]):
+        if cand and _bounds_usable(b):
+            cand, extra = _interval_split(cand, mapping.get(k, k), *b[:2])
+            carried = carried + extra
+    cand, carried = _bucket_prune_candidates(
+        path, base_v, keys, frame, cand, carried
+    )
+    return closed_refs, cand, carried, n_segments, bounds[0]
+
+
+def _extend_dvs(
+    entries: list[dict], counts: dict[str, int], new_rels: list[str]
+) -> list[dict]:
+    """Entries with the staged deletion-vector sidecars appended to
+    every file holding ``counts`` (pool basename → rows deleted); a
+    file whose every row is now deleted drops out."""
+    out = []
+    for e in entries:
+        n_hit = counts.get(os.path.basename(e["path"]), 0)
+        if not n_hit:
+            out.append(e)
+            continue
+        dv_rows = int(e.get("dv_rows", 0)) + n_hit
+        if dv_rows >= e["rows"]:
+            continue
+        e2 = dict(e)
+        e2["dv_files"] = list(e.get("dv_files", [])) + new_rels
+        e2["dv_rows"] = dv_rows
+        out.append(e2)
+    return out
+
+
+_COMMUTES = object()  # rebase proof: a blind append commutes with every commit
+
+
+def _rebase(
     path: str,
     *,
     base_v: int,
-    base_files: list[dict],
-    cand_paths: set[str],
+    touched: list[dict],
+    touched_kind: str,
+    proof,
+    carry,
     new_entries: list[dict],
     schema_json: dict,
     commit_meta: dict,
-    updates: DataFrame | None,
-    key: str | None,
-    stats_key: str | None,
     lock_timeout_s: float,
     max_rebases: int = 5,
-    blind_append: bool = False,
 ) -> int:
-    """Resolve a LOST COMMIT RACE without re-deriving the merge —
+    """Resolve a LOST COMMIT RACE without re-deriving the commit —
     Delta-style logical conflict detection. The staged commit (data
-    files already pooled, manifest entries in hand) is re-targeted at
-    the CURRENT latest snapshot when the intervening commits provably
-    cannot conflict; the rebase itself is pure driver-side manifest
-    arithmetic plus one CAS — no Spark job, no data rewrite.
+    files or DV sidecars already pooled, manifest entries in hand) is
+    re-targeted at the CURRENT latest snapshot L when the intervening
+    commits provably cannot conflict; the rebase itself is pure
+    driver-side manifest arithmetic plus one CAS — no Spark job, no
+    data rewrite. Conditions checked against L:
 
-    Serial-equivalence argument (why the result equals re-running the
-    merge on the new base): our candidate set C was a conservative
-    superset of the base files that can hold an update key, so every
-    base file outside C provably holds none. Conditions checked
-    against the new latest L:
-
-    1. schema at L byte-identical to schema at the pinned base (a
-       concurrent rename/evolution changes read semantics — refuse);
+    1. schema at L identical to the base's (a concurrent
+       rename/evolution changes read semantics — refuse);
     2. CHECK-constraint marker unchanged (a new constraint must
        re-validate our staged rows — refuse);
-    3. every file in C appears in L with an IDENTICAL entry,
-       deletion vectors included (a concurrent rewrite/DELETE of a
-       file we merged from would be silently undone — refuse);
-    4. every file ADDED since the base is PROVABLY disjoint from our
-       update keys by its footer stats (min/max interval against the
-       update-key bounds, NaN refusing) — otherwise serial order
-       would have required our merge to rewrite it — refuse.
+    3. every ``touched`` base entry (files a merge rewrote, files a
+       delete vectorized) appears in L IDENTICAL, deletion vectors
+       included — a concurrent rewrite or DV would be silently undone
+       or interleaved — refuse;
+    4. every file ADDED since the base is provably disjoint from our
+       keys, per ``proof``: ``(stats_key, first_key_bounds, noun)``
+       checks the added files' footer stats against the key interval
+       (NaN or stats-unsafe keys refusing); ``None`` (a predicate
+       delete, opaque to stats) refuses any added file; ``_COMMUTES``
+       (a blind append reads nothing) accepts them all.
 
-    When all hold, re-running the merge on L would select exactly C
-    again and produce exactly our staged output, so the rebased
-    manifest ``(files(L) − C) + staged`` IS the serial result: files
-    carried from L keep any deletion vectors or replacements a
-    concurrent writer gave them. Any recorded change-feed files stay
-    valid for the same reason (conditions 3+4 pin the matched/insert
-    classification). Refusals raise :class:`CommitConflict`; the
-    caller's OCC loop falls back to a full re-derive.
+    When all hold, re-running the commit on L would select exactly the
+    same files and stage exactly our output, so ``carry(files(L)) +
+    new_entries`` IS the serial result: ``carry`` drops our candidates
+    (merge) or extends the vectors (delete) over L's entries, and
+    files carried from L keep whatever a concurrent writer gave them.
+    Recorded change-feed files stay valid for the same reason.
+    Refusals raise :class:`CommitConflict`; the caller's OCC loop
+    falls back to a full re-derive.
 
-    Scale: this is what makes N writers on one 100 TB table viable —
-    disjoint-key writers pay their own staging once and a kilobyte
-    manifest CAS per race, never an O(candidates) re-merge per lost
-    race."""
-    base_by_path = {e["path"]: e for e in base_files}
-    bounds: tuple | None = None
+    Scale: N writers on one 100 TB table on disjoint keys pay their
+    own staging once and a kilobyte manifest CAS per race, never an
+    O(candidates) re-derive per lost race."""
+    base_man = _read_manifest(path, base_v)
+    base_paths = {e["path"] for e in base_man["files"]}
+    base_constraints = snapshot_meta(path, "constraints", version=base_v)
     last: CommitConflict | None = None
     for _ in range(max_rebases):
         latest = latest_version(path)
@@ -3776,205 +3823,59 @@ def _attempt_rebase(
                 f"rebase refused: table at {path} has no committed version"
             )
         man_l = _read_manifest(path, latest)
-        base_man = _read_manifest(path, base_v)
         if man_l["schema"] != base_man["schema"]:
             raise CommitConflict(
                 "rebase refused: concurrent commit changed the table "
                 f"schema between v{base_v} and v{latest}"
             )
-        if snapshot_meta(path, "constraints", version=latest) != snapshot_meta(
-            path, "constraints", version=base_v
+        if snapshot_meta(path, "constraints", version=latest) != (
+            base_constraints
         ):
             raise CommitConflict(
                 "rebase refused: concurrent commit changed CHECK "
                 f"constraints between v{base_v} and v{latest}"
             )
         l_by_path = {e["path"]: e for e in man_l["files"]}
-        for p in sorted(cand_paths):
-            if l_by_path.get(p) != base_by_path.get(p):
+        for e in sorted(touched, key=lambda e: e["path"]):
+            if l_by_path.get(e["path"]) != e:
                 raise CommitConflict(
-                    "rebase refused: concurrent commit touched rewritten "
-                    f"file {p}"
+                    f"rebase refused: concurrent commit touched "
+                    f"{touched_kind} file {e['path']}"
                 )
-        added = [e for e in man_l["files"] if e["path"] not in base_by_path]
-        # a blind append commutes with every data commit: it reads
-        # nothing and rewrites nothing, so conditions 1-2 suffice and
-        # concurrently added files never conflict with it
-        if added and not blind_append:
-            if updates is None or key is None:
-                raise CommitConflict(
-                    "rebase refused: concurrent commit added "
-                    f"{len(added)} file(s) and this commit carries no "
-                    "key-disjointness proof"
-                )
-            if bounds is None:
-                bounds = _key_bounds(updates, key)
-            lo, hi, has_nan, n_nonnull = bounds
-            if n_nonnull:
-                if (
-                    has_nan
-                    or not isinstance(lo, _STATS_SAFE)
-                    or not isinstance(hi, _STATS_SAFE)
-                ):
+        added = [e for e in man_l["files"] if e["path"] not in base_paths]
+        if added and proof is None:
+            raise CommitConflict(
+                "rebase refused: concurrent commit added "
+                f"{len(added)} file(s) and a predicate delete "
+                "cannot prove disjointness"
+            )
+        if added and proof is not _COMMUTES:
+            stats_key, bounds, noun = proof
+            if bounds[3]:  # all-NULL keys match nothing anywhere
+                if not _bounds_usable(bounds):
                     raise CommitConflict(
-                        "rebase refused: update keys not provably disjoint "
-                        "from concurrently added files (NaN or stats-unsafe "
-                        "key type)"
+                        f"rebase refused: {noun} keys not provably "
+                        "disjoint from concurrently added files (NaN or "
+                        "stats-unsafe key type)"
                     )
-                overlap, _ = _interval_split(
-                    added, stats_key if stats_key is not None else key, lo, hi
-                )
+                overlap, _ = _interval_split(added, stats_key, *bounds[:2])
                 if overlap:
                     raise CommitConflict(
                         f"rebase refused: {len(overlap)} concurrently added "
-                        "file(s) may contain update keys"
+                        f"file(s) may contain {noun} keys"
                     )
-        entries = [
-            e for e in man_l["files"] if e["path"] not in cand_paths
-        ] + new_entries
+        carried = carry(man_l["files"])
         meta2 = dict(commit_meta)
+        meta2["n_files_carried"] = str(len(carried))
         meta2["rebased_onto"] = str(latest)
         meta2["n_rebased_over"] = str(latest - base_v)
         try:
             return _commit_manifest(
-                path, schema_json, entries, meta2, latest, lock_timeout_s
+                path, schema_json, carried + new_entries, meta2, latest,
+                lock_timeout_s,
             )
         except CommitConflict as e:  # raced again — re-check against newer L
             last = e
-            continue
-    raise CommitConflict(
-        f"rebase at {path} lost {max_rebases} further races; last: {last}"
-    )
-
-
-def _attempt_dv_rebase(
-    spark: SparkSession,
-    path: str,
-    *,
-    base_v: int,
-    base_files: list[dict],
-    counts: dict[str, int],
-    new_rels: list[str],
-    commit_meta: dict,
-    key_frame: DataFrame | None,
-    stats_key: str | None,
-    lock_timeout_s: float,
-    max_rebases: int = 5,
-) -> int:
-    """The deletion-vector twin of :func:`_attempt_rebase`: re-target
-    a lost DV-delete commit at the new latest when the race provably
-    cannot conflict. A DV delete stages only position sidecars
-    (``new_rels``) keyed by immutable pool-file basenames, so the
-    rebase re-runs the manifest entry rewrite over the NEW latest's
-    files — pure driver arithmetic. Conditions:
-
-    1-2. schema and CHECK constraints unchanged (as in the merge
-       rebase);
-    3. every file we vectorized (``counts``) appears in the latest
-       IDENTICAL to its base entry — a concurrent rewrite of such a
-       file would orphan our positions, a concurrent DV on it could
-       interleave ours incorrectly;
-    4. files ADDED since the base may contain rows our predicate
-       matches (serial order would delete them). Provable only for
-       KEY-FRAME deletes (the replica-sync shape): the key bounds
-       against the added files' footer stats. Predicate-string
-       deletes refuse whenever any file was added.
-
-    Delete-vs-delete races on disjoint files and delete-vs-merge
-    races away from our vectorized files all land metadata-only —
-    the hot contention shape for replica appliers."""
-    base_by_path = {e["path"]: e for e in base_files}
-    bounds: tuple | None = None
-    last: CommitConflict | None = None
-    for _ in range(max_rebases):
-        latest = latest_version(path)
-        if latest is None:
-            raise CommitConflict(
-                f"rebase refused: table at {path} has no committed version"
-            )
-        man_l = _read_manifest(path, latest)
-        base_man = _read_manifest(path, base_v)
-        if man_l["schema"] != base_man["schema"]:
-            raise CommitConflict(
-                "rebase refused: concurrent commit changed the table "
-                f"schema between v{base_v} and v{latest}"
-            )
-        if snapshot_meta(path, "constraints", version=latest) != snapshot_meta(
-            path, "constraints", version=base_v
-        ):
-            raise CommitConflict(
-                "rebase refused: concurrent commit changed CHECK "
-                f"constraints between v{base_v} and v{latest}"
-            )
-        l_by_base = {
-            os.path.basename(e["path"]): e for e in man_l["files"]
-        }
-        for e in base_files:
-            if counts.get(os.path.basename(e["path"]), 0):
-                cur = l_by_base.get(os.path.basename(e["path"]))
-                if cur != e:
-                    raise CommitConflict(
-                        "rebase refused: concurrent commit touched "
-                        f"vectorized file {e['path']}"
-                    )
-        added = [
-            e for e in man_l["files"] if e["path"] not in base_by_path
-        ]
-        if added:
-            if key_frame is None:
-                raise CommitConflict(
-                    "rebase refused: concurrent commit added "
-                    f"{len(added)} file(s) and a predicate delete "
-                    "cannot prove disjointness"
-                )
-            if bounds is None:
-                bounds = _key_bounds(key_frame, key_frame.columns[0])
-            lo, hi, has_nan, n_nonnull = bounds
-            if n_nonnull:
-                if (
-                    has_nan
-                    or not isinstance(lo, _STATS_SAFE)
-                    or not isinstance(hi, _STATS_SAFE)
-                ):
-                    raise CommitConflict(
-                        "rebase refused: delete keys not provably disjoint "
-                        "from concurrently added files"
-                    )
-                overlap, _ = _interval_split(
-                    added,
-                    stats_key if stats_key is not None else key_frame.columns[0],
-                    lo, hi,
-                )
-                if overlap:
-                    raise CommitConflict(
-                        f"rebase refused: {len(overlap)} concurrently added "
-                        "file(s) may contain delete keys"
-                    )
-        new_entries = []
-        for e in man_l["files"]:
-            n_hit = counts.get(os.path.basename(e["path"]), 0)
-            if not n_hit:
-                new_entries.append(e)
-                continue
-            dv_rows = int(e.get("dv_rows", 0)) + n_hit
-            if dv_rows >= e["rows"]:
-                continue  # every row deleted — drop the entry
-            e2 = dict(e)
-            e2["dv_files"] = list(e.get("dv_files", [])) + new_rels
-            e2["dv_rows"] = dv_rows
-            new_entries.append(e2)
-        meta2 = dict(commit_meta)
-        meta2["n_files_carried"] = str(len(new_entries))
-        meta2["rebased_onto"] = str(latest)
-        meta2["n_rebased_over"] = str(latest - base_v)
-        try:
-            return _commit_manifest(
-                path, man_l["schema"], new_entries, meta2, latest,
-                lock_timeout_s,
-            )
-        except CommitConflict as e:
-            last = e
-            continue
     raise CommitConflict(
         f"rebase at {path} lost {max_rebases} further races; last: {last}"
     )
@@ -3999,7 +3900,7 @@ def versioned_upsert(
 
     ``rebase_on_conflict=True`` (guarded mode only): a lost
     compare-and-swap race first attempts a METADATA-ONLY rebase onto
-    the new latest (:func:`_attempt_rebase`) — if the intervening
+    the new latest (:func:`_rebase`) — if the intervening
     commits provably don't conflict (schema/constraints unchanged,
     our rewritten files untouched, added files key-disjoint by
     stats), the already-staged output commits against the new base
@@ -4016,16 +3917,17 @@ def versioned_upsert(
     pays a full snapshot diff.
 
     PARTIAL REWRITE (the Delta/Iceberg write economics): only data
-    files whose per-file stats on ``keys[0]`` can contain a matched
-    key are read, anti-joined, and rewritten (:func:`_match_files`);
-    every other file is carried into the new manifest by reference.
-    A 1-row upsert on a key-clustered 100 TB table therefore writes
-    one file plus a kilobyte manifest — against ~O(table) for the
-    naive read-all/rewrite-all merge. Pruning uses the FIRST key
-    column only (sound for composite keys: a file with no first-key
-    overlap cannot hold a full-tuple match); cluster the table on
-    that column (sources/skipping.write_clustered) for tight file
-    ranges. The commit records ``n_files_rewritten`` /
+    files whose per-file stats can contain a matched key are read,
+    anti-joined, and rewritten (:func:`_plan_key_candidates`); every
+    other file is carried into the new manifest by reference. A 1-row
+    upsert on a key-clustered 100 TB table therefore writes one file
+    plus a kilobyte manifest — against ~O(table) for the naive
+    read-all/rewrite-all merge. The first key column prunes segments
+    and files, every further key column prunes files by its interval
+    (sound for composite keys: a file disjoint on any key column
+    cannot hold a full-tuple match); cluster the table on the first
+    key (sources/skipping.write_clustered) for tight file ranges. The
+    commit records ``n_files_rewritten`` /
     ``n_files_carried`` markers, so the economics are auditable from
     :func:`versioned_history`.
 
@@ -4043,16 +3945,8 @@ def versioned_upsert(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    base_v = (
-        latest_version(path)
-        if expected_version is _UNGUARDED
-        else expected_version
-    )
-    if base_v is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    with open(os.path.join(path, f"v={base_v}", _MANIFEST_NAME)) as f:
-        schema_json_base = json.load(f)["schema"]
-    table_schema = StructType.fromJson(schema_json_base)
+    base_v, man = _base_snapshot(path, expected_version)
+    table_schema = StructType.fromJson(man["schema"])
     table_cols = [f.name for f in table_schema.fields]
     upd_cols = set(updates.columns)
     if upd_cols != set(table_cols) and not evolve_schema:
@@ -4088,7 +3982,6 @@ def versioned_upsert(
         StructType(new_fields), reserved=set(retired) - live_phys
     )
     mapping = _schema_mapping(new_schema)
-    stats_key = mapping.get(keys[0], keys[0])
     # existing columns are cast to the TABLE's types so pooled files
     # never fork physical types (an int batch into a long column) —
     # aligned BEFORE any stats pruning, so key bounds live in the
@@ -4102,50 +3995,8 @@ def versioned_upsert(
             for c in updates.columns
         ]
     )
-
-    # SEGMENT-DIFF planning: segments whose aggregate key range cannot
-    # intersect the update keys ride into the next manifest by
-    # reference — never parsed, never re-serialized. A 1-bucket MERGE
-    # on an 800k-file table opens a couple of kilobyte segments
-    # instead of the whole manifest.
-    bounds = _key_bounds(aligned, keys[0])
-    split = _split_refs_for_merge(path, base_v, stats_key, bounds)
-    if split is None:
-        closed_refs: list[dict] = []
-        open_entries = _read_manifest(path, base_v)["files"]
-        n_segments_total = None
-    else:
-        closed_refs, open_entries, n_segments_total = split
-
-    cand, carried = _match_files(
-        spark, path, open_entries, aligned, keys[0],
-        stats_key=stats_key,
-    )
-    # composite keys: a file provably disjoint from the update range
-    # on ANY key column cannot hold a full-tuple match — each extra
-    # key costs one tiny agg + driver interval arithmetic, and it is
-    # what lets a merge keyed (id, source) prune on the source
-    # PARTITION even when id leads the key list
-    for k in keys[1:]:
-        if not cand:
-            break
-        lo_k, hi_k, nan_k, n_k = _key_bounds(aligned, k)
-        if (
-            nan_k
-            or n_k == 0
-            or not isinstance(lo_k, _STATS_SAFE)
-            or not isinstance(hi_k, _STATS_SAFE)
-        ):
-            continue
-        cand, extra = _interval_split(
-            cand, mapping.get(k, k), lo_k, hi_k
-        )
-        carried = carried + extra
-    # storage-partitioned candidacy: a bucketed merge key prunes by
-    # the update keys' exact bucket set (hash-scattered keys span
-    # every interval, so only set membership can close files)
-    cand, carried = _bucket_prune_candidates(
-        path, base_v, keys, aligned, cand, carried
+    closed_refs, cand, carried, n_segments, bounds0 = _plan_key_candidates(
+        spark, path, base_v, man, aligned, keys, mapping
     )
     if cand:
         # DV-aware slice: a candidate file's deleted rows must not
@@ -4163,17 +4014,8 @@ def versioned_upsert(
     commit_meta = {
         "op": "merge",
         "n_files_rewritten": str(len(cand)),
-        "n_files_carried": str(
-            len(carried) + sum(int(r["n"]) for r in closed_refs)
-        ),
+        **_carried_markers(len(carried), closed_refs, n_segments),
     }
-    if n_segments_total is not None:
-        # segment-diff observability: how many kilobyte segments the
-        # commit actually opened vs carried by reference
-        commit_meta["n_segments_total"] = str(n_segments_total)
-        commit_meta["n_segments_opened"] = str(
-            n_segments_total - len(closed_refs)
-        )
     if change_feed:
         # Delta-CDF-style write-side change recording: classify the
         # update rows against the candidate slice's EXISTING keys
@@ -4220,19 +4062,13 @@ def versioned_upsert(
     except CommitConflict:
         if not rebase_on_conflict or not isinstance(expected_version, int):
             raise
-        return _attempt_rebase(
-            spark,
-            path,
-            base_v=expected_version,
-            base_files=_read_manifest(path, expected_version)["files"],
-            cand_paths={e["path"] for e in cand},
-            new_entries=new_entries,
-            schema_json=new_schema.jsonValue(),
-            commit_meta=commit_meta,
-            updates=aligned,
-            key=keys[0],
-            stats_key=mapping.get(keys[0], keys[0]),
-            lock_timeout_s=lock_timeout_s,
+        cand_paths = {e["path"] for e in cand}
+        return _rebase(
+            path, base_v=base_v, touched=cand, touched_kind="rewritten",
+            proof=(mapping.get(keys[0], keys[0]), bounds0, "update"),
+            carry=lambda fs: [e for e in fs if e["path"] not in cand_paths],
+            new_entries=new_entries, schema_json=new_schema.jsonValue(),
+            commit_meta=commit_meta, lock_timeout_s=lock_timeout_s,
         )
 
 
@@ -4257,9 +4093,9 @@ def versioned_merge(
     MATCHED [AND cond] THEN INSERT`` — with the same partial-rewrite
     economics as :func:`versioned_upsert`: only key-matched candidate
     files are read and rewritten, every other file rides into the new
-    manifest by reference (sound because :func:`_match_files` proves
-    carried files can hold no matched key, so every clause decision
-    happens inside the candidate slice).
+    manifest by reference (sound because :func:`_plan_key_candidates`
+    proves carried files can hold no matched key, so every clause
+    decision happens inside the candidate slice).
 
     Conditions and ``update_set`` expressions are SQL strings
     evaluated over the MATCHED pair: target columns under their own
@@ -4284,16 +4120,8 @@ def versioned_merge(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    base_v = (
-        latest_version(path)
-        if expected_version is _UNGUARDED
-        else expected_version
-    )
-    if base_v is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    with open(os.path.join(path, f"v={base_v}", _MANIFEST_NAME)) as f:
-        schema_json_base = json.load(f)["schema"]
-    table_schema = StructType.fromJson(schema_json_base)
+    base_v, man = _base_snapshot(path, expected_version)
+    table_schema = StructType.fromJson(man["schema"])
     table_cols = [f.name for f in table_schema.fields]
     if not set(table_cols) <= set(source.columns):
         raise ValueError(
@@ -4332,40 +4160,8 @@ def versioned_merge(
     # source key type against manifest stats
     key_src = src.select(*[F.col(f"src_{k}").alias(k) for k in keys])
     mapping = _schema_mapping(table_schema)
-    stats_key = mapping.get(keys[0], keys[0])
-    # segment-diff planning, exactly as versioned_upsert: key-disjoint
-    # manifest segments ride by reference, unopened
-    bounds = _key_bounds(key_src, keys[0])
-    split = _split_refs_for_merge(path, base_v, stats_key, bounds)
-    if split is None:
-        closed_refs: list[dict] = []
-        open_entries = _read_manifest(path, base_v)["files"]
-        n_segments_total = None
-    else:
-        closed_refs, open_entries, n_segments_total = split
-    cand, carried = _match_files(
-        spark, path, open_entries, key_src, keys[0],
-        stats_key=stats_key,
-    )
-    # composite keys prune on every column (see versioned_upsert)
-    for k in keys[1:]:
-        if not cand:
-            break
-        lo_k, hi_k, nan_k, n_k = _key_bounds(key_src, k)
-        if (
-            nan_k
-            or n_k == 0
-            or not isinstance(lo_k, _STATS_SAFE)
-            or not isinstance(hi_k, _STATS_SAFE)
-        ):
-            continue
-        cand, extra = _interval_split(
-            cand, mapping.get(k, k), lo_k, hi_k
-        )
-        carried = carried + extra
-    # storage-partitioned candidacy (see versioned_upsert)
-    cand, carried = _bucket_prune_candidates(
-        path, base_v, keys, key_src, cand, carried
+    closed_refs, cand, carried, n_segments, bounds0 = _plan_key_candidates(
+        spark, path, base_v, man, key_src, keys, mapping
     )
 
     upd_cond = F.expr(when_matched_update) if when_matched_update else F.lit(False)
@@ -4430,15 +4226,8 @@ def versioned_merge(
     commit_meta = {
         "op": "merge",
         "n_files_rewritten": str(len(cand)),
-        "n_files_carried": str(
-            len(carried) + sum(int(r["n"]) for r in closed_refs)
-        ),
+        **_carried_markers(len(carried), closed_refs, n_segments),
     }
-    if n_segments_total is not None:
-        commit_meta["n_segments_total"] = str(n_segments_total)
-        commit_meta["n_segments_opened"] = str(
-            n_segments_total - len(closed_refs)
-        )
     if change_feed:
         # clause-accurate CDF recording: deletes and update preimages
         # carry TARGET values, update postimages the projected values,
@@ -4470,7 +4259,7 @@ def versioned_merge(
     try:
         return _commit_manifest(
             path,
-            schema_json_base,
+            man["schema"],
             carried + new_entries,
             commit_meta,
             expected_version,
@@ -4480,19 +4269,13 @@ def versioned_merge(
     except CommitConflict:
         if not rebase_on_conflict or not isinstance(expected_version, int):
             raise
-        return _attempt_rebase(
-            spark,
-            path,
-            base_v=expected_version,
-            base_files=_read_manifest(path, expected_version)["files"],
-            cand_paths={e["path"] for e in cand},
-            new_entries=new_entries,
-            schema_json=schema_json_base,
-            commit_meta=commit_meta,
-            updates=key_src,
-            key=keys[0],
-            stats_key=mapping.get(keys[0], keys[0]),
-            lock_timeout_s=lock_timeout_s,
+        cand_paths = {e["path"] for e in cand}
+        return _rebase(
+            path, base_v=base_v, touched=cand, touched_kind="rewritten",
+            proof=(mapping.get(keys[0], keys[0]), bounds0, "update"),
+            carry=lambda fs: [e for e in fs if e["path"] not in cand_paths],
+            new_entries=new_entries, schema_json=man["schema"],
+            commit_meta=commit_meta, lock_timeout_s=lock_timeout_s,
         )
 
 
@@ -4506,14 +4289,13 @@ def versioned_merge_concurrent(
     max_retries: int = 5,
     backoff_s: float = 0.1,
     evolve_schema: bool = False,
-    rebase: bool = True,
 ) -> int:
     """MERGE safe under CONCURRENT writers: read the latest snapshot
     (pinned by version), derive merged = (rows not matching an update
     key) ∪ updates, and commit with compare-and-swap on that base
-    version. A lost race (:class:`CommitConflict`) first attempts a
-    METADATA-ONLY rebase onto the new latest (``rebase=True``,
-    :func:`_attempt_rebase`): when the intervening commits provably
+    version. A lost race (:class:`CommitConflict`) always first
+    attempts a METADATA-ONLY rebase onto the new latest
+    (:func:`_rebase`): when the intervening commits provably
     don't conflict — the common case for writers on disjoint key
     ranges — the staged output lands with one more manifest CAS and
     ZERO re-derivation. Only a refused rebase re-reads the NEW
@@ -4542,7 +4324,7 @@ def versioned_merge_concurrent(
                 spark, path, updates, keys,
                 meta=meta, evolve_schema=evolve_schema,
                 expected_version=base,
-                rebase_on_conflict=rebase,
+                rebase_on_conflict=True,
             )
         except CommitConflict as e:
             last = e
@@ -4578,17 +4360,7 @@ def versioned_append(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    base_v = (
-        latest_version(path)
-        if expected_version is _UNGUARDED
-        else expected_version
-    )
-    if base_v is None:
-        raise FileNotFoundError(
-            f"no committed version at {path} — use versioned_write to create"
-        )
-    with open(os.path.join(path, f"v={base_v}", _MANIFEST_NAME)) as f:
-        raw = json.load(f)
+    base_v, raw = _base_snapshot(path, expected_version)
     table_schema = StructType.fromJson(raw["schema"])
     if set(batch.columns) != {f.name for f in table_schema.fields}:
         raise ValueError(
@@ -4607,17 +4379,12 @@ def versioned_append(
     # segment-diff: EVERY base segment rides by reference — an append
     # never reads, parses, or re-serializes existing metadata; legacy
     # flat manifests re-chunk once and segment from then on
-    closed_refs = raw.get("segments")
-    base_entries = [] if closed_refs is not None else raw["files"]
-    n_base = (
-        sum(int(r["n"]) for r in closed_refs)
-        if closed_refs is not None
-        else len(base_entries)
-    )
+    closed_refs = raw.get("segments", [])
+    base_entries = raw.get("files", [])
     commit_meta = {
         "op": "append",
         "n_files_rewritten": "0",
-        "n_files_carried": str(n_base),
+        **_carried_markers(len(base_entries), closed_refs, None),
         "n_files_appended": str(len(new_entries)),
     }
     if change_feed:
@@ -4641,20 +4408,11 @@ def versioned_append(
             raise
         # an append commutes with every concurrent data commit —
         # rebase needs only the schema/constraint checks
-        return _attempt_rebase(
-            spark,
-            path,
-            base_v=expected_version,
-            base_files=_read_manifest(path, expected_version)["files"],
-            cand_paths=set(),
-            new_entries=new_entries,
-            schema_json=raw["schema"],
-            commit_meta=commit_meta,
-            updates=None,
-            key=None,
-            stats_key=None,
+        return _rebase(
+            path, base_v=base_v, touched=[], touched_kind="rewritten",
+            proof=_COMMUTES, carry=list, new_entries=new_entries,
+            schema_json=raw["schema"], commit_meta=commit_meta,
             lock_timeout_s=lock_timeout_s,
-            blind_append=True,
         )
 
 
@@ -5064,18 +4822,10 @@ def versioned_delete(
     import math
 
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import StructType
 
-    base_v = (
-        latest_version(path)
-        if expected_version is _UNGUARDED
-        else expected_version
-    )
-    if base_v is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    with open(os.path.join(path, f"v={base_v}", _MANIFEST_NAME)) as f:
-        schema_json_base = json.load(f)["schema"]
-    schema = StructType.fromJson(schema_json_base)
+    base_v, man = _base_snapshot(path, expected_version)
+    schema = StructType.fromJson(man["schema"])
     mapping = _schema_mapping(schema)
     # KEY-FRAME deletes (the replica-apply shape) prune BOTH tiers
     # before any data moves: segment-diff carries provably-disjoint
@@ -5084,9 +4834,8 @@ def versioned_delete(
     # a narrow key-frame delete on a clustered 100 TB table reads a
     # handful of files. Predicate-string deletes must scan everything
     # the predicate could match (the predicate is opaque to stats).
-    closed_refs: list[dict] = []
-    n_segments_total: int | None = None
     drop_entries: list[dict] = []
+    proof = None
     if isinstance(condition, dict):
         # bounds-dict delete (the partition-drop shape): classify
         # every file from stats alone — fully-covered files drop from
@@ -5096,11 +4845,9 @@ def versioned_delete(
             condition, schema, mapping,
             table_partition_specs(path, version=base_v),
         )
-        split = _split_refs_for_bounds(path, base_v, resolved)
-        if split is None:
-            open_entries = _read_manifest(path, base_v)["files"]
-        else:
-            closed_refs, open_entries, n_segments_total = split
+        closed_refs, open_entries, n_segments = _split_segments(
+            path, man, _resolved_ref_bounds(resolved)
+        )
         scan_entries, carried_open, drop_entries = _classify_for_delete(
             open_entries, resolved
         )
@@ -5119,79 +4866,32 @@ def versioned_delete(
                 for c in condition.columns
             ]
         )
-        kcol0 = condition.columns[0]
-        bounds = _key_bounds(condition, kcol0)
-        split = _split_refs_for_merge(
-            path, base_v, mapping.get(kcol0, kcol0), bounds
+        kcols = list(condition.columns)
+        closed_refs, scan_entries, carried_open, n_segments, bounds0 = (
+            _plan_key_candidates(
+                spark, path, base_v, man, condition, kcols, mapping
+            )
         )
-        if split is None:
-            open_entries = _read_manifest(path, base_v)["files"]
-        else:
-            closed_refs, open_entries, n_segments_total = split
-        scan_entries, carried_open = _match_files(
-            spark, path, open_entries, condition, kcol0,
-            stats_key=mapping.get(kcol0, kcol0),
-        )
-        # bucketed layouts: the key frame's exact bucket set closes
-        # hash-scattered files interval stats never could (same
-        # storage-partitioned proof as the MERGE path)
-        scan_entries, carried_open = _bucket_prune_candidates(
-            path, base_v, list(condition.columns), condition,
-            scan_entries, carried_open,
-        )
+        proof = (mapping.get(kcols[0], kcols[0]), bounds0, "delete")
     else:
-        open_entries = _read_manifest(path, base_v)["files"]
-        scan_entries, carried_open = open_entries, []
-    entries = scan_entries + carried_open
-    if not entries and not closed_refs and not drop_entries:
-        return base_v
+        closed_refs, scan_entries, n_segments = _split_segments(
+            path, man, []
+        )
+        carried_open = []
     if not scan_entries and not drop_entries:
         return base_v  # no file can hold a matching row: no-op
     hit = None
     counts: dict[str, int] = {}
     if scan_entries:
-        # scan by PHYSICAL names (rename-stable), serve the predicate
-        # the LOGICAL names — mirrors _read_entries, but the
-        # row-identity columns must survive the projection here
-        renamed = any(p != n for n, p in mapping.items())
-        read_schema = (
-            StructType(
-                [
-                    StructField(mapping[f.name], f.dataType, f.nullable)
-                    for f in schema.fields
-                ]
-            )
-            if renamed
-            else schema
-        )
-        df = _with_row_identity(
-            spark.read.schema(read_schema).parquet(
-                *[os.path.join(path, e["path"]) for e in scan_entries]
-            )
-        )
-        if renamed:
-            df = df.select(
-                *[F.col(mapping[f.name]).alias(f.name) for f in schema.fields],
-                "__file",
-                "__pos",
-            )
-        old_dvs = sorted(
-            {p for e in scan_entries for p in e.get("dv_files", [])}
-        )
-        if old_dvs:
-            prior = (
-                spark.read.parquet(*[os.path.join(path, p) for p in old_dvs])
-                .select("__file", "__pos")
-                .distinct()
-            )
-            df = df.join(F.broadcast(prior), ["__file", "__pos"], "left_anti")
+        # DV-applied row-identity scan, predicate served the LOGICAL
+        # names
+        df = _with_row_identity_entries(spark, path, scan_entries, schema)
         if isinstance(condition, DataFrame):
             # key-frame delete: rows whose key tuple appears in the frame
             # (the replica-sync / feed-apply shape) — a semi-join against
             # the broadcastable key set, never a predicate compile
             # (no broadcast hint: AQE broadcasts small key sets itself and
             # a mass-delete key frame must be allowed to shuffle)
-            kcols = list(condition.columns)
             hit = df.join(condition.distinct(), kcols, "left_semi")
         else:
             cond = F.expr(condition) if isinstance(condition, str) else condition
@@ -5221,35 +4921,16 @@ def versioned_delete(
         if counts
         else []
     )
-    new_entries = []
-    for e in entries:
-        n_hit = counts.get(os.path.basename(e["path"]), 0)
-        if not n_hit:
-            new_entries.append(e)
-            continue
-        dv_rows = int(e.get("dv_rows", 0)) + n_hit
-        if dv_rows >= e["rows"]:
-            continue  # every row deleted — drop the file entry outright
-        e2 = dict(e)
-        e2["dv_files"] = list(e.get("dv_files", [])) + new_rels
-        e2["dv_rows"] = dv_rows
-        new_entries.append(e2)
+    new_entries = _extend_dvs(scan_entries + carried_open, counts, new_rels)
     commit_meta = {
         "op": "delete",
         "n_files_rewritten": "0",
-        "n_files_carried": str(
-            len(new_entries) + sum(int(r["n"]) for r in closed_refs)
-        ),
+        **_carried_markers(len(new_entries), closed_refs, n_segments),
         "n_dv_files": str(len(new_rels)),
         "n_rows_deleted": str(total),
         "n_files_scanned": str(len(scan_entries)),
         "n_files_dropped": str(len(drop_entries)),
     }
-    if n_segments_total is not None:
-        commit_meta["n_segments_total"] = str(n_segments_total)
-        commit_meta["n_segments_opened"] = str(
-            n_segments_total - len(closed_refs)
-        )
     if change_feed:
         # deleted ROWS: the scan's hits plus the full content of
         # dropped files (their live rows are the delete — read once
@@ -5270,7 +4951,7 @@ def versioned_delete(
     try:
         return _commit_manifest(
             path,
-            schema_json_base,
+            man["schema"],
             new_entries,
             commit_meta,
             expected_version,
@@ -5287,23 +4968,17 @@ def versioned_delete(
             or drop_entries
         ):
             raise
-        kf = condition if isinstance(condition, DataFrame) else None
-        return _attempt_dv_rebase(
-            spark,
-            path,
-            base_v=expected_version,
-            base_files=_read_manifest(path, expected_version)["files"],
-            counts=counts,
-            new_rels=new_rels,
-            commit_meta=commit_meta,
-            key_frame=kf,
-            stats_key=(
-                mapping.get(kf.columns[0], kf.columns[0])
-                if kf is not None
-                else None
-            ),
-            lock_timeout_s=lock_timeout_s,
-    )
+        vectorized = [
+            e for e in scan_entries
+            if counts.get(os.path.basename(e["path"]), 0)
+        ]
+        return _rebase(
+            path, base_v=base_v, touched=vectorized,
+            touched_kind="vectorized", proof=proof,
+            carry=lambda fs: _extend_dvs(fs, counts, new_rels),
+            new_entries=[], schema_json=man["schema"],
+            commit_meta=commit_meta, lock_timeout_s=lock_timeout_s,
+        )
 
 
 def versioned_replace_where(
@@ -5341,16 +5016,8 @@ def versioned_replace_where(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    base_v = (
-        latest_version(path)
-        if expected_version is _UNGUARDED
-        else expected_version
-    )
-    if base_v is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    with open(os.path.join(path, f"v={base_v}", _MANIFEST_NAME)) as f:
-        schema_json_base = json.load(f)["schema"]
-    schema = StructType.fromJson(schema_json_base)
+    base_v, man = _base_snapshot(path, expected_version)
+    schema = StructType.fromJson(man["schema"])
     table_cols = [f.name for f in schema.fields]
     if set(batch.columns) != set(table_cols):
         raise ValueError(
@@ -5376,13 +5043,9 @@ def versioned_replace_where(
             f"{bounds} (e.g. {tuple(stray[0])}) — refusing to write "
             "outside the bounds being replaced"
         )
-    split = _split_refs_for_bounds(path, base_v, resolved)
-    if split is None:
-        closed_refs: list[dict] = []
-        open_entries = _read_manifest(path, base_v)["files"]
-        n_segments_total = None
-    else:
-        closed_refs, open_entries, n_segments_total = split
+    closed_refs, open_entries, n_segments = _split_segments(
+        path, man, _resolved_ref_bounds(resolved)
+    )
     scan_entries, carried_open, drop_entries = _classify_for_delete(
         open_entries, resolved
     )
@@ -5402,15 +5065,8 @@ def versioned_replace_where(
         "op": "replace_where",
         "n_files_rewritten": str(len(scan_entries)),
         "n_files_dropped": str(len(drop_entries)),
-        "n_files_carried": str(
-            len(carried_open) + sum(int(r["n"]) for r in closed_refs)
-        ),
+        **_carried_markers(len(carried_open), closed_refs, n_segments),
     }
-    if n_segments_total is not None:
-        commit_meta["n_segments_total"] = str(n_segments_total)
-        commit_meta["n_segments_opened"] = str(
-            n_segments_total - len(closed_refs)
-        )
     if change_feed:
         del_parts = []
         if scan_entries:
@@ -5428,7 +5084,7 @@ def versioned_replace_where(
     commit_meta.update(meta or {})
     return _commit_manifest(
         path,
-        schema_json_base,
+        man["schema"],
         carried_open + new_entries,
         commit_meta,
         expected_version,
@@ -5512,16 +5168,8 @@ def versioned_update(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    base_v = (
-        latest_version(path)
-        if expected_version is _UNGUARDED
-        else expected_version
-    )
-    if base_v is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    with open(os.path.join(path, f"v={base_v}", _MANIFEST_NAME)) as f:
-        schema_json_base = json.load(f)["schema"]
-    schema = StructType.fromJson(schema_json_base)
+    base_v, man = _base_snapshot(path, expected_version)
+    schema = StructType.fromJson(man["schema"])
     mapping = _schema_mapping(schema)
     dtypes = {f.name: f.dataType for f in schema.fields}
     unknown = [c for c in set_map if c not in dtypes]
@@ -5529,18 +5177,14 @@ def versioned_update(
         raise KeyError(
             f"UPDATE SET targets {unknown} not in schema {sorted(dtypes)}"
         )
-    closed_refs: list[dict] = []
-    n_segments_total: int | None = None
     if isinstance(condition, dict):
         resolved = _resolve_bounds(
             condition, schema, mapping,
             table_partition_specs(path, version=base_v),
         )
-        split = _split_refs_for_bounds(path, base_v, resolved)
-        if split is None:
-            open_entries = _read_manifest(path, base_v)["files"]
-        else:
-            closed_refs, open_entries, n_segments_total = split
+        closed_refs, open_entries, n_segments = _split_segments(
+            path, man, _resolved_ref_bounds(resolved)
+        )
         scan_b, carried_open, covered = _classify_for_delete(
             open_entries, resolved
         )
@@ -5549,8 +5193,10 @@ def versioned_update(
         scan_entries = scan_b + covered
         cond_col = _bounds_predicate(resolved)
     else:
-        open_entries = _read_manifest(path, base_v)["files"]
-        scan_entries, carried_open = open_entries, []
+        closed_refs, scan_entries, n_segments = _split_segments(
+            path, man, []
+        )
+        carried_open = []
         cond_col = (
             F.expr(condition) if isinstance(condition, str) else condition
         )
@@ -5599,18 +5245,12 @@ def versioned_update(
     commit_meta = {
         "op": "update",
         "n_files_rewritten": str(len(rewrite)),
-        "n_files_carried": str(
-            len(keep) + len(carried_open)
-            + sum(int(r["n"]) for r in closed_refs)
+        **_carried_markers(
+            len(keep) + len(carried_open), closed_refs, n_segments
         ),
         "n_rows_updated": str(sum(counts.values())),
         "n_files_scanned": str(len(scan_entries)),
     }
-    if n_segments_total is not None:
-        commit_meta["n_segments_total"] = str(n_segments_total)
-        commit_meta["n_segments_opened"] = str(
-            n_segments_total - len(closed_refs)
-        )
     if change_feed:
         pre = slice_df.filter(cond_col).localCheckpoint(eager=True)
         post = pre.select(
@@ -5633,7 +5273,7 @@ def versioned_update(
         )
     commit_meta.update(meta or {})
     return _commit_manifest(
-        path, schema_json_base, keep + carried_open + new_entries,
+        path, man["schema"], keep + carried_open + new_entries,
         commit_meta, expected_version, lock_timeout_s,
         reuse_refs=closed_refs,
     )

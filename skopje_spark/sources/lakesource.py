@@ -710,7 +710,7 @@ class VersionedTableWriter(DataSourceArrowWriter):
     commit validates CHECK constraints and publishes the manifest
     with a CAS retry loop (appends commute, so a lost race against
     any concurrent commit is re-pointed at the new latest — the
-    blind-append rebase argument).
+    blind-append argument of ``versioned._rebase``).
 
     ``mode("append")`` adds the batch to the current snapshot;
     ``mode("overwrite")`` commits a snapshot of only the new files
@@ -980,7 +980,7 @@ class VersionedTableWriter(DataSourceArrowWriter):
                 # the rebase refusal taxonomy, applied to the retry: a
                 # concurrent schema evolution would NULL-fill our rows
                 # through a schema we never saw — refuse rather than
-                # silently absorb (versioned._attempt_rebase cond. 1)
+                # silently absorb (versioned._rebase cond. 1)
                 if raw["schema"] != self.schema_json:
                     raise CommitConflict(
                         f"writer commit at {self.path} refused: concurrent "

@@ -1828,6 +1828,38 @@ def test_keyframe_delete_prunes_scan_and_segments(spark, tmp_path, monkeypatch):
     }
 
 
+def test_composite_keyframe_delete_prunes_on_every_key(spark, tmp_path):
+    """A composite key-frame DELETE keyed (k, src) on a table laid out
+    by src, where k spans every file: k proves nothing, but a file
+    disjoint from the frame on src cannot hold a full-tuple match, so
+    only the src-matching file is scanned."""
+    from skopje_spark.sinks.versioned import (
+        _read_manifest,
+        snapshot_meta,
+        versioned_delete,
+    )
+
+    path = str(tmp_path / "ckd")
+    srcs = ["a", "b", "c", "d"]
+    # 4 range partitions of 20 ids: partition i holds src srcs[i] and
+    # k = 0..19, so every file spans the whole k range
+    df = spark.range(0, 80, 1, 4).select(
+        (F.col("id") % 20).alias("k"),
+        F.element_at(
+            F.array(*map(F.lit, srcs)), (F.col("id") / 20).cast("int") + 1
+        ).alias("src"),
+    )
+    versioned_write(df, path)
+    assert len(_read_manifest(path, 0)["files"]) == len(srcs)
+    kf = spark.createDataFrame([(5, "b"), (7, "b")], "k long, src string")
+    v = versioned_delete(spark, path, kf)
+    assert int(snapshot_meta(path, "n_files_scanned", version=v)) == 1
+    got = {(r["k"], r["src"]) for r in versioned_read(spark, path).collect()}
+    assert got == {(k, s) for k in range(20) for s in srcs} - {
+        (5, "b"), (7, "b")
+    }
+
+
 def test_append_never_parses_base_segments(spark, tmp_path, monkeypatch):
     """APPEND commits carry every base segment by reference — the base
     manifest's entries are never materialized; the new version's
