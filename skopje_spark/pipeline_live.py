@@ -400,14 +400,12 @@ def _run_upsert(self: "LivePipeline", spark: SparkSession,
 
     NET-FINAL TIES: a single commit can record a delete AND an insert
     for the same key (``versioned_replace_where(change_feed=True)``
-    stages the removal and the replacement in one commit). Within one
-    commit the insert/update_postimage is the final state, so the
-    reduction breaks same-commit ties by change-type priority
-    (delete lowest) — deterministic, never elects the delete of a
+    stages the removal and the replacement in one commit); the shared
+    reduction (``versioned._net_final_changes``) ranks the delete
+    lowest within a commit, so it never elects the delete of a
     replaced key."""
-    from pyspark.sql import Window
-
     from skopje_spark.sinks.versioned import (
+        _net_final_changes,
         versioned_delete,
         versioned_upsert,
     )
@@ -426,25 +424,7 @@ def _run_upsert(self: "LivePipeline", spark: SparkSession,
         spark, src, from_version=frm, to_version=latests[ref],
         keys=(node.input_keys or {}).get(ref),
     )
-    act = feed.filter(F.col("_change_type") != "update_preimage")
-    w = Window.partitionBy(*node.keys).orderBy(
-        F.col("_commit_version").desc(),
-        F.when(F.col("_change_type") == "delete", F.lit(0))
-        .otherwise(F.lit(1))
-        .desc(),
-    )
-    last = (
-        act.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "_commit_version")
-    )
-    last = last.localCheckpoint(eager=True)
-    ups_src = last.filter(F.col("_change_type") != "delete").drop(
-        "_change_type"
-    )
-    dels = last.filter(F.col("_change_type") == "delete").select(
-        *node.keys
-    )
+    ups_src, dels = _net_final_changes(feed, node.keys)
     out = node.transform(spark, {ref: ups_src})
     new_cursors = {**cursors, ref: latests[ref]}
     base_meta = {

@@ -1401,26 +1401,56 @@ def _resolved_ref_bounds(resolved: list[dict]) -> list[tuple]:
     ]
 
 
-def _pruned_manifest_entries(
-    path: str, version: int, stats_col, lo=None, hi=None, *,
-    ref_bounds: list[tuple] | None = None,
-) -> tuple[list[dict], dict, int, int]:
-    """Two-level manifest pruning for point/range reads: open ONLY the
-    segment files whose ref-level aggregates can intersect the given
-    bound(s) (:func:`_split_segments`) — a narrow lookup on a clustered
-    800k-file table parses a handful of kilobyte segments, not the
-    whole manifest. ``ref_bounds`` passes SEVERAL (stats_col, lo, hi[,
-    vals]) conjuncts. Per-entry pruning then re-filters, so the result
-    feeding :func:`_interval_split` is identical to the full read.
-    Returns (entries, schema_json, segments_opened, segments_total);
-    a flat manifest counts as one opened segment."""
-    bounds = (
-        ref_bounds if ref_bounds is not None else [(stats_col, lo, hi)]
+def _plan_read(
+    path: str, man: dict, resolved: list[dict]
+) -> tuple[list[dict], int, int]:
+    """THE read planner of every pruned scan (:func:`versioned_read_where`,
+    :func:`versioned_pruned_read` and the ``skopje_versioned``
+    connector): given a raw manifest and its :func:`_resolve_bounds`
+    units, close segments by their ref aggregates
+    (:func:`_split_segments`), then drop opened entries by footer
+    intervals (:func:`_interval_split`) and by exact membership where
+    the manifest pins a file's values (:func:`_value_set_disjoint`:
+    single-valued partition files, value sets, blooms) for IN lists and
+    point bounds. No units opens everything. Returns (entries,
+    segments_opened, segments_total); a flat manifest counts as one
+    opened segment."""
+    closed, entries, n = _split_segments(
+        path, man, _resolved_ref_bounds(resolved)
     )
-    bounds = [b if len(b) == 4 else (*b, None) for b in bounds]
+    for u in resolved:
+        lo, hi = _stat_encode(u["lo"]), _stat_encode(u["hi"])
+        entries, _ = _interval_split(entries, u["key"], lo, hi)
+        bset = u.get("vals")
+        if bset is None and lo is not None and lo == hi:
+            bset = {lo}  # degenerate point interval
+        if bset is not None:
+            entries = [
+                e for e in entries
+                if not _value_set_disjoint(
+                    (e.get("stats") or {}).get(u["key"]), bset
+                )
+            ]
+    if n is None:
+        return entries, 1, 1
+    return entries, n - len(closed), n
+
+
+def _pruned_manifest_entries(
+    path: str, version: int, stats_col, lo=None, hi=None
+) -> tuple[list[dict], dict, int, int]:
+    """The segment tier alone for one ``lo <= stats_col <= hi`` bound:
+    open ONLY the segment files whose ref-level aggregates can
+    intersect it (:func:`_split_segments`) — a narrow lookup on a
+    clustered 800k-file table parses a handful of kilobyte segments,
+    not the whole manifest. Returns (entries, schema_json,
+    segments_opened, segments_total); a flat manifest counts as one
+    opened segment. Reads plan through :func:`_plan_read`."""
     with open(os.path.join(path, f"v={version}", _MANIFEST_NAME)) as f:
         man = json.load(f)
-    closed, entries, n = _split_segments(path, man, bounds)
+    closed, entries, n = _split_segments(
+        path, man, [(stats_col, lo, hi, None)]
+    )
     if n is None:
         return entries, man["schema"], 1, 1
     return entries, man["schema"], n - len(closed), n
@@ -3349,34 +3379,15 @@ def versioned_pruned_read(
     handful of files, decided from kilobytes of driver-side manifest,
     never a table scan.
 
-    Exactness: pruning drops only files PROVEN disjoint, and the
-    residual predicate re-filters the survivors, so the result is
-    row-identical to ``versioned_read(...).filter(lo <= col <= hi)``
-    (driver-oracled by q_versioned_pruned_read; file-count economics
-    unit-pinned in tests/test_versioned.py)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    committed = latest_version(path)
-    if committed is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    v = committed if version is None else version
-    # two-level pruning: ref-level aggregate stats skip whole manifest
-    # segments unopened (O(matching segments) driver JSON), then
-    # per-entry footer stats skip files within the opened segments.
-    # Physical column name throughout (stable across renames); the
-    # residual predicate stays logical because _read_entries aliases
-    # back before it applies.
-    with open(os.path.join(path, f"v={v}", _MANIFEST_NAME)) as f:
-        schema_json = json.load(f)["schema"]
-    schema = StructType.fromJson(schema_json)
-    phys_col = _schema_mapping(schema).get(col, col)
-    # stats live in the canonical encoded domain (dates → ISO strings)
-    slo, shi = _stat_encode(lo), _stat_encode(hi)
-    entries, _, _, _ = _pruned_manifest_entries(path, v, phys_col, slo, shi)
-    cand, _ = _interval_split(entries, phys_col, slo, shi)
-    pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    return _read_entries(spark, path, cand, schema).filter(pred)
+    The one-column spelling of :func:`versioned_read_where` with the
+    bound ``{col: (lo, hi)}``, planned by the same :func:`_plan_read`
+    (either side may be None for an open side). Exactness: pruning
+    drops only files PROVEN disjoint, and the residual predicate
+    re-filters the survivors, so the result is row-identical to
+    ``versioned_read(...).filter(lo <= col <= hi)`` (driver-oracled by
+    q_versioned_pruned_read; file-count economics unit-pinned in
+    tests/test_versioned.py)."""
+    return versioned_read_where(spark, path, {col: (lo, hi)}, version=version)
 
 
 def versioned_read_where(
@@ -3388,15 +3399,18 @@ def versioned_read_where(
     metrics: dict | None = None,
 ) -> DataFrame:
     """Multi-column pruned read: ``bounds`` maps column → value (point
-    lookup) or ``(lo, hi)`` interval, ANDed; either interval side may
-    be ``None`` for an OPEN side (``{"ts": (cutoff, None)}`` — the
-    everything-since-X shape), pruning and residual both one-sided.
-    Two-level pruning runs
-    per column — whole manifest segments skipped from ref aggregate
-    stats, then files from per-entry stats (EXACT on partition
-    columns, conservative footer intervals elsewhere) — and the exact
-    residual predicate re-filters, so the result is row-identical to
-    ``versioned_read(...).filter(AND of bounds)``.
+    lookup), ``(lo, hi)`` interval or IN list, ANDed; either interval
+    side may be ``None`` for an OPEN side (``{"ts": (cutoff, None)}`` —
+    the everything-since-X shape), pruning and residual both one-sided.
+    :func:`_resolve_bounds` turns the dict into pruning units and
+    :func:`_plan_read` plans them — whole manifest segments skipped
+    from ref aggregate stats, then files from per-entry stats (EXACT on
+    partition columns and value-indexed columns, conservative footer
+    intervals elsewhere); the ``skopje_versioned`` connector plans its
+    pushed filters through the same two calls. The exact residual
+    predicate re-filters, so the result is row-identical to
+    ``versioned_read(...).filter(AND of bounds)``. ``metrics`` (a dict,
+    if given) receives ``segments_opened``/``segments_total``.
 
     This is the canonical partitioned-lake read shape: ``{"day": d,
     "source": "web"}`` on a day×source-partitioned 100 TB table opens
@@ -3412,45 +3426,16 @@ def versioned_read_where(
         raise FileNotFoundError(f"no committed version at {path}")
     v = committed if version is None else version
     with open(os.path.join(path, f"v={v}", _MANIFEST_NAME)) as f:
-        schema_json = json.load(f)["schema"]
-    schema = StructType.fromJson(schema_json)
+        man = json.load(f)
+    schema = StructType.fromJson(man["schema"])
     resolved = _resolve_bounds(
         bounds, schema, _schema_mapping(schema),
         table_partition_specs(path, version=v),
     )
-    # segment tier: EVERY resolved bound prunes on the ref aggregates
-    # (one pass over refs, any disjoint conjunct closes a segment —
-    # a {"day": d, "source": s} read on a source-clustered table
-    # skips day-matching segments the source aggregates close), then
-    # per-entry tier on every bound
-    entries, _, seg_opened, seg_total = _pruned_manifest_entries(
-        path, v, None, ref_bounds=_resolved_ref_bounds(resolved)
-    )
+    entries, seg_opened, seg_total = _plan_read(path, man, resolved)
     if metrics is not None:
         metrics["segments_opened"] = seg_opened
         metrics["segments_total"] = seg_total
-    for u in resolved:
-        entries, _ = _interval_split(
-            entries, u["key"], _stat_encode(u["lo"]), _stat_encode(u["hi"])
-        )
-        bset = u.get("vals")
-        if bset is None:
-            lo_e = _stat_encode(u["lo"])
-            if lo_e is not None and lo_e == _stat_encode(u["hi"]):
-                bset = {lo_e}  # degenerate point interval
-        if bset is not None:
-            # exact membership pruning where the manifest pins the
-            # file's values: single-valued partition files (min==max)
-            # AND recorded per-file value sets (versioned_value_index)
-            # — a multi-day read opens the listed days, a point lookup
-            # on an indexed categorical column opens only files that
-            # actually contain the value
-            entries = [
-                e for e in entries
-                if not _value_set_disjoint(
-                    (e.get("stats") or {}).get(u["key"]), bset
-                )
-            ]
     return _read_entries(spark, path, entries, schema).filter(
         _bounds_predicate(resolved)
     )
@@ -3760,7 +3745,89 @@ def _extend_dvs(
     return out
 
 
-_COMMUTES = object()  # rebase proof: a blind append commutes with every commit
+_APPEND_TRIES = 16  # lost CAS races a blind append retries before giving up
+
+
+def _commit_blind_append(
+    path: str,
+    entries: list[dict],
+    commit_meta: dict[str, str],
+    *,
+    schema_json: dict,
+    constraints: str | None,
+    overwrite: bool = False,
+    layout: list[str] | None = None,
+    on_base=None,
+    lock_timeout_s: float = 600.0,
+) -> int | None:
+    """THE commit loop of every blind append whose data files are
+    already staged: the connector's batch writer (append or
+    overwrite), its stream writer, and a guarded
+    :func:`versioned_append` that lost its first CAS race. An append
+    reads nothing, so it commutes with every concurrent data commit,
+    and each try re-targets the CURRENT latest L:
+
+    1. refuses when L's schema is not ``schema_json`` (a concurrent
+       rename/evolution would read the batch through a schema it was
+       never planned for) or, for a non-empty batch, when L's CHECK
+       marker is not ``constraints`` (the marker the batch was
+       validated under);
+    2. carries L's segment refs BY REFERENCE (a legacy flat manifest's
+       entries re-chunk once) — or nothing for a create (no L) or an
+       ``overwrite``, which also record ``layout`` as the table's
+       partition spec and reset its epoch history;
+    3. CASes on L, and on a lost race tries again.
+
+    A try costs one kilobyte top-level manifest read and one CAS; no
+    segment file is opened. ``on_base(L)`` (L is None for a create)
+    returns extra commit markers, or None to stop without committing
+    (the stream writer's ledger finds the batch already landed).
+    Returns the committed version, or None when ``on_base`` stopped."""
+    for _ in range(_APPEND_TRIES):
+        base = latest_version(path)
+        reuse, files = None, entries
+        if base is not None and not overwrite:
+            with open(os.path.join(path, f"v={base}", _MANIFEST_NAME)) as f:
+                raw = json.load(f)
+            if raw["schema"] != schema_json:
+                raise CommitConflict(
+                    f"append at {path} refused: concurrent commit changed "
+                    f"the table schema (now v{base}) after this append "
+                    "was planned"
+                )
+            reuse = raw.get("segments")
+            files = entries if reuse is not None else raw["files"] + entries
+        current = (
+            None if base is None
+            else snapshot_meta(path, "constraints", version=base)
+        )
+        if entries and current != constraints:
+            raise CommitConflict(
+                f"append at {path} refused: CHECK constraints changed "
+                "after this batch was validated"
+            )
+        meta = {
+            **commit_meta,
+            **_carried_markers(len(files) - len(entries), reuse or [], None),
+        }
+        if (base is None or overwrite) and layout is not None:
+            meta["partition_by"] = json.dumps(layout)
+            meta["partition_specs"] = "[]"
+        if on_base is not None:
+            extra = on_base(base)
+            if extra is None:
+                return None
+            meta.update(extra)
+        try:
+            return _commit_manifest(
+                path, schema_json, files, meta, base, lock_timeout_s,
+                reuse_refs=reuse,
+            )
+        except CommitConflict:
+            continue
+    raise CommitConflict(
+        f"append at {path} lost {_APPEND_TRIES} consecutive races"
+    )
 
 
 def _rebase(
@@ -3797,8 +3864,9 @@ def _rebase(
        keys, per ``proof``: ``(stats_key, first_key_bounds, noun)``
        checks the added files' footer stats against the key interval
        (NaN or stats-unsafe keys refusing); ``None`` (a predicate
-       delete, opaque to stats) refuses any added file; ``_COMMUTES``
-       (a blind append reads nothing) accepts them all.
+       delete, opaque to stats) refuses any added file. (A blind
+       append proves nothing and needs no rebase: it commits through
+       :func:`_commit_blind_append`.)
 
     When all hold, re-running the commit on L would select exactly the
     same files and stage exactly our output, so ``carry(files(L)) +
@@ -3809,9 +3877,11 @@ def _rebase(
     Refusals raise :class:`CommitConflict`; the caller's OCC loop
     falls back to a full re-derive.
 
-    Scale: N writers on one 100 TB table on disjoint keys pay their
-    own staging once and a kilobyte manifest CAS per race, never an
-    O(candidates) re-derive per lost race."""
+    Cost per lost race: no Spark job and no data rewrite, but O(table
+    manifest) driver work — the base and every latest L are read in
+    full through :func:`_read_manifest` (every segment file parsed),
+    and the commit re-chunks all of ``carry(files(L))`` into segments
+    instead of carrying L's untouched segments by reference."""
     base_man = _read_manifest(path, base_v)
     base_paths = {e["path"] for e in base_man["files"]}
     base_constraints = snapshot_meta(path, "constraints", version=base_v)
@@ -3849,7 +3919,7 @@ def _rebase(
                 f"{len(added)} file(s) and a predicate delete "
                 "cannot prove disjointness"
             )
-        if added and proof is not _COMMUTES:
+        if added:
             stats_key, bounds, noun = proof
             if bounds[3]:  # all-NULL keys match nothing anywhere
                 if not _bounds_usable(bounds):
@@ -4356,7 +4426,10 @@ def versioned_append(
     Schema must match the table exactly (columns by name; values cast
     to the table's physical types so pooled files never fork).
     ``change_feed=True`` records the batch itself as ``insert`` rows —
-    the cheapest possible CDF recording, one extra write of the batch."""
+    the cheapest possible CDF recording, one extra write of the batch.
+    ``rebase_on_conflict=True`` (guarded mode only): a lost CAS race
+    re-targets the staged files at the new latest through
+    :func:`_commit_blind_append` (refused on a schema or CHECK change)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -4406,12 +4479,15 @@ def versioned_append(
     except CommitConflict:
         if not rebase_on_conflict or not isinstance(expected_version, int):
             raise
-        # an append commutes with every concurrent data commit —
-        # rebase needs only the schema/constraint checks
-        return _rebase(
-            path, base_v=base_v, touched=[], touched_kind="rewritten",
-            proof=_COMMUTES, carry=list, new_entries=new_entries,
-            schema_json=raw["schema"], commit_meta=commit_meta,
+        # an append commutes with every concurrent data commit: re-target
+        # the staged files at the new latest, segments by reference
+        return _commit_blind_append(
+            path, new_entries, commit_meta, schema_json=raw["schema"],
+            constraints=snapshot_meta(path, "constraints", version=base_v),
+            on_base=lambda latest: {
+                "rebased_onto": str(latest),
+                "n_rebased_over": str(latest - base_v),
+            },
             lock_timeout_s=lock_timeout_s,
         )
 
@@ -4462,8 +4538,13 @@ def _resolve_bounds(
     """Resolve a user bounds dict against the schema AND the partition
     spec into pruning/predicate units:
 
-    ``{"key": stats-name, "expr": Column|None, "lo", "hi",
+    ``{"key": stats-name, "expr": (() -> Column)|None, "lo", "hi",
     "coverage": bool}``
+
+    ``expr`` builds the residual column only when called (by
+    :func:`_bounds_predicate`), so resolving — and planning through
+    :func:`_plan_read` — needs no JVM: the connector resolves its
+    pushed filters inside Spark's Python planning worker.
 
     - a REAL column bounds itself (stats under its physical name,
       residual predicate on the column). If it is also the SOURCE of
@@ -4544,7 +4625,8 @@ def _resolve_bounds(
 
         if col in names:
             out.append(unit(
-                mapping.get(col, col), F.col(col), lo, hi, raw_vals, True
+                mapping.get(col, col), lambda c=col: F.col(c), lo, hi,
+                raw_vals, True,
             ))
             src_t = dtypes[col]
             for target, tr in sources_mono.get(col, []):
@@ -4587,11 +4669,13 @@ def _resolve_bounds(
             # direct bound on the bucket target: exact residual via
             # the bucket expression over the real source column
             bsrc, n = buckets[col]
-            bexpr = _bucket_expr(F.col(bsrc), n)
+            bexpr = lambda s=bsrc, n=n: _bucket_expr(F.col(s), n)  # noqa: E731
             out.append(unit(col, bexpr, lo, hi, raw_vals, True))
         elif col in mono:
             src, tr = mono[col]
-            texpr, _ = _hidden_expr(tr, F.col(src), dtypes[src])
+            texpr = lambda s=src, t=tr, d=dtypes[src]: (  # noqa: E731
+                _hidden_expr(t, F.col(s), d)[0]
+            )
             if tr == "date":
                 # day targets coerce to the date domain (ISO strings
                 # and datetimes accepted); other transforms take the
@@ -4638,13 +4722,14 @@ def _bounds_predicate(resolved: list[dict]):
     for u in resolved:
         if u["expr"] is None:
             continue
+        expr = u["expr"]()
         if "raw_vals" in u:
-            preds.append(u["expr"].isin(u["raw_vals"]))
+            preds.append(expr.isin(u["raw_vals"]))
             continue
         if u["lo"] is not None:
-            preds.append(u["expr"] >= F.lit(u["lo"]))
+            preds.append(expr >= F.lit(u["lo"]))
         if u["hi"] is not None:
-            preds.append(u["expr"] <= F.lit(u["hi"]))
+            preds.append(expr <= F.lit(u["hi"]))
     if not preds:
         return F.lit(True)
     return reduce(and_, preds)
@@ -6671,9 +6756,6 @@ def versioned_replicate(
     further consumers can chain off it (a replica of a replica, a
     view maintained on the replica) without ever touching the
     original source."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     committed = latest_version(src_path)
     if committed is None:
         raise FileNotFoundError(f"no committed version at {src_path}")
@@ -6683,18 +6765,7 @@ def versioned_replicate(
     feed = versioned_change_feed(
         spark, src_path, from_version=frm, to_version=committed
     )
-    # final action per key: newest commit wins; preimages are not
-    # actions (they describe the old state the postimage replaces)
-    act = feed.filter(F.col("_change_type") != "update_preimage")
-    w = Window.partitionBy(*keys).orderBy(F.col("_commit_version").desc())
-    last = (
-        act.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "_commit_version")
-    )
-    last = last.localCheckpoint(eager=True)  # feeds both apply steps
-    ups = last.filter(F.col("_change_type") != "delete").drop("_change_type")
-    dels = last.filter(F.col("_change_type") == "delete").select(*keys)
+    ups, dels = _net_final_changes(feed, keys)
     v = None
     if latest_version(dst_path) is None:
         v = versioned_write(ups, dst_path)
@@ -6708,6 +6779,43 @@ def versioned_replicate(
         )
     change_feed_advance(checkpoint, committed)
     return v
+
+
+def _net_final_changes(
+    feed: DataFrame, keys: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """Reduce a change feed range to each key's FINAL action, the one
+    reduction of every feed consumer that applies changes by key
+    (:func:`versioned_replicate`, ``LivePipeline`` upsert nodes).
+    Returns (upserts without ``_change_type``, deleted key frame), both
+    over one eager local checkpoint.
+
+    The newest commit wins; preimages are not actions (they describe
+    the old state their postimage replaces). A single commit can
+    record a delete AND an insert of one key
+    (``versioned_replace_where(change_feed=True)`` stages the removal
+    and the replacement together); within a commit the
+    insert/postimage is the final state, so same-commit ties rank the
+    delete lowest — the delete of a replaced key is never elected."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    act = feed.filter(F.col("_change_type") != "update_preimage")
+    w = Window.partitionBy(*keys).orderBy(
+        F.col("_commit_version").desc(),
+        F.when(F.col("_change_type") == "delete", F.lit(0))
+        .otherwise(F.lit(1))
+        .desc(),
+    )
+    last = (
+        act.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "_commit_version")
+        .localCheckpoint(eager=True)
+    )
+    ups = last.filter(F.col("_change_type") != "delete").drop("_change_type")
+    dels = last.filter(F.col("_change_type") == "delete").select(*keys)
+    return ups, dels
 
 
 def change_feed_cursor(path: str, checkpoint: str) -> int:

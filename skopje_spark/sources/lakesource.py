@@ -10,13 +10,20 @@ table composes with everything that speaks ``spark.read`` /
 importing this package's functions:
 
 - :class:`VersionedTableDataSource` (``skopje_versioned``) — batch
-  scan of a snapshot. Planning happens DRIVER-side from the kilobyte
-  manifest: ``pushFilters`` turns simple comparison predicates into
-  footer-stats file pruning (the pruned files never become input
-  partitions), every surviving file is one executor partition, and
-  the partition read applies deletion vectors, physical→logical
-  column renames, and additive-evolution NULL-fill in Arrow batches
-  (pyarrow end to end, no row-at-a-time Python).
+  scan of a snapshot, and batch/streaming writes into it. Planning
+  happens from the kilobyte manifest: ``pushFilters`` turns
+  comparison and IN predicates into the bounds dict of
+  ``versioned_read_where``, which plans it with the store's own
+  resolver and read planner (``versioned._resolve_bounds`` →
+  ``versioned._plan_read``: segment closing, footer-stats and
+  membership pruning, hidden date()/bucket() derivations), so the
+  pruned files never become input partitions. Every surviving file
+  is one executor partition, and the partition read applies deletion
+  vectors, physical→logical column renames, and additive-evolution
+  NULL-fill in Arrow batches (pyarrow end to end, no row-at-a-time
+  Python). Both writers commit through the store's one blind-append
+  CAS loop (``versioned._commit_blind_append``); the connector keeps
+  no planner or commit loop of its own.
 - :class:`VersionedChangesDataSource` (``skopje_versioned_changes``)
   — a STREAMING source serving the table's change data feed:
   offsets are commit versions (checkpointed by Spark, so restarts
@@ -90,97 +97,82 @@ def _mapping(man: dict) -> dict[str, str]:
     }
 
 
-def _overlaps(entry: dict, stats_col: str, lo, hi) -> bool:
-    """Conservative file-interval test: True unless the entry's footer
-    stats PROVE no row can satisfy ``lo <= col <= hi`` (either bound
-    may be None = unbounded). Mirrors versioned._interval_split with
-    open-bound support."""
-    if entry.get("rows") == 0:
-        return False
-    st = (entry.get("stats") or {}).get(stats_col)
-    if not st:
-        return True
-    mn, mx = st.get("min"), st.get("max")
-    isnan = lambda x: isinstance(x, float) and x != x  # noqa: E731
-    if mn is None or mx is None or isnan(mn) or isnan(mx):
-        return True
-    try:
-        if lo is not None and mx < lo:
-            return False
-        if hi is not None and mn > hi:
-            return False
-    except TypeError:  # cross-type comparison — prove nothing
-        return True
-    return True
-
-
 def _bounds_from_filters(
     filters: list[Filter], columns: set[str]
-) -> tuple[dict[str, tuple], dict[str, set]]:
-    """Fold simple comparison filters into per-column [lo, hi]
-    intervals usable against footer stats, plus per-column IN-list
-    value SETS for exact membership pruning of single-valued
-    (partition-layout) files. Only single-column comparisons with
-    stats-safe literals (bool/int/float/str) contribute; everything
-    else is ignored (Spark re-applies all filters anyway)."""
-    bounds: dict[str, tuple] = {}
+) -> dict | None:
+    """Fold Spark's pushed filters into a ``versioned_read_where``
+    bounds dict: per column an inclusive ``(lo, hi)`` interval (either
+    side None = open) from ``=``/``<``/``<=``/``>``/``>=``, or an IN
+    list. IN lists on one column intersect, and an IN list combined
+    with a range keeps the IN values inside the range; None when that
+    leaves no value, so no row can match. Only single-column filters
+    with stats-safe literals (bool/int/float/str, dates, datetimes)
+    contribute; Spark re-applies every filter anyway, so strict
+    comparisons prune as inclusive ones."""
+    import datetime as _dt
+
+    from skopje_spark.sinks.versioned import _stat_encode
+
+    def pushable(v) -> bool:
+        v = _stat_encode(v)  # dates → ISO strings
+        return isinstance(v, (bool, int, float, str, _dt.datetime)) and not (
+            isinstance(v, float) and v != v  # NaN fails every ordered cmp
+        )
+
+    ranges: dict[str, tuple] = {}
     in_sets: dict[str, set] = {}
-
-    def tighten(col: str, lo, hi) -> None:
-        cur_lo, cur_hi = bounds.get(col, (None, None))
-        if lo is not None and (cur_lo is None or lo > cur_lo):
-            cur_lo = lo
-        if hi is not None and (cur_hi is None or hi < cur_hi):
-            cur_hi = hi
-        bounds[col] = (cur_lo, cur_hi)
-
     for f in filters:
         attr = getattr(f, "attribute", None)
         col = attr[0] if attr is not None and len(attr) == 1 else None
-        if col is None or col not in columns:
+        if col not in columns:
             continue
-        import datetime as _dt
-
-        from skopje_spark.sinks.versioned import _stat_encode
-
         if isinstance(f, In):
-            # IN-list: the [min, max] interval of the values prunes
-            # conservatively, and the value SET exactly skips
-            # single-valued files (partition layout: min == max) —
-            # a two-day .isin plans exactly those days' files, not
-            # the whole span between them
-            vals = [
-                _stat_encode(x) for x in (getattr(f, "value", None) or ())
-            ]
-            if vals and all(
-                isinstance(x, (bool, int, float, str)) for x in vals
-            ) and not any(isinstance(x, float) and x != x for x in vals):
-                try:
-                    tighten(col, min(vals), max(vals))
-                except TypeError:
-                    pass
-                if col in in_sets:
-                    in_sets[col] &= set(vals)  # conjunct INs intersect
-                else:
-                    in_sets[col] = set(vals)
+            vals = set(getattr(f, "value", None) or ())
+            if not vals or not all(map(pushable, vals)):
+                continue
+            try:
+                min(vals)  # the planner folds the list into [min, max]
+            except TypeError:  # mixed literal types: no ordering
+                continue
+            in_sets[col] = in_sets[col] & vals if col in in_sets else vals
             continue
-        v = _stat_encode(getattr(f, "value", None))  # dates → ISO strings
-        # datetimes pass through RAW: no file carries timestamp stats
-        # (cross-type compares prove nothing and stay conservative),
-        # but a hidden date() partition derives a day bound from them
-        if not isinstance(v, (bool, int, float, str, _dt.datetime)):
-            continue
-        if isinstance(v, float) and v != v:  # NaN fails every ordered cmp
+        v = getattr(f, "value", None)
+        if not pushable(v):
             continue
         if isinstance(f, EqualTo):
-            tighten(col, v, v)
+            lo, hi = v, v
         elif isinstance(v, bool):
             continue  # no ordering on booleans beyond equality
         elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-            tighten(col, v, None)
+            lo, hi = v, None
         elif isinstance(f, (LessThan, LessThanOrEqual)):
-            tighten(col, None, v)
-    return bounds, in_sets
+            lo, hi = None, v
+        else:
+            continue
+        cur_lo, cur_hi = ranges.get(col, (None, None))
+        try:
+            if lo is not None and (cur_lo is None or lo > cur_lo):
+                cur_lo = lo
+            if hi is not None and (cur_hi is None or hi < cur_hi):
+                cur_hi = hi
+        except TypeError:
+            continue
+        ranges[col] = (cur_lo, cur_hi)
+    bounds: dict = dict(ranges)
+    for col, vals in in_sets.items():
+        lo, hi = ranges.get(col, (None, None))
+
+        def inside(x) -> bool:
+            try:
+                return (lo is None or x >= lo) and (hi is None or x <= hi)
+            except TypeError:
+                return True  # cross-type: keep, prove nothing
+
+        kept = [x for x in vals if inside(x)]
+        if not kept:
+            return None
+        bounds[col] = kept
+    return bounds
 
 
 @dataclass
@@ -253,49 +245,6 @@ def _read_entry_arrow(
     yield from out.to_batches(max_chunksize=65536)
 
 
-def _ref_overlaps(ref: dict, stats_col: str, lo, hi, vals=None) -> bool:
-    """Segment-ref-level twin of :func:`_overlaps`: True unless the
-    ref's AGGREGATE [min, max] on ``stats_col`` proves every member
-    file disjoint from [lo, hi] (either bound may be None), or — for
-    a pushed equality / IN value-set ``vals`` — the ref's value-set
-    union excludes every sought value. Refs without usable aggregate
-    stats stay conservative; cross-type membership (an int bound
-    against string stats) proves nothing (see
-    versioned._member_provable)."""
-    from skopje_spark.sinks.versioned import _bloom_absent, _member_provable
-
-    st = (ref.get("stats") or {}).get(stats_col)
-    if not st:
-        return True
-    bset = vals
-    if bset is None and lo is not None and lo == hi:
-        bset = {lo}
-    evals = st.get("vals")
-    if evals is not None and bset is not None:
-        try:
-            if _member_provable(evals, bset) and not (
-                set(evals) & set(bset)
-            ):
-                return False  # union excludes the set: never opened
-        except TypeError:
-            pass
-    bl = st.get("bloom")
-    if bl is not None and bset is not None and _bloom_absent(bl, bset):
-        return False  # segment bitmap union excludes every value
-    mn, mx = st.get("min"), st.get("max")
-    isnan = lambda x: isinstance(x, float) and x != x  # noqa: E731
-    if mn is None or mx is None or isnan(mn) or isnan(mx):
-        return True
-    try:
-        if lo is not None and mx < lo:
-            return False
-        if hi is not None and mn > hi:
-            return False
-    except TypeError:
-        return True
-    return True
-
-
 class VersionedTableReader(DataSourceReader):
     def __init__(self, options: dict[str, str]) -> None:
         from skopje_spark.sinks.versioned import (
@@ -343,177 +292,55 @@ class VersionedTableReader(DataSourceReader):
             self.man = json.load(f)
         self.logical = _logical_schema(self.man)
         self.map = _mapping(self.man)
-        self._bounds: dict[str, tuple] = {}
-        self._in_sets: dict[str, set] = {}
-        # hidden date() partitions: source column → virtual target,
-        # so a pushed raw-timestamp filter can skip day partitions
-        from skopje_spark.sinks.versioned import (
-            _parse_partition_spec,
-            table_partition_specs,
-        )
-
-        # spec UNION (current + historical epochs), so a pushed
-        # raw-timestamp filter keeps pruning old-epoch day files
-        # after the table evolved to a different layout
-        from skopje_spark.sinks.versioned import _is_mono
-
-        union_spec = _parse_partition_spec(
-            table_partition_specs(self.table, version=v)
-        )
-        # monotone transforms: source → [(target, transform)] — one
-        # source can feed several targets across spec epochs
-        self._derived: dict[str, list] = {}
-        for t, s, tr in union_spec:
-            if _is_mono(tr):
-                self._derived.setdefault(s, []).append((t, tr))
-        # bucket transforms: a pushed point/IN filter on the source
-        # key derives the exact bucket(s) driver-side (zlib.crc32
-        # twin of the write expression — no job)
-        self._bucketed = {
-            s: (t, int(tr[len("bucket["):-1]))
-            for t, s, tr in union_spec
-            if tr.startswith("bucket[")
-        }
+        # pushed filters as a versioned_read_where bounds dict; None
+        # when they contradict (no row can match)
+        self._bounds: dict | None = {}
         # reader metrics (inspectable by tests/operators): how many
         # manifest segments the plan opened vs carried unopened
         self.segments_total = len(self.man.get("segments", [])) or 1
         self.segments_opened: int | None = None
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """File pruning, not filter absorption: fold comparison
-        filters into per-column intervals, drop manifest SEGMENTS
-        whose aggregate stats prove disjointness (never opened), then
-        drop files within the surviving segments by footer stats, and
-        finally yield EVERY filter back so Spark re-applies exact
-        predicates. Conservative stats can only widen IO, never
-        change results."""
-        self._bounds, self._in_sets = _bounds_from_filters(
+        """File pruning, not filter absorption: fold comparison and IN
+        filters into a bounds dict that :meth:`partitions` plans
+        exactly as ``versioned_read_where`` plans the same dict, and
+        yield EVERY filter back so Spark re-applies exact predicates.
+        Conservative stats can only widen IO, never change results."""
+        self._bounds = _bounds_from_filters(
             filters, {f.name for f in self.logical.fields}
         )
         yield from filters
 
-    def _resolve_entries(self) -> list[dict]:
-        """Materialize the (segment-pruned, then file-pruned) entry
-        list for this scan; records the segment-open metrics."""
-        import datetime as _dt
-
-        phys_bounds = [
-            (self.map.get(col, col), lo, hi)
-            for col, (lo, hi) in self._bounds.items()
-        ]
-
+    def partitions(self) -> Sequence[InputPartition]:
+        """One pooled file per task — the manifest is the split index.
+        Planning is ``versioned_read_where``'s: the pushed bounds
+        resolve against the schema and every partition-spec epoch
+        (``_resolve_bounds``: hidden date()/bucket() targets derive
+        from source bounds), then ``_plan_read`` closes segments and
+        prunes files."""
         from skopje_spark.sinks.versioned import (
-            _bucket_bound_ok,
-            _bucket_of,
-            _derived_value,
-            _stat_encode,
+            _plan_read,
+            _resolve_bounds,
+            table_partition_specs,
         )
 
-        dtypes = {f.name: f.dataType for f in self.logical.fields}
-
-        def _derive(tr, v, src_type):
-            """(value, ok): derived stats-domain value of a monotone
-            transform for one bound side; None value with ok=True
-            keeps an open side open."""
-            if v is None:
-                return None, True
-            d = _derived_value(tr, v, src_type)
-            if d is None:
-                return None, False
-            return _stat_encode(d), True
-
-        def _bsafe(col, v):
-            # bucket derives only from a bound whose Python type
-            # matches the source column type (the cross-type-proves-
-            # nothing discipline — see versioned._bucket_bound_ok)
-            return _bucket_bound_ok(v, dtypes.get(col))
-
-        bucket_sets: list[tuple[str, set]] = []
-        for col, (lo, hi) in self._bounds.items():
-            for target, tr in self._derived.get(col, []):
-                dlo, ok_lo = _derive(tr, lo, dtypes.get(col))
-                dhi, ok_hi = _derive(tr, hi, dtypes.get(col))
-                if ok_lo and ok_hi and not (dlo is None and dhi is None):
-                    # monotone: src ∈ [lo, hi] ⇒ target ∈ derived
-                    # interval — prune-only, Spark re-applies the
-                    # exact source filter on the survivors
-                    phys_bounds.append((target, dlo, dhi))
-            bt = self._bucketed.get(col)
-            if (
-                bt is not None and lo == hi and lo is not None
-                and _bsafe(col, lo)
-            ):
-                # bucket is not monotone: only a POINT bound derives
-                btarget, n = bt
-                b = _bucket_of(lo, n)
-                phys_bounds.append((btarget, b, b))
-        for col, vals in self._in_sets.items():
-            bt = self._bucketed.get(col)
-            if bt is not None and all(_bsafe(col, v) for v in vals):
-                btarget, n = bt
-                bucket_sets.append(
-                    (btarget, {_bucket_of(v, n) for v in vals})
-                )
-        # membership sets (physical name → sought values): derived
-        # bucket sets, pushed IN lists, and pushed equalities — used
-        # at BOTH tiers: segment-ref value-set unions close whole
-        # segments of scattered categoricals the interval fold never
-        # could, then per-file sets prune within opened segments
-        member_sets: list[tuple[str, set]] = list(bucket_sets)
-        for col, vals in self._in_sets.items():
-            member_sets.append((self.map.get(col, col), set(vals)))
-        for col, (lo, hi) in self._bounds.items():
-            if lo is not None and lo == hi:  # pushed equality
-                member_sets.append((self.map.get(col, col), {lo}))
-
-        if "files" in self.man:  # legacy flat manifest
-            entries = list(self.man["files"])
-            self.segments_opened = 1
-        else:
-            ref_units = [
-                (sk, lo, hi, None) for sk, lo, hi in phys_bounds
-            ] + [(sk, None, None, vals) for sk, vals in member_sets]
-            entries = []
-            opened = 0
-            for ref in self.man["segments"]:
-                if any(
-                    not _ref_overlaps(ref, sk, lo, hi, vs)
-                    for sk, lo, hi, vs in ref_units
-                ):
-                    continue  # proven disjoint: never opened
-                opened += 1
-                with open(os.path.join(self.table, ref["path"])) as f:
-                    entries.extend(json.load(f))
-            self.segments_opened = opened
-        for sk, lo, hi in phys_bounds:
-            entries = [e for e in entries if _overlaps(e, sk, lo, hi)]
-
-        # exact membership pruning where the manifest pins a file's
-        # values: single-valued partition files (min == max) AND
-        # recorded per-file value sets (versioned_value_index) —
-        # mirrors the native versioned_read_where; stat-less /
-        # multi-valued files stay conservative candidates, Spark
-        # re-applies the exact filter
-        from skopje_spark.sinks.versioned import _value_set_disjoint
-
-        for sk, vals in member_sets:
-            entries = [
-                e for e in entries
-                if not _value_set_disjoint(
-                    (e.get("stats") or {}).get(sk), vals
-                )
-            ]
-        return entries
-
-    def partitions(self) -> Sequence[InputPartition]:
-        # one pooled file per task — the manifest is the split index
+        if self._bounds is None:
+            self.segments_opened = 0
+            return []
+        resolved = _resolve_bounds(
+            self._bounds, self.logical, self.map,
+            table_partition_specs(self.table, version=self.version),
+        ) if self._bounds else []
+        entries, self.segments_opened, _ = _plan_read(
+            self.table, self.man, resolved
+        )
         return [
             _FilePartition(
                 table=self.table,
                 rel_path=e["path"],
                 dv_files=list(e.get("dv_files", [])),
             )
-            for e in self._resolve_entries()
+            for e in entries
         ]
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -530,11 +357,15 @@ class VersionedTableDataSource(DataSource):
     """``spark.read.format("skopje_versioned").option("path", p)``.
 
     Batch connector over a versioned table snapshot: manifest-planned
-    (schema, splits, and stats pruning all from kilobytes of driver
-    metadata), DV-aware, rename-aware, evolution-aware. Options:
-    ``path`` (table dir, required), ``versionAsOf`` (time travel),
-    ``timestampAsOf`` (epoch seconds). Result rows are identical to
-    ``versioned_read`` — driver-oracled by q_lake_source_read."""
+    (schema, splits, and stats pruning all from kilobytes of
+    metadata), DV-aware, rename-aware, evolution-aware. A scan plans
+    its pushed filters exactly as ``versioned_read_where`` plans the
+    same bounds dict (``versioned._plan_read``), and writes commit
+    through ``versioned._commit_blind_append``. Options: ``path``
+    (table dir, required), ``versionAsOf`` (time travel),
+    ``timestampAsOf`` (epoch seconds), ``ref`` (tag or branch). Result
+    rows are identical to ``versioned_read`` — driver-oracled by
+    q_lake_source_read."""
 
     @classmethod
     def name(cls) -> str:
@@ -708,9 +539,11 @@ class VersionedTableWriter(DataSourceArrowWriter):
     into ONE uniquely-named pool file (unreferenced until commit —
     a failed job leaves only vacuum-collectable orphans), the driver
     commit validates CHECK constraints and publishes the manifest
-    with a CAS retry loop (appends commute, so a lost race against
-    any concurrent commit is re-pointed at the new latest — the
-    blind-append argument of ``versioned._rebase``).
+    through the store's one blind-append CAS loop
+    (``versioned._commit_blind_append``): appends commute, so a lost
+    race against any concurrent commit is re-pointed at the new
+    latest, its segments carried by reference, unless that commit
+    changed the schema or the CHECK constraints.
 
     ``mode("append")`` adds the batch to the current snapshot;
     ``mode("overwrite")`` commits a snapshot of only the new files
@@ -932,113 +765,70 @@ class VersionedTableWriter(DataSourceArrowWriter):
             entries.append(e)
         return _PooledFile(entries=entries)
 
-    def commit(self, messages) -> None:
+    def _validate(self, entries: list[dict]) -> str | None:
+        """Enforce the table's CHECK constraints on a staged batch and
+        maintain its value index; returns the constraints marker the
+        batch was validated under, which the commit re-checks."""
         from pyspark.sql import SparkSession
 
         from skopje_spark.sinks.versioned import (
-            CommitConflict,
-            _commit_manifest,
             _enforce_constraints,
+            _maintain_value_index,
             latest_version,
             snapshot_meta,
         )
 
-        entries = [e for m in messages if m for e in (m.entries or [])]
-        base0 = latest_version(self.path)
-        enforced_marker = (
-            snapshot_meta(self.path, "constraints", version=base0)
-            if base0 is not None
-            else None
+        base = latest_version(self.path)
+        marker = (
+            None if base is None
+            else snapshot_meta(self.path, "constraints", version=base)
         )
         if entries:
             # commit runs on a driver callback thread where the active
             # session may be unset — getOrCreate rebinds the existing
             # one; constraint enforcement must never silently skip
-            from skopje_spark.sinks.versioned import _maintain_value_index
-
             spark = (
                 SparkSession.getActiveSession()
                 or SparkSession.builder.getOrCreate()
             )
             _enforce_constraints(spark, self.path, entries, self.map)
             _maintain_value_index(spark, self.path, entries)
-        op = "overwrite" if self.overwrite else "append"
-        for _ in range(16):  # appends commute: CAS retry always safe
-            base = latest_version(self.path)
-            reuse = None
-            if base is None or self.overwrite:
-                files = entries
-                schema_json = self.schema_json
-            else:
-                # segment-diff append: base segments ride by reference
-                import json as _json
+        return marker
 
-                with open(
-                    os.path.join(self.path, f"v={base}", "_MANIFEST.json")
-                ) as f:
-                    raw = _json.load(f)
-                # the rebase refusal taxonomy, applied to the retry: a
-                # concurrent schema evolution would NULL-fill our rows
-                # through a schema we never saw — refuse rather than
-                # silently absorb (versioned._rebase cond. 1)
-                if raw["schema"] != self.schema_json:
-                    raise CommitConflict(
-                        f"writer commit at {self.path} refused: concurrent "
-                        "commit changed the table schema after this "
-                        "writer was planned"
-                    )
-                schema_json = raw["schema"]
-                reuse = raw.get("segments")
-                files = (
-                    entries if reuse is not None else raw["files"] + entries
-                )
-            # a CHECK constraint added after _enforce_constraints ran
-            # never saw this batch — refuse (rebase condition 2)
-            cur_marker = (
-                snapshot_meta(self.path, "constraints", version=base)
-                if base is not None
-                else None
-            )
-            if entries and cur_marker != enforced_marker:
-                raise CommitConflict(
-                    f"writer commit at {self.path} refused: CHECK "
-                    "constraints changed after this batch was validated"
-                )
-            commit_meta = {
-                "op": op, "n_files_appended": str(len(entries)),
+    def commit(self, messages) -> None:
+        from skopje_spark.sinks.versioned import _commit_blind_append
+
+        entries = _staged_entries(messages)
+        _commit_blind_append(
+            self.path, entries,
+            {
+                "op": "overwrite" if self.overwrite else "append",
+                "n_files_appended": str(len(entries)),
                 "n_files_rewritten": "0",
-            }
-            if base is None or self.overwrite:
-                # a create/overwrite defines its own layout, exactly
-                # like versioned_write: record the declared spec (or
-                # clear a stale inherited one) and reset the epoch
-                # history — no earlier-layout file survives
-                commit_meta["partition_by"] = json.dumps(
-                    self.partition_spec
-                )
-                commit_meta["partition_specs"] = "[]"
-            try:
-                _commit_manifest(
-                    self.path, schema_json, files, commit_meta,
-                    base, 600.0,
-                    reuse_refs=reuse,
-                )
-                return
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"writer commit at {self.path} lost 16 consecutive races"
+            },
+            schema_json=self.schema_json,
+            constraints=self._validate(entries),
+            overwrite=self.overwrite,
+            layout=self.partition_spec,
         )
 
     def abort(self, messages) -> None:
         # drop this job's pooled files eagerly (vacuum would collect
         # them anyway — they are referenced by no manifest)
-        for m in messages or []:
-            for e in (m.entries if m else []) or []:
-                try:
-                    os.unlink(os.path.join(self.path, e["path"]))
-                except OSError:
-                    pass
+        _drop_staged(self.path, _staged_entries(messages))
+
+
+def _staged_entries(messages) -> list[dict]:
+    """The manifest entries every task of a write job staged."""
+    return [e for m in messages or [] if m for e in (m.entries or [])]
+
+
+def _drop_staged(path: str, entries: list[dict]) -> None:
+    for e in entries:
+        try:
+            os.unlink(os.path.join(path, e["path"]))
+        except OSError:
+            pass
 
 
 class VersionedStreamWriter(DataSourceStreamArrowWriter):
@@ -1052,8 +842,10 @@ class VersionedStreamWriter(DataSourceStreamArrowWriter):
     checkpoint advance) is recognized and its files dropped instead
     of double-appended — the same in-commit-ledger idea as
     ``versioned_stream_upsert``, surfaced through Spark's native
-    streaming sink contract. Racing commits from OTHER writers
-    resolve by the append-commute CAS retry.
+    streaming sink contract. The commit runs the batch writer's
+    validation and the store's one blind-append CAS loop
+    (``versioned._commit_blind_append``), which re-checks the ledger
+    on every try against the version it is about to commit over.
 
     Two different queries writing one table must set distinct
     ``streamId`` options (default ``"default"``) — the ledger is
@@ -1068,129 +860,45 @@ class VersionedStreamWriter(DataSourceStreamArrowWriter):
         return self._w.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        from pyspark.sql import SparkSession
-
         from skopje_spark.sinks.versioned import (
-            CommitConflict,
-            _commit_manifest,
-            _enforce_constraints,
-            _read_manifest,
+            _commit_blind_append,
             latest_version,
             snapshot_meta,
         )
 
-        entries = [e for m in messages if m for e in (m.entries or [])]
+        entries = _staged_entries(messages)
 
-        def _drop_staged() -> None:
-            for e in entries:
-                try:
-                    os.unlink(os.path.join(self.path, e["path"]))
-                except OSError:
-                    pass
-
-        base = latest_version(self.path)
-        enforced_marker = (
-            snapshot_meta(self.path, "constraints", version=base)
-            if base is not None
-            else None
-        )
-        if base is not None:
-            ledger = json.loads(
-                snapshot_meta(self.path, "stream_ledger", version=base)
-                or "{}"
+        def ledger(base: int | None) -> dict | None:
+            raw = None if base is None else snapshot_meta(
+                self.path, "stream_ledger", version=base
             )
-            last = ledger.get(self.stream_id)
-            if last is not None and int(last) >= batchId:
-                _drop_staged()  # replayed micro-batch: already landed
-                return
-        if entries:
-            from skopje_spark.sinks.versioned import _maintain_value_index
+            led = json.loads(raw or "{}")
+            if int(led.get(self.stream_id, -1)) >= batchId:
+                _drop_staged(self.path, entries)  # replay: already landed
+                return None
+            led[self.stream_id] = batchId
+            return {
+                "batch_id": str(batchId),
+                "stream_ledger": json.dumps(led, sort_keys=True),
+            }
 
-            spark = (
-                SparkSession.getActiveSession()
-                or SparkSession.builder.getOrCreate()
-            )
-            _enforce_constraints(spark, self.path, entries, self._w.map)
-            _maintain_value_index(spark, self.path, entries)
-        for _ in range(16):
-            base = latest_version(self.path)
-            reuse = None
-            if base is None:
-                files = entries
-                schema_json = self._w.schema_json
-                ledger = {}
-            else:
-                with open(
-                    os.path.join(self.path, f"v={base}", "_MANIFEST.json")
-                ) as f:
-                    raw = json.load(f)
-                # refuse to absorb a concurrent schema evolution or
-                # constraint change on retry — the rebase refusal
-                # taxonomy (see the batch writer's commit)
-                if raw["schema"] != self._w.schema_json:
-                    raise CommitConflict(
-                        f"stream writer at {self.path} refused: concurrent "
-                        "commit changed the table schema after this "
-                        "writer was planned"
-                    )
-                if entries and (
-                    snapshot_meta(self.path, "constraints", version=base)
-                    != enforced_marker
-                ):
-                    raise CommitConflict(
-                        f"stream writer at {self.path} refused: CHECK "
-                        "constraints changed after this batch was "
-                        "validated"
-                    )
-                schema_json = raw["schema"]
-                reuse = raw.get("segments")
-                files = (
-                    entries if reuse is not None else raw["files"] + entries
-                )
-                ledger = json.loads(
-                    snapshot_meta(self.path, "stream_ledger", version=base)
-                    or "{}"
-                )
-                if int(ledger.get(self.stream_id, -1)) >= batchId:
-                    _drop_staged()  # raced our own replay — already landed
-                    return
-            ledger[self.stream_id] = batchId
-            commit_meta = {
-                "op": "stream_append", "batch_id": str(batchId),
-                "stream_ledger": json.dumps(ledger, sort_keys=True),
+        if ledger(latest_version(self.path)) is None:
+            return  # checked before paying for validation
+        _commit_blind_append(
+            self.path, entries,
+            {
+                "op": "stream_append",
                 "n_files_appended": str(len(entries)),
                 "n_files_rewritten": "0",
-            }
-            if base is None:
-                # a stream that CREATES the table defines its layout,
-                # exactly like the batch writer's create branch: record
-                # the declared spec so table_partitioning() answers,
-                # hidden-target reads resolve, and later appends
-                # preserve the layout
-                commit_meta["partition_by"] = json.dumps(
-                    self._w.partition_spec
-                )
-                commit_meta["partition_specs"] = "[]"
-            try:
-                _commit_manifest(
-                    self.path, schema_json, files, commit_meta,
-                    base, 600.0,
-                    reuse_refs=reuse,
-                )
-                return
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"stream writer at {self.path} lost 16 consecutive races"
+            },
+            schema_json=self._w.schema_json,
+            constraints=self._w._validate(entries),
+            layout=self._w.partition_spec,
+            on_base=ledger,
         )
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages or []:
-            for e in (m.entries if m else []) or []:
-                try:
-                    os.unlink(os.path.join(self.path, e["path"]))
-                except OSError:
-                    pass
+        _drop_staged(self.path, _staged_entries(messages))
 
 
 class VersionedChangesStreamReader(DataSourceStreamReader):

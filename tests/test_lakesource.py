@@ -790,3 +790,75 @@ def test_cluster_for_layout_hits_file_count_floor(spark, tmp_path):
     # reading a table path resolves its committed layout
     again = cluster_for_layout(df, bp)
     assert again.rdd.getNumPartitions() >= 1
+
+
+def test_connector_plans_exactly_like_read_where(spark, lake):
+    """The connector keeps no planner of its own: for every pushed
+    filter shape it plans exactly the file set ``versioned_read_where``
+    picks for the equivalent bounds dict, on a table with an identity,
+    a hidden ``date()`` and a ``bucket()`` partition plus a value
+    index, and both reads return the same rows."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThanOrEqual,
+        In,
+        LessThanOrEqual,
+    )
+
+    from skopje_spark.sinks.versioned import (
+        _read_manifest,
+        latest_version,
+        versioned_read_where,
+        versioned_value_index,
+    )
+    from skopje_spark.sources.lakesource import VersionedTableReader
+
+    path = os.path.join(lake, "t")
+    t0 = dt.datetime(2024, 5, 1, 6, 0)
+    df = spark.createDataFrame(
+        [
+            (i, i % 100, f"s{i % 3}", t0 + dt.timedelta(hours=9 * i),
+             f"l{i % 5}")
+            for i in range(40)
+        ],
+        "id long, k long, src string, ts timestamp, lang string",
+    )
+    versioned_write(
+        df, path, partition_by=["src", "day=date(ts)", "b=bucket(4,id)"]
+    )
+    versioned_value_index(spark, path, ["lang"])
+    n_files = len(_read_manifest(path, latest_version(path))["files"])
+    lo_ts, hi_ts = t0 + dt.timedelta(days=3), t0 + dt.timedelta(days=5)
+    shapes = [  # (pushed filters, equivalent bounds dict, exact predicate)
+        ([GreaterThanOrEqual(("k",), 10), LessThanOrEqual(("k",), 20)],
+         {"k": (10, 20)}, F.col("k").between(10, 20)),
+        ([GreaterThanOrEqual(("k",), 30)], {"k": (30, None)},
+         F.col("k") >= 30),
+        ([EqualTo(("lang",), "l2")], {"lang": "l2"}, F.col("lang") == "l2"),
+        ([In(("src",), ("s0", "s2"))], {"src": ["s0", "s2"]},
+         F.col("src").isin("s0", "s2")),
+        ([In(("id",), (3, 9, 17, 33)), GreaterThanOrEqual(("id",), 5),
+          LessThanOrEqual(("id",), 20)], {"id": [9, 17]},
+         F.col("id").isin(9, 17)),
+        ([EqualTo(("id",), 13)], {"id": 13}, F.col("id") == 13),
+        ([GreaterThanOrEqual(("ts",), lo_ts), LessThanOrEqual(("ts",), hi_ts)],
+         {"ts": (lo_ts, hi_ts)}, F.col("ts").between(lo_ts, hi_ts)),
+    ]
+    for filters, bounds, pred in shapes:
+        rd = VersionedTableReader({"path": path})
+        assert list(rd.pushFilters(filters)) == filters  # all yielded back
+        planned = {os.path.basename(p.rel_path) for p in rd.partitions()}
+        native = versioned_read_where(spark, path, bounds)
+        picked = {os.path.basename(f) for f in native.inputFiles()}
+        assert planned == picked, bounds
+        assert 0 < len(planned) < n_files, bounds  # every shape prunes
+        got = (
+            spark.read.format("skopje_versioned").option("path", path)
+            .load().filter(pred)
+        )
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, native.collect())
+        ), bounds

@@ -351,6 +351,44 @@ def test_append_rebase_commutes_with_any_commit(spark, tmp_path):
     assert len(rows) == 82  # 80 base + 2 appended (k=3 duplicated verbatim)
 
 
+def test_append_rebase_carries_segments_unopened(
+    spark, tmp_path, monkeypatch
+):
+    """A guarded append that loses its CAS to a concurrent append
+    re-targets the new latest through the blind-append loop: both
+    batches land, and the latest's segments ride by reference, so no
+    manifest segment file is ever read."""
+    import builtins
+
+    import skopje_spark.sinks.versioned as V
+    from skopje_spark.sinks.versioned import snapshot_meta, versioned_append
+
+    monkeypatch.setattr(V, "_SEG_TARGET", 4)
+    path = str(tmp_path / "t")
+    _clustered(spark, path)
+    versioned_append(spark, path, _df(spark, [(1000, "theirs")]))  # v1
+    assert V._read_manifest(path, 1)["segments"]
+    seg_reads: list[str] = []
+
+    def counting_open(file, mode="r", *a, **kw):
+        name = os.path.basename(str(file))
+        if name.startswith("seg-") and name.endswith(".json") and "w" not in mode:
+            seg_reads.append(name)
+        return builtins.open(file, mode, *a, **kw)
+
+    monkeypatch.setattr(V, "open", counting_open, raising=False)
+    v = versioned_append(
+        spark, path, _df(spark, [(2000, "ours")]),
+        expected_version=0, rebase_on_conflict=True,
+    )
+    monkeypatch.undo()
+    assert seg_reads == []
+    assert v == 2 and snapshot_meta(path, "rebased_onto", version=2) == "1"
+    rows = {r["k"]: r["v"] for r in versioned_read(spark, path).collect()}
+    assert rows[1000] == "theirs" and rows[2000] == "ours"
+    assert len(rows) == 82
+
+
 def test_dv_delete_rebase_on_disjoint_delete_race(spark, tmp_path):
     """Two DV deletes racing on DIFFERENT files: the loser rebases
     metadata-only and BOTH deletes are effective in the final

@@ -1135,6 +1135,33 @@ def test_replicate_from_feed_converges_and_is_exactly_once(spark, tmp_path):
     assert int(open(cp).read()) == latest_version(src_p)
 
 
+def test_replicate_tie_break_replace_where_converges(spark, tmp_path):
+    """A replace_where(change_feed=True) commit records the delete and
+    the insert of each replaced key in the SAME commit; replication's
+    net-final reduction must elect the insert, so the replaced keys
+    keep their new values on an incremental and on a fresh replica."""
+    from skopje_spark.sinks.versioned import (
+        versioned_replace_where,
+        versioned_replicate,
+    )
+
+    src_p = str(tmp_path / "src")
+    versioned_write(_kv(spark, [(i, f"v{i}") for i in range(6)]), src_p)
+    dst_p, cp = str(tmp_path / "dst"), str(tmp_path / "cursor")
+    versioned_replicate(spark, src_p, dst_p, cp, keys=["k"])
+    versioned_replace_where(
+        spark, src_p, {"k": (2, 4)},
+        _kv(spark, [(2, "N2"), (3, "N3"), (4, "N4")]), change_feed=True,
+    )
+    want = {0: "v0", 1: "v1", 2: "N2", 3: "N3", 4: "N4", 5: "v5"}
+    versioned_replicate(spark, src_p, dst_p, cp, keys=["k"])
+    fresh_p, fresh_cp = str(tmp_path / "fresh"), str(tmp_path / "cursor2")
+    versioned_replicate(spark, src_p, fresh_p, fresh_cp, keys=["k"])
+    for p in (dst_p, fresh_p):
+        got = {r["k"]: r["v"] for r in versioned_read(spark, p).collect()}
+        assert got == want
+
+
 def test_delete_accepts_key_frame(spark, tmp_path):
     from skopje_spark.sinks.versioned import versioned_delete
 
