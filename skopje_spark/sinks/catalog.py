@@ -11,9 +11,10 @@ Nessie's insight re-expressed over this store: atomicity lives at the
 catalog pointer; tables are just storage):
 
 - a catalog is a directory of versioned KILOBYTE mappings
-  ``{table name -> (path, pinned version)}``, committed with the same
-  staged-rename + pointer-swap (or conditional-put) protocol as table
-  manifests — O(1) regardless of how much data the tables hold;
+  ``{table name -> (path, pinned version)}``, committed through the
+  table store's own publish step and lost-race loop (staged rename +
+  pointer swap or conditional put) — O(1) regardless of how much data
+  the tables hold;
 - :func:`catalog_read` / :func:`attach_catalog` serve every table AT
   ITS PINNED VERSION from ONE catalog snapshot, so a reader can never
   observe a torn multi-table state, no matter how many table commits
@@ -38,9 +39,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -101,7 +100,6 @@ def catalog_commit(
     expected_version: int | None | object = V._UNGUARDED,
     pin_tags: bool = True,
     lock_timeout_s: float = 600.0,
-    max_retries: int = 8,
 ) -> int:
     """Commit a new catalog snapshot. ``updates`` maps table names to:
 
@@ -112,12 +110,13 @@ def catalog_commit(
 
     Unmentioned tables carry forward verbatim, so a commit is always a
     COMPLETE consistent mapping — and the carried mapping is
-    RE-DERIVED from the committed latest inside the CAS retry loop
-    (the table store's ``_metadata_commit`` discipline at catalog
-    level), so two concurrent commits touching different tables both
-    land with neither's re-pin lost. Guarded mode
-    (``expected_version``) turns a lost race into a loud
-    :class:`CommitConflict` instead of a retry.
+    RE-DERIVED from the committed latest on every try of the table
+    store's lost-race loop (``versioned._retry_lost_races``), and
+    published through its one publish step (``versioned._publish``),
+    so two concurrent commits touching different tables both land with
+    neither's re-pin lost. Guarded mode (``expected_version``) refuses
+    with a loud :class:`CommitConflict` once the catalog has moved
+    past it, instead of re-deriving.
 
     ``pin_tags`` (default) retargets each pinned table's
     ``catalog-…`` tag to the pinned version AFTER the catalog commit
@@ -130,8 +129,8 @@ def catalog_commit(
     the ordering is deliberate — the reverse (tagging first) would
     un-protect the STILL-SERVED pins whenever the commit loses its
     race."""
-    last: Exception | None = None
-    for attempt in range(max_retries + 1):
+
+    def attempt():
         committed = V.latest_version(cat_path)
         if (
             expected_version is not V._UNGUARDED
@@ -175,79 +174,45 @@ def catalog_commit(
                     "— a catalog must pin servable versions"
                 )
             tables[name] = {"path": tpath, "version": tv}
-        # pin-tag work computed against the mapping actually replaced:
-        # retarget changed/new pins, release pins the new mapping no
-        # longer holds (dropped tables, moved paths)
-        retarget = [
-            (name, spec) for name, spec in tables.items()
-            if current.get(name) != spec
-        ]
-        released = [
-            (name, spec) for name, spec in current.items()
-            if name not in tables or tables[name]["path"] != spec["path"]
-        ]
         payload = json.dumps(
             {"tables": tables, "commit_ts": repr(time.time())},
             sort_keys=True,
         )
-        os.makedirs(cat_path, exist_ok=True)
-        staged = os.path.join(cat_path, f".staged-{uuid.uuid4().hex}")
-        os.makedirs(staged)
-        with open(os.path.join(staged, _CAT_NAME), "w") as f:
-            f.write(payload)
-        landed = False
-        try:
-            with V._commit_lock(cat_path, lock_timeout_s):
-                cur = V.latest_version(cat_path)
-                if cur != committed:
-                    raise V.CommitConflict(
-                        f"catalog at {cat_path} moved to version "
-                        f"{cur} during commit (derived from "
-                        f"{committed})"
-                    )
-                for v in V._versions(cat_path):
-                    if cur is None or v > cur:
-                        shutil.rmtree(os.path.join(cat_path, f"v={v}"))
-                V._gc_staged(cat_path, lock_timeout_s, keep=staged)
-                n = (cur + 1) if cur is not None else 0
-                os.replace(staged, os.path.join(cat_path, f"v={n}"))
-                V.POINTER_STORE.swap_pointer(cat_path, n)
-            landed = True
-        except V.CommitConflict as e:
-            if expected_version is not V._UNGUARDED:
-                raise
-            last = e
-            time.sleep(0.05 * (2**attempt))
-            continue
-        finally:
-            # any exit where the commit did not land — conflict, lock
-            # contention, OR a non-conflict failure inside the critical
-            # section (pointer-store I/O) — must not leak the staged
-            # dir; after a landed os.replace the path no longer exists
-            # and this is a no-op (mirrors _commit_manifest's handling)
-            if not landed:
-                shutil.rmtree(staged, ignore_errors=True)
-        # committed: now (and only now) maintain the vacuum pins
-        if pin_tags:
-            for name, spec in retarget:
+
+        def write(staged: str) -> None:
+            os.makedirs(staged)
+            with open(os.path.join(staged, _CAT_NAME), "w") as f:
+                f.write(payload)
+
+        n = V._publish(cat_path, write, committed, lock_timeout_s)
+        return n, current, tables
+
+    n, current, tables = V._retry_lost_races(
+        attempt, f"catalog commit at {cat_path}"
+    )
+    # committed: now (and only now) maintain the vacuum pins against
+    # the mapping actually replaced — retarget changed/new pins,
+    # release pins the new mapping no longer holds (dropped tables,
+    # moved paths)
+    if pin_tags:
+        for name, spec in tables.items():
+            if current.get(name) != spec:
                 V.versioned_tag(
                     spec["path"], _cat_tag(cat_path, name),
                     version=spec["version"],
                     replace=True, lock_timeout_s=lock_timeout_s,
                 )
-            for name, spec in released:
-                try:
-                    V.versioned_drop_ref(
-                        spec["path"], _cat_tag(cat_path, name),
-                        lock_timeout_s=lock_timeout_s,
-                    )
-                except (KeyError, FileNotFoundError):
-                    pass  # never pinned, or the table itself is gone
-        return n
-    raise V.CommitConflict(
-        f"catalog commit at {cat_path} lost {max_retries + 1} races; "
-        f"last: {last}"
-    )
+        for name, spec in current.items():
+            if name in tables and tables[name]["path"] == spec["path"]:
+                continue
+            try:
+                V.versioned_drop_ref(
+                    spec["path"], _cat_tag(cat_path, name),
+                    lock_timeout_s=lock_timeout_s,
+                )
+            except (KeyError, FileNotFoundError):
+                pass  # never pinned, or the table itself is gone
+    return n
 
 
 def catalog_read(

@@ -103,11 +103,50 @@ def _freshen(path: str) -> None:
         pass
 
 
+def _link_pool_files(
+    src: str, dst: str, entries: list[dict], owner: str, verdict: str
+) -> None:
+    """Hard-link every data and DV pool file ``entries`` reference
+    from table ``src`` into table ``dst``'s pool — a real copy when
+    the link fails (cross-device) — skipping names ``dst`` already
+    holds (pool names are uuid-unique and immutable). Each new pool
+    entry is freshened: a link carries the source file's old mtime,
+    and vacuum's age gate would otherwise unlink the unreferenced
+    "old" file before the caller's commit references it. A file the
+    source already vacuumed raises FileNotFoundError("<owner>
+    references vacuumed file <rel>; <verdict>")."""
+    for e in entries:
+        for rel in [e["path"], *e.get("dv_files", [])]:
+            dst_f = os.path.join(dst, rel)
+            if os.path.exists(dst_f):
+                continue
+            src_f = os.path.join(src, rel)
+            os.makedirs(os.path.dirname(dst_f), exist_ok=True)
+            try:
+                os.link(src_f, dst_f)
+            except FileNotFoundError:
+                raise FileNotFoundError(
+                    f"{owner} references vacuumed file {rel}; {verdict}"
+                )
+            except OSError:
+                shutil.copy(src_f, dst_f)
+            _freshen(dst_f)
+
+
 class CommitConflict(RuntimeError):
-    """An optimistic commit lost its race: the table advanced past the
-    writer's base version, or another writer holds the commit lock.
-    Recoverable — re-read the new latest, re-derive the change, retry
-    (:func:`versioned_merge_concurrent` does exactly that)."""
+    """An optimistic commit did not land: it lost its race
+    (:class:`LostRace`), or a check against the new latest refused it
+    (a changed schema or CHECK marker, a touched or possibly
+    overlapping file). Recoverable — re-read the new latest, re-derive
+    the change, retry (:func:`versioned_merge_concurrent` does exactly
+    that)."""
+
+
+class LostRace(CommitConflict):
+    """The publish step (:func:`_publish`) lost a race: the table
+    advanced past the writer's expected version, another writer holds
+    the commit lock, or the pointer store's conditional put was
+    refused. The only conflict :func:`_retry_lost_races` retries."""
 
 
 class ConstraintViolation(RuntimeError):
@@ -173,7 +212,7 @@ class LogPointerStore(PosixPointerStore):
       — the filesystem spelling of HTTP ``If-None-Match: *``).
       Exactly ONE writer can create it, so the store itself
       arbitrates a commit race: the loser gets a loud
-      :class:`CommitConflict`, never last-write-wins — strictly
+      :class:`LostRace`, never last-write-wins — strictly
       stronger than the POSIX backend's ``os.replace``.
     - RESOLUTION (:meth:`read_pointer`) never trusts a directory
       listing: it reads a monotonic ``_HINT`` object (best-effort,
@@ -221,7 +260,7 @@ class LogPointerStore(PosixPointerStore):
                 os.O_CREAT | os.O_EXCL | os.O_WRONLY,
             )
         except FileExistsError:
-            raise CommitConflict(
+            raise LostRace(
                 f"version {version} at {path} was committed by another "
                 "writer (conditional put refused)"
             )
@@ -263,14 +302,14 @@ _UNGUARDED = object()  # sentinel: expected_version not supplied
 
 @contextmanager
 def _commit_lock(path: str, timeout_s: float):
-    """Short mutual-exclusion window for the O(1) commit step of
-    guarded writes. Acquired via O_EXCL file create (atomic on POSIX,
-    works across processes AND threads); a lock older than
-    ``timeout_s`` is presumed abandoned by a crashed writer and stolen
-    once. Contention raises :class:`CommitConflict` immediately — the
-    caller's retry loop, not a blocking wait, resolves races (data is
-    staged before the lock, so the critical section is metadata-only
-    and contention windows are milliseconds)."""
+    """The mutual-exclusion window of :func:`_publish`, the one step
+    every commit publishes through. Acquired via O_EXCL file create
+    (atomic on POSIX, works across processes AND threads); a lock
+    older than ``timeout_s`` is presumed abandoned by a crashed writer
+    and stolen once. Contention raises :class:`LostRace` immediately —
+    :func:`_retry_lost_races`, not a blocking wait, resolves races
+    (every manifest is staged before the lock, so the critical section
+    is a few renames and contention windows are milliseconds)."""
     lock = os.path.join(path, "_COMMIT_LOCK")
     for attempt in (0, 1):
         try:
@@ -290,10 +329,12 @@ def _commit_lock(path: str, timeout_s: float):
                 except FileNotFoundError:
                     pass
                 continue
-            raise CommitConflict(
+            raise LostRace(
                 f"another commit holds the lock at {path} "
                 f"(held {age:.1f}s; presumed live under {timeout_s}s)"
             )
+    else:  # both creates lost to writers that came and went: not ours
+        raise LostRace(f"another commit holds the lock at {path}")
     try:
         yield
     finally:
@@ -304,9 +345,9 @@ def _commit_lock(path: str, timeout_s: float):
 
 
 def _gc_staged(path: str, timeout_s: float, keep: str) -> None:
-    """Remove staged snapshot directories abandoned by crashed guarded
-    writers (older than ``timeout_s``), sparing ``keep`` (ours).
-    Runs under the commit lock."""
+    """Remove staged snapshot directories abandoned by crashed writers
+    (older than ``timeout_s``), sparing ``keep`` (ours). Runs under
+    the commit lock."""
     for d in os.listdir(path):
         full = os.path.join(path, d)
         if not d.startswith(".staged-") or full == keep:
@@ -316,6 +357,81 @@ def _gc_staged(path: str, timeout_s: float, keep: str) -> None:
                 shutil.rmtree(full, ignore_errors=True)
         except FileNotFoundError:
             pass
+
+
+def _publish(path: str, write, expected_version, lock_timeout_s: float) -> int:
+    """THE publish step of every commit — table manifests
+    (:func:`_commit_manifest`) and catalog mappings alike. ``write``
+    fills a fresh ``.staged-*`` directory OUTSIDE the lock; then, under
+    :func:`_commit_lock`: check the committed version equals
+    ``expected_version`` (guarded mode only; :data:`_UNGUARDED` skips
+    it), sweep uncommitted ``v=*`` residue above the pointer (a writer
+    that died between rename and pointer swap — every residue when no
+    pointer exists yet, so numbering restarts cleanly), drop staged
+    dirs abandoned by crashed writers, rename ours to ``v=N`` and swap
+    the pointer. Returns N.
+
+    A lost race raises :class:`LostRace`: the version moved, the lock
+    is held, or the pointer store refused its conditional put. Any
+    exit where the commit did not land removes the staged directory.
+    Sweep and rename run under the lock because an unlocked sweep
+    racing another writer's rename-then-swap would delete its
+    committed-in-flight snapshot; so an accidental mix of guarded and
+    unguarded writers on one table fails loudly, never silently."""
+    os.makedirs(path, exist_ok=True)
+    staged = os.path.join(path, f".staged-{uuid.uuid4().hex}")
+    landed = False
+    try:
+        write(staged)
+        with _commit_lock(path, lock_timeout_s):
+            current = latest_version(path)
+            if expected_version is not _UNGUARDED and (
+                current != expected_version
+            ):
+                raise LostRace(
+                    f"table at {path} is at version {current}, "
+                    f"writer expected {expected_version}"
+                )
+            for v in _versions(path):
+                if current is None or v > current:
+                    shutil.rmtree(os.path.join(path, f"v={v}"))
+            _gc_staged(path, lock_timeout_s, keep=staged)
+            n = (current + 1) if current is not None else 0
+            os.replace(staged, os.path.join(path, f"v={n}"))
+            POINTER_STORE.swap_pointer(path, n)
+            landed = True
+            return n
+    finally:
+        if not landed:
+            shutil.rmtree(staged, ignore_errors=True)
+
+
+_COMMIT_TRIES = 9  # publish attempts of a commit that re-targets the latest
+_BACKOFF_S, _BACKOFF_CAP_S = 0.05, 1.0  # sleep after try i: min(cap, b·2^i)
+
+
+def _retry_lost_races(attempt, what: str):
+    """THE lost-race retry loop of every commit that re-targets the
+    current latest: ``attempt()`` reads the latest, derives the commit
+    against it and publishes (:func:`_publish`); a :class:`LostRace`
+    sleeps a capped exponential backoff and tries again, up to
+    :data:`_COMMIT_TRIES` tries. Refusals — plain
+    :class:`CommitConflict`, :class:`MergeConflict`, any other error —
+    propagate at once. Running out of tries raises a plain
+    CommitConflict, so an enclosing re-derive loop
+    (:func:`versioned_merge_concurrent`) re-derives instead of
+    nesting a second round of retries."""
+    last: LostRace | None = None
+    for i in range(_COMMIT_TRIES):
+        try:
+            return attempt()
+        except LostRace as e:
+            last = e
+            if i + 1 < _COMMIT_TRIES:
+                time.sleep(min(_BACKOFF_CAP_S, _BACKOFF_S * 2**i))
+    raise CommitConflict(
+        f"{what} lost {_COMMIT_TRIES} consecutive races; last: {last}"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1229,7 +1345,6 @@ def versioned_refold_refs(
     *,
     meta: dict[str, str] | None = None,
     lock_timeout_s: float = 600.0,
-    max_retries: int = 8,
 ) -> int:
     """Metadata-only maintenance: re-derive every segment ref's
     aggregate fields (interval fold, value-set unions, bloom unions,
@@ -1244,11 +1359,11 @@ def versioned_refold_refs(
     legacy segment per call and membership pruning falls back to
     intervals — until some rewrite happens to touch the segment. One
     refold upgrades the whole table in one O(segments + entries)
-    driver JSON pass and one CAS commit; the change feed and CDF
-    stream skip the commit (zero logical changes, op
-    ``refold_refs``)."""
-    last: CommitConflict | None = None
-    for attempt in range(max_retries + 1):
+    driver JSON pass and one CAS commit (re-derived on a lost race,
+    :func:`_retry_lost_races`); the change feed and CDF stream skip
+    the commit (zero logical changes, op ``refold_refs``)."""
+
+    def attempt() -> int:
         committed = latest_version(path)
         if committed is None:
             raise FileNotFoundError(f"no committed version at {path}")
@@ -1277,17 +1392,12 @@ def versioned_refold_refs(
             "n_files_rewritten": "0",
         }
         commit_meta.update(meta or {})
-        try:
-            return _commit_manifest(
-                path, raw["schema"], [], commit_meta,
-                committed, lock_timeout_s, reuse_refs=new_refs,
-            )
-        except CommitConflict as e:
-            last = e
-            time.sleep(0.05 * (2**attempt))
-    raise CommitConflict(
-        f"refold at {path} lost {max_retries + 1} races; last: {last}"
-    )
+        return _commit_manifest(
+            path, raw["schema"], [], commit_meta,
+            committed, lock_timeout_s, reuse_refs=new_refs,
+        )
+
+    return _retry_lost_races(attempt, f"refold at {path}")
 
 
 def _write_manifest_dir(
@@ -1465,105 +1575,64 @@ def _commit_manifest(
     lock_timeout_s: float,
     reuse_refs: list[dict] | None = None,
 ) -> int:
-    """Publish (schema, files) as the next version. The manifest is
-    kilobytes — staging + rename + pointer swap are all O(1) in table
-    size; data files were already pooled by the caller. Guarded mode
-    (``expected_version`` given) compare-and-swaps on the committed
-    version under the commit lock, exactly the pre-manifest protocol:
-    the critical section stays metadata-only.
+    """Publish (schema, files) as the next version through
+    :func:`_publish`: the manifest (kilobytes; data files were already
+    pooled by the caller) is staged outside the lock, so the locked
+    step is O(1) in table size. Guarded mode (``expected_version``
+    given) compare-and-swaps on the committed version and raises
+    :class:`LostRace` when it moved; unguarded mode
+    (:data:`_UNGUARDED`) publishes on whatever is latest — the
+    single-writer contract.
 
     Every commit records a ``commit_ts`` marker (epoch seconds, the
     writer's clock) for timestamp time travel
     (:func:`version_as_of_timestamp`). Caller-supplied markers win on
     collision (tests pin clocks that way).
 
-    The ``constraints`` marker is a TABLE property, not a commit fact:
-    when the caller doesn't set it, the current latest's marker is
-    carried forward verbatim, so CHECK constraints persist across
-    every commit until :func:`drop_check_constraint` rewrites them."""
+    TABLE properties (not commit facts) — CHECK constraints, the
+    streaming-writer batch ledger, layout, ledgers, indexes, refs,
+    codec — carry forward verbatim from the base (``expected_version``,
+    else the current latest, resolved once) until a commit sets them,
+    so e.g. CHECK constraints persist across every commit until
+    :func:`drop_check_constraint` rewrites them."""
     meta = {"commit_ts": repr(time.time()), **(meta or {})}
-    # TABLE properties (not commit facts) carry forward verbatim until
-    # a commit explicitly rewrites them: CHECK constraints and the
-    # streaming-writer batch ledger
-    for prop in ("constraints", "stream_ledger", "column_stats",
-                 "partition_by", "retired_physicals", "partition_specs",
-                 "value_index", "refs", "parquet_codec"):
-        if prop in meta:
-            continue
-        base = (
-            expected_version
-            if isinstance(expected_version, int)
-            else latest_version(path)
-        )
-        if base is not None:
-            inherited = snapshot_meta(path, prop, version=base)
-            if inherited is not None:
-                meta[prop] = inherited
-    os.makedirs(path, exist_ok=True)
-    if expected_version is not _UNGUARDED:
-        staged = os.path.join(path, f".staged-{uuid.uuid4().hex}")
-        _write_manifest_dir(staged, schema_json, entries, meta, reuse_refs)
-        try:
-            with _commit_lock(path, lock_timeout_s):
-                current = latest_version(path)
-                if current != expected_version:
-                    raise CommitConflict(
-                        f"table at {path} is at version {current}, "
-                        f"writer expected {expected_version}"
-                    )
-                for v in _versions(path):
-                    if current is None or v > current:
-                        shutil.rmtree(os.path.join(path, f"v={v}"))
-                _gc_staged(path, lock_timeout_s, keep=staged)
-                n = (current + 1) if current is not None else 0
-                os.replace(staged, os.path.join(path, f"v={n}"))
-                POINTER_STORE.swap_pointer(path, n)
-                return n
-        except CommitConflict:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise
-    # crash residue: a writer that died between manifest write and
-    # pointer swap leaves UNCOMMITTED v=* directories (readers never
-    # see them — they follow the pointer). Clear EVERY residue above
-    # the pointer — including all of them when no pointer exists yet —
-    # so numbering restarts cleanly. The sweep + publish runs UNDER
-    # the commit lock: a guarded writer renames its staged dir to
-    # ``v=N`` moments before its pointer swap, and an unlocked sweep
-    # racing that window would rmtree the committed-in-flight
-    # snapshot. Single-writer discipline is still the unguarded
-    # path's documented contract — the lock turns an accidental mix
-    # of guarded and unguarded writers from silent data loss into, at
-    # worst, a loud CommitConflict.
-    with _commit_lock(path, lock_timeout_s):
-        current = latest_version(path)
-        for v in _versions(path):
-            if current is None or v > current:
-                shutil.rmtree(os.path.join(path, f"v={v}"))
-        n = (current + 1) if current is not None else 0
-        _write_manifest_dir(
-            os.path.join(path, f"v={n}"), schema_json, entries, meta,
-            reuse_refs,
-        )
-        POINTER_STORE.swap_pointer(path, n)
-        return n
+    base = (
+        expected_version
+        if isinstance(expected_version, int)
+        else latest_version(path)
+    )
+    if base is not None:
+        for prop in ("constraints", "stream_ledger", "column_stats",
+                     "partition_by", "retired_physicals", "partition_specs",
+                     "value_index", "refs", "parquet_codec"):
+            if prop not in meta:
+                inherited = snapshot_meta(path, prop, version=base)
+                if inherited is not None:
+                    meta[prop] = inherited
+    return _publish(
+        path,
+        lambda staged: _write_manifest_dir(
+            staged, schema_json, entries, meta, reuse_refs
+        ),
+        expected_version, lock_timeout_s,
+    )
 
 
-def _metadata_commit(path: str, derive, *, lock_timeout_s: float,
-                     max_retries: int = 8) -> int:
+def _metadata_commit(path: str, derive, *, lock_timeout_s: float) -> int:
     """Commit a METADATA-ONLY table change (CHECK constraints, column
-    rename, ANALYZE statistics) guarded by compare-and-swap on the
-    CURRENT latest. The carried data entries are re-derived from the
-    latest manifest INSIDE the retry loop, so a racing data commit can
-    never be reverted — its files ride into the metadata commit by
-    reference (the round-9 hazard: an unguarded ANALYZE racing one
-    ingest commit silently re-pointed the table at the stale file
-    set). ``derive(committed, raw_manifest) -> (schema_json,
-    commit_meta)`` re-runs per retry, so existence/collision checks
-    always hold against the manifest actually carried. These are
+    rename, ANALYZE statistics, refs) guarded by compare-and-swap on
+    the CURRENT latest, through :func:`_retry_lost_races`. The carried
+    data entries are re-derived from the latest manifest on every try,
+    so a racing data commit can never be reverted — its files ride
+    into the metadata commit by reference (the round-9 hazard: an
+    unguarded ANALYZE racing one ingest commit silently re-pointed the
+    table at the stale file set). ``derive(committed, raw_manifest) ->
+    (schema_json, commit_meta)`` re-runs per try, so existence/collision
+    checks always hold against the manifest actually carried. These are
     kilobyte commits — segments ride by reference — so a lost race
     costs one pointer read plus one CAS, never an O(table) re-walk."""
-    last: CommitConflict | None = None
-    for attempt in range(max_retries + 1):
+
+    def attempt() -> int:
         committed = latest_version(path)
         if committed is None:
             raise FileNotFoundError(f"no committed version at {path}")
@@ -1572,18 +1641,12 @@ def _metadata_commit(path: str, derive, *, lock_timeout_s: float,
         schema_json, commit_meta = derive(committed, raw)
         reuse = raw.get("segments")
         entries = [] if reuse is not None else raw["files"]
-        try:
-            return _commit_manifest(
-                path, schema_json, entries, commit_meta,
-                committed, lock_timeout_s, reuse_refs=reuse,
-            )
-        except CommitConflict as e:
-            last = e
-            time.sleep(0.05 * (2**attempt))
-    raise CommitConflict(
-        f"metadata commit at {path} lost {max_retries + 1} races; "
-        f"last: {last}"
-    )
+        return _commit_manifest(
+            path, schema_json, entries, commit_meta,
+            committed, lock_timeout_s, reuse_refs=reuse,
+        )
+
+    return _retry_lost_races(attempt, f"metadata commit at {path}")
 
 
 def versioned_write(
@@ -2865,7 +2928,6 @@ def versioned_value_index(
     bloom_k: int = 5,
     meta: dict[str, str] | None = None,
     lock_timeout_s: float = 600.0,
-    max_retries: int = 8,
 ) -> int:
     """Record per-file EXACT VALUE SETS for low-cardinality columns —
     parquet dictionary skipping elevated to the manifest (the shape of
@@ -2893,7 +2955,8 @@ def versioned_value_index(
     manifest rewrite (O(manifest), zero data IO). The collected sets
     are ≤``max_distinct`` values per file per column — a bounded
     driver artifact. The commit is a guarded CAS re-derived from the
-    latest manifest per retry, so racing ingest commits are carried
+    latest manifest on every lost race (:func:`_retry_lost_races`), so
+    racing ingest commits are carried
     (their new files simply stay un-indexed). Column types are
     restricted to the partitionable set (ints/strings/bools/dates) —
     floats and timestamps make poor equality keys.
@@ -2967,8 +3030,8 @@ def versioned_value_index(
         spark, paths, [mapping.get(c, c) for c in bloom_cols],
         bloom_bits, bloom_k, read_schema=phys_schema,
     )
-    last: CommitConflict | None = None
-    for attempt in range(max_retries + 1):
+
+    def attempt() -> int:
         base = latest_version(path)
         man = _read_manifest(path, base)
         entries = []
@@ -3026,17 +3089,12 @@ def versioned_value_index(
             "value_index": json.dumps(vindex),
         }
         commit_meta.update(meta or {})
-        try:
-            return _commit_manifest(
-                path, man["schema"], entries, commit_meta,
-                base, lock_timeout_s,
-            )
-        except CommitConflict as e2:
-            last = e2
-            time.sleep(0.05 * (2**attempt))
-    raise CommitConflict(
-        f"value index at {path} lost {max_retries + 1} races; last: {last}"
-    )
+        return _commit_manifest(
+            path, man["schema"], entries, commit_meta,
+            base, lock_timeout_s,
+        )
+
+    return _retry_lost_races(attempt, f"value index at {path}")
 
 
 def _manifest_summary(path: str, version: int) -> tuple[int, int, int, int]:
@@ -3745,9 +3803,6 @@ def _extend_dvs(
     return out
 
 
-_APPEND_TRIES = 16  # lost CAS races a blind append retries before giving up
-
-
 def _commit_blind_append(
     path: str,
     entries: list[dict],
@@ -3760,12 +3815,12 @@ def _commit_blind_append(
     on_base=None,
     lock_timeout_s: float = 600.0,
 ) -> int | None:
-    """THE commit loop of every blind append whose data files are
-    already staged: the connector's batch writer (append or
-    overwrite), its stream writer, and a guarded
-    :func:`versioned_append` that lost its first CAS race. An append
-    reads nothing, so it commutes with every concurrent data commit,
-    and each try re-targets the CURRENT latest L:
+    """THE commit of every blind append whose data files are already
+    staged: the connector's batch writer (append or overwrite), its
+    stream writer, and a guarded :func:`versioned_append` that lost its
+    first CAS race. An append reads nothing, so it commutes with every
+    concurrent data commit, and each try of :func:`_retry_lost_races`
+    re-targets the CURRENT latest L:
 
     1. refuses when L's schema is not ``schema_json`` (a concurrent
        rename/evolution would read the batch through a schema it was
@@ -3776,14 +3831,15 @@ def _commit_blind_append(
        entries re-chunk once) — or nothing for a create (no L) or an
        ``overwrite``, which also record ``layout`` as the table's
        partition spec and reset its epoch history;
-    3. CASes on L, and on a lost race tries again.
+    3. CASes on L.
 
     A try costs one kilobyte top-level manifest read and one CAS; no
     segment file is opened. ``on_base(L)`` (L is None for a create)
     returns extra commit markers, or None to stop without committing
     (the stream writer's ledger finds the batch already landed).
     Returns the committed version, or None when ``on_base`` stopped."""
-    for _ in range(_APPEND_TRIES):
+
+    def attempt() -> int | None:
         base = latest_version(path)
         reuse, files = None, entries
         if base is not None and not overwrite:
@@ -3818,16 +3874,12 @@ def _commit_blind_append(
             if extra is None:
                 return None
             meta.update(extra)
-        try:
-            return _commit_manifest(
-                path, schema_json, files, meta, base, lock_timeout_s,
-                reuse_refs=reuse,
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"append at {path} lost {_APPEND_TRIES} consecutive races"
-    )
+        return _commit_manifest(
+            path, schema_json, files, meta, base, lock_timeout_s,
+            reuse_refs=reuse,
+        )
+
+    return _retry_lost_races(attempt, f"append at {path}")
 
 
 def _rebase(
@@ -3842,7 +3894,6 @@ def _rebase(
     schema_json: dict,
     commit_meta: dict,
     lock_timeout_s: float,
-    max_rebases: int = 5,
 ) -> int:
     """Resolve a LOST COMMIT RACE without re-deriving the commit —
     Delta-style logical conflict detection. The staged commit (data
@@ -3875,7 +3926,9 @@ def _rebase(
     files carried from L keep whatever a concurrent writer gave them.
     Recorded change-feed files stay valid for the same reason.
     Refusals raise :class:`CommitConflict`; the caller's OCC loop
-    falls back to a full re-derive.
+    falls back to a full re-derive. A rebase that itself loses the
+    publish race re-checks against the newer latest
+    (:func:`_retry_lost_races`).
 
     Cost per lost race: no Spark job and no data rewrite, but O(table
     manifest) driver work — the base and every latest L are read in
@@ -3885,8 +3938,8 @@ def _rebase(
     base_man = _read_manifest(path, base_v)
     base_paths = {e["path"] for e in base_man["files"]}
     base_constraints = snapshot_meta(path, "constraints", version=base_v)
-    last: CommitConflict | None = None
-    for _ in range(max_rebases):
+
+    def attempt() -> int:
         latest = latest_version(path)
         if latest is None:
             raise CommitConflict(
@@ -3939,16 +3992,12 @@ def _rebase(
         meta2["n_files_carried"] = str(len(carried))
         meta2["rebased_onto"] = str(latest)
         meta2["n_rebased_over"] = str(latest - base_v)
-        try:
-            return _commit_manifest(
-                path, schema_json, carried + new_entries, meta2, latest,
-                lock_timeout_s,
-            )
-        except CommitConflict as e:  # raced again — re-check against newer L
-            last = e
-    raise CommitConflict(
-        f"rebase at {path} lost {max_rebases} further races; last: {last}"
-    )
+        return _commit_manifest(
+            path, schema_json, carried + new_entries, meta2, latest,
+            lock_timeout_s,
+        )
+
+    return _retry_lost_races(attempt, f"rebase at {path}")
 
 
 def versioned_upsert(
@@ -4129,7 +4178,7 @@ def versioned_upsert(
             lock_timeout_s,
             reuse_refs=closed_refs,
         )
-    except CommitConflict:
+    except LostRace:
         if not rebase_on_conflict or not isinstance(expected_version, int):
             raise
         cand_paths = {e["path"] for e in cand}
@@ -4336,7 +4385,7 @@ def versioned_merge(
             lock_timeout_s,
             reuse_refs=closed_refs,
         )
-    except CommitConflict:
+    except LostRace:
         if not rebase_on_conflict or not isinstance(expected_version, int):
             raise
         cand_paths = {e["path"] for e in cand}
@@ -4363,7 +4412,7 @@ def versioned_merge_concurrent(
     """MERGE safe under CONCURRENT writers: read the latest snapshot
     (pinned by version), derive merged = (rows not matching an update
     key) ∪ updates, and commit with compare-and-swap on that base
-    version. A lost race (:class:`CommitConflict`) always first
+    version. A lost race (:class:`LostRace`) always first
     attempts a METADATA-ONLY rebase onto the new latest
     (:func:`_rebase`): when the intervening commits provably
     don't conflict — the common case for writers on disjoint key
@@ -4476,7 +4525,7 @@ def versioned_append(
             lock_timeout_s,
             reuse_refs=closed_refs,
         )
-    except CommitConflict:
+    except LostRace:
         if not rebase_on_conflict or not isinstance(expected_version, int):
             raise
         # an append commutes with every concurrent data commit: re-target
@@ -5043,7 +5092,7 @@ def versioned_delete(
             lock_timeout_s,
             reuse_refs=closed_refs,
         )
-    except CommitConflict:
+    except LostRace:
         # entry drops cannot be replayed by the DV rebase (it only
         # extends vectors over the latest's entries) — refuse so the
         # OCC loop re-derives instead of resurrecting dropped files
@@ -5417,7 +5466,6 @@ def versioned_restore(
     validate: bool = True,
     meta: dict[str, str] | None = None,
     lock_timeout_s: float = 600.0,
-    max_retries: int = 8,
 ) -> int:
     """RESTORE: re-commit an earlier snapshot's manifest as the new
     latest (Delta's RESTORE TABLE ... VERSION AS OF). Pure metadata —
@@ -5428,7 +5476,8 @@ def versioned_restore(
     restored one — still lists.
 
     The commit is a guarded CAS on the current latest, retried on a
-    lost race, so a restore can never silently clobber a concurrent
+    lost race (:func:`_retry_lost_races`), so a restore can never
+    silently clobber a concurrent
     data commit (it serializes after it — restore then wins, which is
     what "roll the table back" means, but the race is now explicit in
     history instead of the racing commit's files vanishing).
@@ -5453,8 +5502,8 @@ def versioned_restore(
     reuse = raw.get("segments")
     entries = [] if reuse is not None else raw["files"]
     validated: set[str] = set()
-    last: CommitConflict | None = None
-    for attempt in range(max_retries + 1):
+
+    def attempt() -> int:
         base = latest_version(path)
         cons = table_constraints(path, version=base)
         marker = json.dumps(cons, sort_keys=True)
@@ -5493,17 +5542,12 @@ def versioned_restore(
             ) or "[]",
         }
         commit_meta.update(meta or {})
-        try:
-            return _commit_manifest(
-                path, raw["schema"], entries, commit_meta,
-                base, lock_timeout_s, reuse_refs=reuse,
-            )
-        except CommitConflict as e:
-            last = e
-            time.sleep(0.05 * (2**attempt))
-    raise CommitConflict(
-        f"restore at {path} lost {max_retries + 1} races; last: {last}"
-    )
+        return _commit_manifest(
+            path, raw["schema"], entries, commit_meta,
+            base, lock_timeout_s, reuse_refs=reuse,
+        )
+
+    return _retry_lost_races(attempt, f"restore at {path}")
 
 
 def versioned_clone(
@@ -5565,61 +5609,25 @@ def versioned_clone(
             f"clone target {dst_path} already holds a committed table"
         )
     man = _read_manifest(src_path, v)
-    for e in man["files"]:
-        for rel in [e["path"], *e.get("dv_files", [])]:
-            src_f = os.path.join(src_path, rel)
-            dst_f = os.path.join(dst_path, rel)
-            os.makedirs(os.path.dirname(dst_f), exist_ok=True)
-            if os.path.exists(dst_f):
-                continue
-            try:
-                os.link(src_f, dst_f)
-            except FileNotFoundError:
-                raise FileNotFoundError(
-                    f"snapshot v={v} at {src_path} references vacuumed "
-                    f"file {rel}; clone a retained version"
-                )
-            except OSError:
-                shutil.copy(src_f, dst_f)
-            # same vacuum-age hazard as versioned_publish: linked pool
-            # entries inherit the SOURCE file's old mtime, so a vacuum
-            # on the (not-yet-committed) clone target would age-qualify
-            # them instantly — freshen so the age gate means what it says
-            _freshen(dst_f)
+    _link_pool_files(
+        src_path, dst_path, man["files"],
+        f"snapshot v={v} at {src_path}", "clone a retained version",
+    )
     commit_meta = {
         "op": "clone",
         "source_path": src_path,
         "source_version": str(v),
     }
     # table properties transfer with the snapshot: the clone enforces
-    # the CHECK constraints that governed the cloned version and keeps
-    # its partition layout claim truthful
-    src_cons = snapshot_meta(src_path, "constraints", version=v)
-    if src_cons is not None:
-        commit_meta["constraints"] = src_cons
-    src_part = snapshot_meta(src_path, "partition_by", version=v)
-    if src_part is not None:
-        commit_meta["partition_by"] = src_part
-    src_hist = snapshot_meta(src_path, "partition_specs", version=v)
-    if src_hist is not None:
-        commit_meta["partition_specs"] = src_hist
-    # the retired-physicals ledger guards the clone's pool files too:
-    # they are hard links to pre-drop bytes, so re-adding a dropped
-    # column at the clone without the ledger would resurrect them
-    src_retired = snapshot_meta(src_path, "retired_physicals", version=v)
-    if src_retired is not None:
-        commit_meta["retired_physicals"] = src_retired
-    # the value-index maintenance config is pure per-table policy
-    # (physical cols + geometry, no version references), and the cloned
-    # entries already carry their sets/blooms — transferring it keeps
-    # writes on the clone (branches especially) maintaining the index
-    src_vindex = snapshot_meta(src_path, "value_index", version=v)
-    if src_vindex is not None:
-        commit_meta["value_index"] = src_vindex
-    # the codec is per-table storage policy; a clone's own writes keep it
-    src_codec = snapshot_meta(src_path, "parquet_codec", version=v)
-    if src_codec is not None:
-        commit_meta["parquet_codec"] = src_codec
+    # the CHECK constraints that governed the cloned version, keeps its
+    # layout claim truthful, keeps the retired-physicals ledger (its
+    # pool files are hard links to pre-drop bytes, which re-adding a
+    # dropped column would resurrect), and keeps maintaining the value
+    # index in the clone's own codec — all pure per-table policy
+    for prop in _MERGE_PROPS:
+        val = snapshot_meta(src_path, prop, version=v)
+        if val is not None:
+            commit_meta[prop] = val
     commit_meta.update(meta or {})
     # pass expected_version=None to turn the pre-flight emptiness check
     # into an atomic create (two racing cloners: one commits, the
@@ -6026,30 +6034,10 @@ def versioned_publish(
             f"branch {name!r} at {path} has no committed version"
         )
     man = _read_manifest(bdir, bv)
-    for e in man["files"]:
-        for rel in [e["path"], *e.get("dv_files", [])]:
-            dst_f = os.path.join(path, rel)
-            if os.path.exists(dst_f):
-                continue  # shared since the fork, or linked by a retry
-            src_f = os.path.join(bdir, rel)
-            os.makedirs(os.path.dirname(dst_f), exist_ok=True)
-            try:
-                os.link(src_f, dst_f)
-            except FileNotFoundError:
-                raise FileNotFoundError(
-                    f"branch {name!r} references vacuumed file {rel}; "
-                    "the branch is unpublishable"
-                )
-            except OSError:
-                shutil.copy(src_f, dst_f)
-            # os.link (and copy2) preserve the BRANCH file's mtime — in
-            # write-audit-publish that is hours old, so vacuum's
-            # min_file_age_s pool guard would see an unreferenced AND
-            # old file between this pass and the CAS commit below and
-            # unlink it, committing a manifest over deleted bytes.
-            # Refreshing the pool entry's mtime makes the age gate hold
-            # the same promise here it holds for freshly staged writes.
-            _freshen(dst_f)
+    _link_pool_files(
+        bdir, path, man["files"], f"branch {name!r}",
+        "the branch is unpublishable",
+    )
     commit_meta: dict[str, str] = {
         "op": "publish_branch", "branch": name,
         "branch_version": str(bv),
@@ -6150,7 +6138,6 @@ def versioned_merge_branch(
     key: str | None = None,
     spark: SparkSession | None = None,
     lock_timeout_s: float = 600.0,
-    max_retries: int = 5,
 ) -> int:
     """THREE-WAY MERGE branch ``name`` into main when both have
     advanced since the fork — the general case :func:`versioned_publish`
@@ -6191,7 +6178,7 @@ def versioned_merge_branch(
     O(new files) hard links and one kilobyte CAS commit
     (``op=merge_branch``) — no Spark job, zero row bytes copied, any
     table size. A lost commit race re-derives against the new latest
-    (conflict rules re-checked) up to ``max_retries`` times. After the
+    (conflict rules re-checked; :func:`_retry_lost_races`). After the
     merge the branch is left unpublishable (main now holds changes the
     branch lacks — record says ``merged_version``); keep staging ONLY
     appends for repeat merges, or pass ``drop=True`` / re-branch.
@@ -6255,8 +6242,7 @@ def versioned_merge_branch(
             return None
         return (mn, mx)
 
-    last: CommitConflict | None = None
-    for _ in range(max_retries):
+    def attempt() -> int:
         latest = latest_version(path)
         man_l = _read_manifest(path, latest)
         l_by = {e["path"]: e for e in man_l["files"]}
@@ -6424,26 +6410,10 @@ def versioned_merge_branch(
                 )
 
         # --- pool links for the branch's new bytes --------------------
-        for be in to_link:
-            for rel in [be["path"], *be.get("dv_files", [])]:
-                dst_f = os.path.join(path, rel)
-                if os.path.exists(dst_f):
-                    continue
-                src_f = os.path.join(bdir, rel)
-                os.makedirs(os.path.dirname(dst_f), exist_ok=True)
-                try:
-                    os.link(src_f, dst_f)
-                except FileNotFoundError:
-                    raise FileNotFoundError(
-                        f"branch {name!r} references vacuumed file "
-                        f"{rel}; the branch is unmergeable"
-                    )
-                except OSError:
-                    shutil.copy(src_f, dst_f)
-                # same vacuum-age hazard as versioned_publish: linked
-                # entries inherit the branch file's old mtime — freshen
-                # so the age gate holds in the pre-commit window
-                _freshen(dst_f)
+        _link_pool_files(
+            bdir, path, to_link, f"branch {name!r}",
+            "the branch is unmergeable",
+        )
 
         new_refs = dict(table_refs(path, version=latest))
         if name not in new_refs:
@@ -6471,31 +6441,24 @@ def versioned_merge_branch(
             **meta_props,
         }
         entries = sorted(out_by.values(), key=lambda e: e["path"])
+        # a commit that does not land renames the branch dir back
+        # before the next try re-derives
         tomb = _retire_branch_dir(path, name) if drop else None
         try:
-            return _commit_manifest(
+            n = _commit_manifest(
                 path, schema_json, entries, commit_meta,
                 latest, lock_timeout_s,
             )
-        except MergeConflict:
-            if tomb is not None:
-                os.replace(tomb, bdir)
-            raise
-        except CommitConflict as e:  # raced — re-derive on the new latest
-            if tomb is not None:
-                os.replace(tomb, bdir)
-            last = e
-            continue
         except BaseException:
             if tomb is not None:
                 os.replace(tomb, bdir)
             raise
-        finally:
-            if tomb is not None and not os.path.isdir(bdir):
-                shutil.rmtree(tomb, ignore_errors=True)
-    raise CommitConflict(
-        f"merge of branch {name!r} at {path} lost {max_retries} "
-        f"commit races; last: {last}"
+        if tomb is not None:
+            shutil.rmtree(tomb, ignore_errors=True)
+        return n
+
+    return _retry_lost_races(
+        attempt, f"merge of branch {name!r} at {path}"
     )
 
 

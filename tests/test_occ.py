@@ -624,3 +624,125 @@ def test_restore_racing_append_serializes_after_it(
     assert got == {1}  # restored content is the new latest
     mid = {r["k"] for r in versioned_read(spark, path, version=2).collect()}
     assert mid == {1, 2, 3}  # the raced ingest is real, committed history
+
+
+def test_commits_wait_out_a_held_lock(spark, tmp_path, monkeypatch):
+    """Another writer holds the commit lock for 0.3 s at each commit's
+    first publish attempt. A connector-path blind append, a guarded
+    append rebased off a stale base and a tag each back off through
+    the lost-race loop and land once the lock frees."""
+    import skopje_spark.sinks.versioned as V
+    from skopje_spark.sinks.versioned import (
+        snapshot_meta,
+        table_refs,
+        versioned_append,
+        versioned_tag,
+    )
+
+    path = str(tmp_path / "t")
+    versioned_write(_df(spark, [(1, "a")]), path)              # v0
+    versioned_append(spark, path, _df(spark, [(2, "b")]))     # v1
+    lock = os.path.join(path, "_COMMIT_LOCK")
+    real = V._commit_manifest
+    holders: list[threading.Timer] = []
+
+    def lock_held_at_first_publish(*a, **kw):
+        if not holders:
+            with open(lock, "x") as f:
+                f.write("another writer")
+            holders.append(threading.Timer(0.3, os.unlink, args=(lock,)))
+            holders[0].start()
+        return real(*a, **kw)
+
+    monkeypatch.setattr(V, "_commit_manifest", lock_held_at_first_publish)
+
+    def commit_under_held_lock(commit):
+        holders.clear()
+        t0 = time.monotonic()
+        v = commit()
+        waited = time.monotonic() - t0
+        holders[0].join(timeout=5)
+        assert not holders[0].is_alive() and not os.path.exists(lock)
+        return v, waited
+
+    schema = V._read_manifest(path, 1)["schema"]
+    v, waited = commit_under_held_lock(
+        lambda: V._commit_blind_append(
+            path, [], {"op": "append"}, schema_json=schema,
+            constraints=None,
+        )
+    )
+    assert v == 2 and waited >= 0.3
+    v, _ = commit_under_held_lock(
+        lambda: versioned_append(
+            spark, path, _df(spark, [(3, "c")]),
+            expected_version=1, rebase_on_conflict=True,
+        )
+    )
+    assert v == 3 and snapshot_meta(path, "rebased_onto", version=3) == "2"
+    v, waited = commit_under_held_lock(lambda: versioned_tag(path, "t1"))
+    assert v == 4 and waited >= 0.3
+    assert table_refs(path)["t1"]["version"] == 3
+    assert {r["k"] for r in versioned_read(spark, path).collect()} == {1, 2, 3}
+
+
+def test_publish_contract(spark, tmp_path, monkeypatch):
+    """Every manifest is staged before the commit lock is taken; a
+    refusal never reaches the publish step; a commit that loses every
+    race makes exactly ``_COMMIT_TRIES`` tries with capped exponential
+    backoff, then raises a plain (not retryable) CommitConflict."""
+    import types
+
+    import skopje_spark.sinks.versioned as V
+    from skopje_spark.sinks.versioned import versioned_append
+
+    path = str(tmp_path / "t")
+    versioned_write(_df(spark, [(1, "a")]), path)
+    lock = os.path.join(path, "_COMMIT_LOCK")
+    real_write = V._write_manifest_dir
+    locked_at_write: list[bool] = []
+
+    def recording_write(*a, **kw):
+        locked_at_write.append(os.path.exists(lock))
+        return real_write(*a, **kw)
+
+    monkeypatch.setattr(V, "_write_manifest_dir", recording_write)
+    assert versioned_append(spark, path, _df(spark, [(2, "b")])) == 1
+    assert locked_at_write == [False]
+
+    real_publish = V._publish
+    publishes: list[str] = []
+
+    def counting_publish(p, *a, **kw):
+        publishes.append(p)
+        return real_publish(p, *a, **kw)
+
+    monkeypatch.setattr(V, "_publish", counting_publish)
+    with pytest.raises(CommitConflict, match="schema") as refused:
+        V._commit_blind_append(
+            path, [], {"op": "append"},
+            schema_json={"type": "struct", "fields": []}, constraints=None,
+        )
+    assert type(refused.value) is CommitConflict and publishes == []
+
+    def losing_publish(p, *a, **kw):
+        publishes.append(p)
+        raise V.LostRace(f"table at {p} moved")
+
+    sleeps: list[float] = []
+    monkeypatch.setattr(V, "_publish", losing_publish)
+    monkeypatch.setattr(
+        V, "time", types.SimpleNamespace(time=time.time, sleep=sleeps.append)
+    )
+    schema = V._read_manifest(path, 1)["schema"]
+    with pytest.raises(CommitConflict, match="consecutive races") as lost:
+        V._commit_blind_append(
+            path, [], {"op": "append"}, schema_json=schema, constraints=None,
+        )
+    assert type(lost.value) is CommitConflict
+    assert len(publishes) == V._COMMIT_TRIES
+    assert sleeps == [
+        min(V._BACKOFF_CAP_S, V._BACKOFF_S * 2**i)
+        for i in range(V._COMMIT_TRIES - 1)
+    ]
+    assert latest_version(path) == 1
