@@ -59,6 +59,7 @@ import tempfile
 import time
 import uuid
 from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -1426,14 +1427,19 @@ def _read_manifest(path: str, version: int) -> dict:
     by path — the canonical order segments are cut in."""
     with open(os.path.join(path, f"v={version}", _MANIFEST_NAME)) as f:
         man = json.load(f)
-    if "files" in man:
-        return man
-    files: list[dict] = []
-    for ref in man["segments"]:
-        with open(os.path.join(path, ref["path"])) as f:
-            files.extend(json.load(f))
-    man["files"] = files
+    if "files" not in man:
+        man["files"] = _ref_entries(path, man["segments"])
     return man
+
+
+def _ref_entries(path: str, refs: list[dict]) -> list[dict]:
+    """The file entries of the given segment refs, each segment file
+    opened and parsed."""
+    entries: list[dict] = []
+    for ref in refs:
+        with open(os.path.join(path, ref["path"])) as f:
+            entries.extend(json.load(f))
+    return entries
 
 
 def _ref_disjoint(ref: dict, stats_col: str, lo, hi, vals=None) -> bool:
@@ -1489,14 +1495,13 @@ def _split_segments(
     if "files" in man:
         return [], man["files"], None
     closed: list[dict] = []
-    open_entries: list[dict] = []
+    opened: list[dict] = []
     for ref in man["segments"]:
         if any(_ref_disjoint(ref, *b) for b in bounds):
             closed.append(ref)
         else:
-            with open(os.path.join(path, ref["path"])) as f:
-                open_entries.extend(json.load(f))
-    return closed, open_entries, len(man["segments"])
+            opened.append(ref)
+    return closed, _ref_entries(path, opened), len(man["segments"])
 
 
 def _resolved_ref_bounds(resolved: list[dict]) -> list[tuple]:
@@ -1544,26 +1549,6 @@ def _plan_read(
     if n is None:
         return entries, 1, 1
     return entries, n - len(closed), n
-
-
-def _pruned_manifest_entries(
-    path: str, version: int, stats_col, lo=None, hi=None
-) -> tuple[list[dict], dict, int, int]:
-    """The segment tier alone for one ``lo <= stats_col <= hi`` bound:
-    open ONLY the segment files whose ref-level aggregates can
-    intersect it (:func:`_split_segments`) — a narrow lookup on a
-    clustered 800k-file table parses a handful of kilobyte segments,
-    not the whole manifest. Returns (entries, schema_json,
-    segments_opened, segments_total); a flat manifest counts as one
-    opened segment. Reads plan through :func:`_plan_read`."""
-    with open(os.path.join(path, f"v={version}", _MANIFEST_NAME)) as f:
-        man = json.load(f)
-    closed, entries, n = _split_segments(
-        path, man, [(stats_col, lo, hi, None)]
-    )
-    if n is None:
-        return entries, man["schema"], 1, 1
-    return entries, man["schema"], n - len(closed), n
 
 
 def _commit_manifest(
@@ -3803,6 +3788,16 @@ def _extend_dvs(
     return out
 
 
+def _split_hit(
+    entries: list[dict], counts: dict[str, int]
+) -> tuple[list[dict], list[dict]]:
+    """(entries holding a counted row, the rest); ``counts`` maps pool
+    basename → rows matched."""
+    hit = [e for e in entries if counts.get(os.path.basename(e["path"]))]
+    rest = [e for e in entries if not counts.get(os.path.basename(e["path"]))]
+    return hit, rest
+
+
 def _commit_blind_append(
     path: str,
     entries: list[dict],
@@ -3882,16 +3877,127 @@ def _commit_blind_append(
     return _retry_lost_races(attempt, f"append at {path}")
 
 
+@dataclass
+class _DmlPlan:
+    """What one row-level DML op decided over its base snapshot, for
+    :func:`_dml_commit` to stage and publish. ``touched`` are opened
+    base entries the op replaces: rewritten away (their surviving rows
+    are part of ``rows``) or, with ``dv``, kept with their deletion
+    vectors extended. ``carried`` are the other opened base entries,
+    kept as they are; ``closed_refs`` the base segments the plan never
+    opened, carried by reference. Base entries in none of the three
+    (a partition drop's covered files) leave the table."""
+
+    op: str
+    base_v: int
+    man: dict  # the base's raw top-level manifest
+    schema_json: dict  # the schema the commit publishes
+    closed_refs: list[dict]
+    n_segments: int | None
+    carried: list[dict]
+    touched: list[dict] = field(default_factory=list)
+    rows: DataFrame | None = None  # staged as new data files
+    dv: tuple | None = None  # (__file/__pos frame, {pool basename: rows hit})
+    changes: list = field(default_factory=list)  # [(frame, _change_type)]
+    # _rebase's added-file proof: (stats_key, first_key_bounds, noun),
+    # or None for an opaque predicate that refuses any added file
+    proof: tuple | None = None
+    markers: dict = field(default_factory=dict)
+
+
+def _dml_commit(
+    path: str,
+    plan: _DmlPlan,
+    *,
+    meta: dict[str, str] | None,
+    expected_version,
+    lock_timeout_s: float,
+    rebase_on_conflict: bool = False,
+) -> int:
+    """THE commit tail of the six row-level DML ops (upsert, merge,
+    append, delete, replace_where, update): stage ``plan.rows`` as data
+    files in the table's layout and ``plan.dv``'s positions as
+    deletion-vector sidecars, record the change feed (each frame
+    conformed to the published schema and labelled ``_change_type``),
+    build the markers and publish through :func:`_commit_manifest`,
+    closed segments by reference.
+
+    A lost CAS race with ``rebase_on_conflict`` (guarded mode only)
+    re-targets the already-staged commit at the new latest: an append,
+    which reads nothing and so commutes with every data commit, through
+    :func:`_commit_blind_append`; every other op through
+    :func:`_rebase`. Without it the :class:`LostRace` propagates."""
+    import math
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(plan.schema_json)
+    new_entries = [] if plan.rows is None else _stage_data_files(
+        plan.rows, path, _schema_mapping(schema),
+        partition_by=table_partitioning(path, version=plan.base_v),
+    )
+    touched_out: list[dict] = []
+    dv_rels: list[str] = []
+    if plan.dv is not None:
+        positions, counts = plan.dv
+        dv_rels = _stage_aux_files(
+            positions, path, kind="dv",
+            n_files=max(1, math.ceil(sum(counts.values()) / 5_000_000)),
+        )
+        touched_out = _extend_dvs(plan.touched, counts, dv_rels)
+    kept = plan.carried + touched_out
+    commit_meta = {
+        "op": plan.op,
+        "n_files_rewritten": str(0 if plan.dv else len(plan.touched)),
+        **_carried_markers(len(kept), plan.closed_refs, plan.n_segments),
+        **plan.markers,
+    }
+    if plan.op == "append":
+        commit_meta["n_files_appended"] = str(len(new_entries))
+    if plan.op == "delete":
+        commit_meta["n_dv_files"] = str(len(dv_rels))
+    if plan.changes:
+        cdc = reduce(DataFrame.unionByName, [
+            _conform(df, schema).withColumn("_change_type", F.lit(kind))
+            for df, kind in plan.changes
+        ])
+        commit_meta["cdc_files"] = json.dumps(
+            _stage_aux_files(cdc, path, kind="cdc")
+        )
+    commit_meta.update(meta or {})
+    try:
+        return _commit_manifest(
+            path, plan.schema_json, kept + new_entries, commit_meta,
+            expected_version, lock_timeout_s, reuse_refs=plan.closed_refs,
+        )
+    except LostRace:
+        if not rebase_on_conflict or not isinstance(expected_version, int):
+            raise
+        if plan.op != "append":
+            return _rebase(
+                path, plan, touched_out, new_entries, commit_meta,
+                lock_timeout_s,
+            )
+        return _commit_blind_append(
+            path, new_entries, commit_meta, schema_json=plan.schema_json,
+            constraints=snapshot_meta(
+                path, "constraints", version=plan.base_v
+            ),
+            on_base=lambda latest: {
+                "rebased_onto": str(latest),
+                "n_rebased_over": str(latest - plan.base_v),
+            },
+            lock_timeout_s=lock_timeout_s,
+        )
+
+
 def _rebase(
     path: str,
-    *,
-    base_v: int,
-    touched: list[dict],
-    touched_kind: str,
-    proof,
-    carry,
+    plan: _DmlPlan,
+    touched_out: list[dict],
     new_entries: list[dict],
-    schema_json: dict,
     commit_meta: dict,
     lock_timeout_s: float,
 ) -> int:
@@ -3907,37 +4013,42 @@ def _rebase(
        rename/evolution changes read semantics — refuse);
     2. CHECK-constraint marker unchanged (a new constraint must
        re-validate our staged rows — refuse);
-    3. every ``touched`` base entry (files a merge rewrote, files a
+    3. every touched base entry (files a merge rewrote, files a
        delete vectorized) appears in L IDENTICAL, deletion vectors
        included — a concurrent rewrite or DV would be silently undone
        or interleaved — refuse;
     4. every file ADDED since the base is provably disjoint from our
-       keys, per ``proof``: ``(stats_key, first_key_bounds, noun)``
-       checks the added files' footer stats against the key interval
-       (NaN or stats-unsafe keys refusing); ``None`` (a predicate
-       delete, opaque to stats) refuses any added file. (A blind
-       append proves nothing and needs no rebase: it commits through
-       :func:`_commit_blind_append`.)
+       keys, per ``plan.proof``: ``(stats_key, first_key_bounds,
+       noun)`` checks the added files' footer stats against the key
+       interval (NaN or stats-unsafe keys refusing); ``None`` (a
+       predicate delete, opaque to stats) refuses any added file.
 
     When all hold, re-running the commit on L would select exactly the
-    same files and stage exactly our output, so ``carry(files(L)) +
-    new_entries`` IS the serial result: ``carry`` drops our candidates
-    (merge) or extends the vectors (delete) over L's entries, and
-    files carried from L keep whatever a concurrent writer gave them.
-    Recorded change-feed files stay valid for the same reason.
-    Refusals raise :class:`CommitConflict`; the caller's OCC loop
-    falls back to a full re-derive. A rebase that itself loses the
-    publish race re-checks against the newer latest
-    (:func:`_retry_lost_races`).
+    same files and stage exactly our output, so L's entries minus the
+    touched ones, plus ``touched_out`` (the vectorized versions) and
+    ``new_entries``, IS the serial result; files carried from L keep
+    whatever a concurrent writer gave them. Recorded change-feed files
+    stay valid for the same reason. Refusals raise
+    :class:`CommitConflict`; the caller's OCC loop falls back to a full
+    re-derive. A rebase that itself loses the publish race re-checks
+    against the newer latest (:func:`_retry_lost_races`).
 
-    Cost per lost race: no Spark job and no data rewrite, but O(table
-    manifest) driver work — the base and every latest L are read in
-    full through :func:`_read_manifest` (every segment file parsed),
-    and the commit re-chunks all of ``carry(files(L))`` into segments
-    instead of carrying L's untouched segments by reference."""
-    base_man = _read_manifest(path, base_v)
-    base_paths = {e["path"] for e in base_man["files"]}
-    base_constraints = snapshot_meta(path, "constraints", version=base_v)
+    Cost per try: the base's and L's kilobyte top-level manifests, plus
+    only three kinds of segment file — those the plan itself opened
+    (where every touched file lives), L's segments the base lacks (the
+    only place an added file can be) and the base's segments L lacks
+    (where a touched file may have changed). Every other segment of L
+    rides into the commit BY REFERENCE, unopened; only the opened
+    entries re-chunk. So a race costs O(touched + concurrently changed
+    segments) driver JSON, not O(table manifest); the commit records
+    ``n_segments_total``/``n_segments_opened`` against L like a
+    first-CAS commit. A legacy flat base manifest has no refs to match,
+    so it opens every segment of L, as a full read would."""
+    base_refs = plan.man.get("segments", [])
+    in_base = {r["path"] for r in base_refs}
+    closed = {r["path"] for r in plan.closed_refs}
+    touched = {e["path"] for e in plan.touched}
+    base_constraints = snapshot_meta(path, "constraints", version=plan.base_v)
 
     def attempt() -> int:
         latest = latest_version(path)
@@ -3945,35 +4056,55 @@ def _rebase(
             raise CommitConflict(
                 f"rebase refused: table at {path} has no committed version"
             )
-        man_l = _read_manifest(path, latest)
-        if man_l["schema"] != base_man["schema"]:
+        with open(os.path.join(path, f"v={latest}", _MANIFEST_NAME)) as f:
+            raw = json.load(f)
+        if raw["schema"] != plan.man["schema"]:
             raise CommitConflict(
                 "rebase refused: concurrent commit changed the table "
-                f"schema between v{base_v} and v{latest}"
+                f"schema between v{plan.base_v} and v{latest}"
             )
         if snapshot_meta(path, "constraints", version=latest) != (
             base_constraints
         ):
             raise CommitConflict(
                 "rebase refused: concurrent commit changed CHECK "
-                f"constraints between v{base_v} and v{latest}"
+                f"constraints between v{plan.base_v} and v{latest}"
             )
-        l_by_path = {e["path"]: e for e in man_l["files"]}
-        for e in sorted(touched, key=lambda e: e["path"]):
+        l_refs = raw.get("segments", [])
+        in_l = {r["path"] for r in l_refs}
+        keep = [r for r in l_refs if r["path"] in closed]
+        # L's refs the base lacks (a legacy flat L's inline entries
+        # count as such), and the plan's opened refs L still holds
+        fresh = raw.get("files", []) + _ref_entries(
+            path, [r for r in l_refs if r["path"] not in in_base]
+        )
+        reopened = _ref_entries(
+            path,
+            [r for r in l_refs if r["path"] in in_base - closed],
+        )
+        gone = {
+            e["path"]
+            for e in plan.man.get("files", []) + _ref_entries(
+                path, [r for r in base_refs if r["path"] not in in_l]
+            )
+        }
+        l_by_path = {e["path"]: e for e in reopened + fresh}
+        for e in sorted(plan.touched, key=lambda e: e["path"]):
             if l_by_path.get(e["path"]) != e:
                 raise CommitConflict(
-                    f"rebase refused: concurrent commit touched "
-                    f"{touched_kind} file {e['path']}"
+                    "rebase refused: concurrent commit touched "
+                    f"{'vectorized' if plan.dv else 'rewritten'} file "
+                    f"{e['path']}"
                 )
-        added = [e for e in man_l["files"] if e["path"] not in base_paths]
-        if added and proof is None:
+        added = [e for e in fresh if e["path"] not in gone]
+        if added and plan.proof is None:
             raise CommitConflict(
                 "rebase refused: concurrent commit added "
                 f"{len(added)} file(s) and a predicate delete "
                 "cannot prove disjointness"
             )
         if added:
-            stats_key, bounds, noun = proof
+            stats_key, bounds, noun = plan.proof
             if bounds[3]:  # all-NULL keys match nothing anywhere
                 if not _bounds_usable(bounds):
                     raise CommitConflict(
@@ -3987,17 +4118,76 @@ def _rebase(
                         f"rebase refused: {len(overlap)} concurrently added "
                         f"file(s) may contain {noun} keys"
                     )
-        carried = carry(man_l["files"])
-        meta2 = dict(commit_meta)
-        meta2["n_files_carried"] = str(len(carried))
-        meta2["rebased_onto"] = str(latest)
-        meta2["n_rebased_over"] = str(latest - base_v)
+        kept = [
+            e for e in reopened + fresh if e["path"] not in touched
+        ] + touched_out
+        meta2 = {
+            **commit_meta,
+            **_carried_markers(
+                len(kept), keep, len(l_refs) if "segments" in raw else None
+            ),
+            "rebased_onto": str(latest),
+            "n_rebased_over": str(latest - plan.base_v),
+        }
         return _commit_manifest(
-            path, schema_json, carried + new_entries, meta2, latest,
-            lock_timeout_s,
+            path, plan.schema_json, kept + new_entries, meta2, latest,
+            lock_timeout_s, reuse_refs=keep,
         )
 
     return _retry_lost_races(attempt, f"rebase at {path}")
+
+
+def _in_table_types(df: DataFrame, schema, prefix: str = "") -> DataFrame:
+    """``df`` with every column the table also has cast to the table's
+    type, each renamed ``prefix + name``. Pooled files then never fork
+    physical types (an int batch into a long column), and key bounds
+    live in the table's type domain, so they compare cleanly against
+    manifest stats (raw bounds of a castable-but-different key type
+    would cross-type-compare, or derive buckets from a different
+    canonical form than the rows a coercing join matches)."""
+    from pyspark.sql import functions as F
+
+    types = {f.name: f.dataType for f in schema.fields}
+    return df.select(
+        *[
+            (F.col(c).cast(types[c]) if c in types else F.col(c))
+            .alias(prefix + c)
+            for c in df.columns
+        ]
+    )
+
+
+def _key_join(df: DataFrame, other: DataFrame, keys: list[str], how: str):
+    """``df``'s rows whose key tuple is (``left_semi``) or is not
+    (``left_anti``) among ``other``'s distinct key tuples."""
+    return df.join(other.select(*keys).distinct(), keys, how)
+
+
+def _keyed_plan(
+    spark: SparkSession,
+    path: str,
+    base_v: int,
+    man: dict,
+    key_frame: DataFrame,
+    keys: list[str],
+    mapping: dict[str, str],
+    schema,
+) -> tuple[_DmlPlan, DataFrame | None]:
+    """The plan MERGE and UPSERT share: the key candidates of
+    ``key_frame`` (:func:`_plan_key_candidates`) become the touched
+    files, rewritten away, and the rebase proof is the first key's
+    bounds. Also returns the candidate SLICE, read DV-aware so a
+    candidate file's deleted rows never resurrect through the rewrite
+    (None when no file can hold a key)."""
+    closed_refs, cand, carried, n_segments, bounds0 = _plan_key_candidates(
+        spark, path, base_v, man, key_frame, keys, mapping
+    )
+    plan = _DmlPlan(
+        "merge", base_v, man, man["schema"], closed_refs, n_segments,
+        carried, touched=cand,
+        proof=(mapping.get(keys[0], keys[0]), bounds0, "update"),
+    )
+    return plan, (_read_entries(spark, path, cand, schema) if cand else None)
 
 
 def versioned_upsert(
@@ -4016,6 +4206,9 @@ def versioned_upsert(
     """MERGE as a snapshot commit: next version = (current rows not
     matching an update key) ∪ updates. The current snapshot is read,
     never mutated — a failed upsert leaves the table exactly as it was.
+    Unlike :func:`versioned_merge`, every update row lands, duplicates
+    for one key included, and a target row matching an update key is
+    replaced however many copies of it the table holds.
 
     ``rebase_on_conflict=True`` (guarded mode only): a lost
     compare-and-swap race first attempts a METADATA-ONLY rebase onto
@@ -4028,12 +4221,12 @@ def versioned_upsert(
     to a full re-derive.
 
     ``change_feed=True`` additionally records the commit's LOGICAL
-    changes (insert / update_postimage rows) as ``cdc-*`` pool files
-    referenced from the commit's ``cdc_files`` marker — the write-side
-    half of :func:`versioned_change_feed`. Without it, a physical
-    file diff cannot recover logical changes (a partial rewrite
-    rewrites unchanged neighbor rows too), and the read-side fallback
-    pays a full snapshot diff.
+    changes (insert / update_preimage / update_postimage rows) as
+    ``cdc-*`` pool files referenced from the commit's ``cdc_files``
+    marker — the write-side half of :func:`versioned_change_feed`.
+    Without it, a physical file diff cannot recover logical changes (a
+    partial rewrite rewrites unchanged neighbor rows too), and the
+    read-side fallback pays a full snapshot diff.
 
     PARTIAL REWRITE (the Delta/Iceberg write economics): only data
     files whose per-file stats can contain a matched key are read,
@@ -4061,7 +4254,6 @@ def versioned_upsert(
 
     ``expected_version`` (internal to the OCC loop) pins the base
     snapshot AND turns the commit into a compare-and-swap on it."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     base_v, man = _base_snapshot(path, expected_version)
@@ -4101,40 +4293,15 @@ def versioned_upsert(
         StructType(new_fields), reserved=set(retired) - live_phys
     )
     mapping = _schema_mapping(new_schema)
-    # existing columns are cast to the TABLE's types so pooled files
-    # never fork physical types (an int batch into a long column) —
-    # aligned BEFORE any stats pruning, so key bounds live in the
-    # table's type domain and compare cleanly against manifest stats
-    # (raw pre-cast bounds of a castable-but-different key type would
-    # cross-type-compare against the stats)
-    table_type = {f.name: f.dataType for f in table_schema.fields}
-    aligned = updates.select(
-        *[
-            F.col(c).cast(table_type[c]).alias(c) if c in table_type else F.col(c)
-            for c in updates.columns
-        ]
+    # aligned BEFORE any stats pruning (see _in_table_types)
+    aligned = _in_table_types(updates, table_schema)
+    plan, slice_df = _keyed_plan(
+        spark, path, base_v, man, aligned, keys, mapping, table_schema
     )
-    closed_refs, cand, carried, n_segments, bounds0 = _plan_key_candidates(
-        spark, path, base_v, man, aligned, keys, mapping
-    )
-    if cand:
-        # DV-aware slice: a candidate file's deleted rows must not
-        # resurrect through the rewrite
-        slice_df = _read_entries(spark, path, cand, table_schema)
-        kept = slice_df.join(aligned.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(aligned, allowMissingColumns=evolve_schema)
-    else:
-        slice_df = None
-        merged = aligned
-    new_entries = _stage_data_files(
-        merged, path, mapping,
-        partition_by=table_partitioning(path, version=base_v),
-    )
-    commit_meta = {
-        "op": "merge",
-        "n_files_rewritten": str(len(cand)),
-        **_carried_markers(len(carried), closed_refs, n_segments),
-    }
+    plan.schema_json = new_schema.jsonValue()
+    plan.rows = aligned if slice_df is None else _key_join(
+        slice_df, aligned, keys, "left_anti"
+    ).unionByName(aligned, allowMissingColumns=evolve_schema)
     if change_feed:
         # Delta-CDF-style write-side change recording: classify the
         # update rows against the candidate slice's EXISTING keys
@@ -4144,51 +4311,24 @@ def versioned_upsert(
         # feed self-sufficient for consumers that need OLD values
         # (IVM sum folding, digest maintenance) without a time-travel
         # join back into the base.
-        if slice_df is not None:
-            ex_keys = slice_df.select(*keys).distinct()
-            upd_rows = aligned.join(ex_keys, keys, "left_semi")
-            ins_rows = aligned.join(ex_keys, keys, "left_anti")
-            upd_keys = aligned.select(*keys).distinct()
-            pre_rows = slice_df.join(upd_keys, keys, "left_semi")
+        if slice_df is None:
+            plan.changes = [(aligned, "insert")]
         else:
-            upd_rows, pre_rows, ins_rows = None, None, aligned
-        cdc = _conform(ins_rows, new_schema).withColumn(
-            "_change_type", F.lit("insert")
-        )
-        if upd_rows is not None:
-            cdc = cdc.unionByName(
-                _conform(pre_rows, new_schema).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-            ).unionByName(
-                _conform(upd_rows, new_schema).withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-            )
-        cdc_rels = _stage_aux_files(cdc, path, kind="cdc")
-        commit_meta["cdc_files"] = json.dumps(cdc_rels)
-    commit_meta.update(meta or {})
-    try:
-        return _commit_manifest(
-            path,
-            new_schema.jsonValue(),
-            carried + new_entries,
-            commit_meta,
-            expected_version,
-            lock_timeout_s,
-            reuse_refs=closed_refs,
-        )
-    except LostRace:
-        if not rebase_on_conflict or not isinstance(expected_version, int):
-            raise
-        cand_paths = {e["path"] for e in cand}
-        return _rebase(
-            path, base_v=base_v, touched=cand, touched_kind="rewritten",
-            proof=(mapping.get(keys[0], keys[0]), bounds0, "update"),
-            carry=lambda fs: [e for e in fs if e["path"] not in cand_paths],
-            new_entries=new_entries, schema_json=new_schema.jsonValue(),
-            commit_meta=commit_meta, lock_timeout_s=lock_timeout_s,
-        )
+            plan.changes = [
+                (_key_join(aligned, slice_df, keys, "left_anti"), "insert"),
+                (
+                    _key_join(slice_df, aligned, keys, "left_semi"),
+                    "update_preimage",
+                ),
+                (
+                    _key_join(aligned, slice_df, keys, "left_semi"),
+                    "update_postimage",
+                ),
+            ]
+    return _dml_commit(
+        path, plan, meta=meta, expected_version=expected_version,
+        lock_timeout_s=lock_timeout_s, rebase_on_conflict=rebase_on_conflict,
+    )
 
 
 def versioned_merge(
@@ -4230,7 +4370,8 @@ def versioned_merge(
     :func:`versioned_upsert` for that). Multiple source rows matching
     one target key are rejected loudly (SQL MERGE's cardinality
     violation) — last-writer-wins silent nondeterminism is how
-    replicas diverge.
+    replicas diverge. ``rebase_on_conflict`` as in
+    :func:`versioned_upsert`.
 
     Matched-DELETEs here are rewrite-style, not deletion vectors: the
     candidate files are being rewritten anyway, so dropping the rows
@@ -4252,13 +4393,7 @@ def versioned_merge(
     # conditions (src_-prefixed) but never reach the table — the
     # changelog-apply shape, where an __op column drives the clauses
     table_type = {f.name: f.dataType for f in table_schema.fields}
-    src = source.select(
-        *[
-            (F.col(c).cast(table_type[c]) if c in table_type else F.col(c))
-            .alias(f"src_{c}")
-            for c in source.columns
-        ]
-    )
+    src = _in_table_types(source, table_schema, prefix="src_")
     # cardinality guard: one source row per key, or the merge is
     # nondeterministic — fail loudly like SQL MERGE
     dup = (
@@ -4274,13 +4409,10 @@ def versioned_merge(
             f"{[dup[0][f'src_{k}'] for k in keys]} — SQL MERGE cardinality "
             "violation"
         )
-    # key frame in the TABLE's types (from the already-cast src
-    # projection), so stats pruning never cross-type-compares a raw
-    # source key type against manifest stats
     key_src = src.select(*[F.col(f"src_{k}").alias(k) for k in keys])
-    mapping = _schema_mapping(table_schema)
-    closed_refs, cand, carried, n_segments, bounds0 = _plan_key_candidates(
-        spark, path, base_v, man, key_src, keys, mapping
+    plan, slice_df = _keyed_plan(
+        spark, path, base_v, man, key_src, keys,
+        _schema_mapping(table_schema), table_schema,
     )
 
     upd_cond = F.expr(when_matched_update) if when_matched_update else F.lit(False)
@@ -4305,15 +4437,17 @@ def versioned_merge(
     # negating keeps survivors (~deleted) and the change feed
     # (deleted) exact complements, so data and CDF can never diverge.
     deleted = F.coalesce(del_cond.cast("boolean"), F.lit(False))
-    if cand:
-        slice_df = _read_entries(spark, path, cand, table_schema)
+    inserts = src.select(
+        *[F.col(f"src_{c}").alias(c) for c in table_cols],
+        ins_cond.alias("__ins"),
+    )
+    if slice_df is not None:
         j = slice_df.join(
             src.withColumn("__src_present", F.lit(True)),
             [F.col(k) == F.col(f"src_{k}") for k in keys],
             "left",
         )
         matched = F.col("__src_present").isNotNull()
-        kept_unmatched = j.filter(~matched).select(*table_cols)
         pairs = j.filter(matched)
         # precedence: delete first, then update, else keep unchanged
         survivors = pairs.filter(~deleted).select(
@@ -4322,80 +4456,31 @@ def versioned_merge(
                 for c, p in zip(table_cols, upd_proj)
             ]
         )
-        rewritten = kept_unmatched.unionByName(survivors)
-        matched_keys = pairs.select(*keys)
-    else:
-        rewritten = None
-        matched_keys = None
-
-    inserts = src.select(
-        *[F.col(f"src_{c}").alias(c) for c in table_cols],
-        ins_cond.alias("__ins"),
-    )
-    if matched_keys is not None:
-        inserts = inserts.join(matched_keys, keys, "left_anti")
+        rewritten = j.filter(~matched).select(*table_cols).unionByName(
+            survivors
+        )
+        inserts = _key_join(inserts, pairs, keys, "left_anti")
     inserts = inserts.filter(F.col("__ins")).drop("__ins")
-    merged = (
-        inserts if rewritten is None else rewritten.unionByName(inserts)
+    plan.rows = (
+        inserts if slice_df is None else rewritten.unionByName(inserts)
     )
-    new_entries = _stage_data_files(
-        merged, path, mapping,
-        partition_by=table_partitioning(path, version=base_v),
-    )
-    commit_meta = {
-        "op": "merge",
-        "n_files_rewritten": str(len(cand)),
-        **_carried_markers(len(carried), closed_refs, n_segments),
-    }
     if change_feed:
         # clause-accurate CDF recording: deletes and update preimages
         # carry TARGET values, update postimages the projected values,
         # inserts the admitted source rows — another pass over the
         # candidate files the merge reads anyway
-        cdc = inserts.withColumn("_change_type", F.lit("insert"))
-        if cand:
-            del_rows = pairs.filter(deleted).select(*table_cols)
+        plan.changes = [(inserts, "insert")]
+        if slice_df is not None:
             upd_pairs = pairs.filter(~deleted & upd_cond)
-            cdc = (
-                cdc.unionByName(
-                    del_rows.withColumn("_change_type", F.lit("delete"))
-                )
-                .unionByName(
-                    upd_pairs.select(*table_cols).withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                )
-                .unionByName(
-                    upd_pairs.select(*upd_proj).withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-            )
-        commit_meta["cdc_files"] = json.dumps(
-            _stage_aux_files(cdc, path, kind="cdc")
-        )
-    commit_meta.update(meta or {})
-    try:
-        return _commit_manifest(
-            path,
-            man["schema"],
-            carried + new_entries,
-            commit_meta,
-            expected_version,
-            lock_timeout_s,
-            reuse_refs=closed_refs,
-        )
-    except LostRace:
-        if not rebase_on_conflict or not isinstance(expected_version, int):
-            raise
-        cand_paths = {e["path"] for e in cand}
-        return _rebase(
-            path, base_v=base_v, touched=cand, touched_kind="rewritten",
-            proof=(mapping.get(keys[0], keys[0]), bounds0, "update"),
-            carry=lambda fs: [e for e in fs if e["path"] not in cand_paths],
-            new_entries=new_entries, schema_json=man["schema"],
-            commit_meta=commit_meta, lock_timeout_s=lock_timeout_s,
-        )
+            plan.changes += [
+                (pairs.filter(deleted).select(*table_cols), "delete"),
+                (upd_pairs.select(*table_cols), "update_preimage"),
+                (upd_pairs.select(*upd_proj), "update_postimage"),
+            ]
+    return _dml_commit(
+        path, plan, meta=meta, expected_version=expected_version,
+        lock_timeout_s=lock_timeout_s, rebase_on_conflict=rebase_on_conflict,
+    )
 
 
 def versioned_merge_concurrent(
@@ -4479,66 +4564,29 @@ def versioned_append(
     ``rebase_on_conflict=True`` (guarded mode only): a lost CAS race
     re-targets the staged files at the new latest through
     :func:`_commit_blind_append` (refused on a schema or CHECK change)."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     base_v, raw = _base_snapshot(path, expected_version)
     table_schema = StructType.fromJson(raw["schema"])
-    if set(batch.columns) != {f.name for f in table_schema.fields}:
+    table_cols = [f.name for f in table_schema.fields]
+    if set(batch.columns) != set(table_cols):
         raise ValueError(
             f"append schema {sorted(batch.columns)} differs from table "
-            f"schema {sorted(f.name for f in table_schema.fields)} at {path}"
+            f"schema {sorted(table_cols)} at {path}"
         )
-    table_type = {f.name: f.dataType for f in table_schema.fields}
-    aligned = batch.select(
-        *[F.col(f.name).cast(table_type[f.name]).alias(f.name)
-          for f in table_schema.fields]
-    )
-    new_entries = _stage_data_files(
-        aligned, path, _schema_mapping(table_schema),
-        partition_by=table_partitioning(path, version=base_v),
-    )
+    aligned = _in_table_types(batch, table_schema)
     # segment-diff: EVERY base segment rides by reference — an append
     # never reads, parses, or re-serializes existing metadata; legacy
     # flat manifests re-chunk once and segment from then on
-    closed_refs = raw.get("segments", [])
-    base_entries = raw.get("files", [])
-    commit_meta = {
-        "op": "append",
-        "n_files_rewritten": "0",
-        **_carried_markers(len(base_entries), closed_refs, None),
-        "n_files_appended": str(len(new_entries)),
-    }
-    if change_feed:
-        cdc = aligned.withColumn("_change_type", F.lit("insert"))
-        commit_meta["cdc_files"] = json.dumps(
-            _stage_aux_files(cdc, path, kind="cdc")
-        )
-    commit_meta.update(meta or {})
-    try:
-        return _commit_manifest(
-            path,
-            raw["schema"],
-            base_entries + new_entries,
-            commit_meta,
-            expected_version,
-            lock_timeout_s,
-            reuse_refs=closed_refs,
-        )
-    except LostRace:
-        if not rebase_on_conflict or not isinstance(expected_version, int):
-            raise
-        # an append commutes with every concurrent data commit: re-target
-        # the staged files at the new latest, segments by reference
-        return _commit_blind_append(
-            path, new_entries, commit_meta, schema_json=raw["schema"],
-            constraints=snapshot_meta(path, "constraints", version=base_v),
-            on_base=lambda latest: {
-                "rebased_onto": str(latest),
-                "n_rebased_over": str(latest - base_v),
-            },
-            lock_timeout_s=lock_timeout_s,
-        )
+    plan = _DmlPlan(
+        "append", base_v, raw, raw["schema"], raw.get("segments", []), None,
+        raw.get("files", []), rows=aligned,
+        changes=[(aligned, "insert")] if change_feed else [],
+    )
+    return _dml_commit(
+        path, plan, meta=meta, expected_version=expected_version,
+        lock_timeout_s=lock_timeout_s, rebase_on_conflict=rebase_on_conflict,
+    )
 
 
 def _utc_epoch_day(v) -> "datetime.date":
@@ -4953,8 +5001,6 @@ def versioned_delete(
     ``n_files_dropped``. Time travel is untouched: prior snapshots
     list their own (shorter) DV sets, so a pinned reader still sees
     the rows."""
-    import math
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -4987,19 +5033,9 @@ def versioned_delete(
         )
         condition = _bounds_predicate(resolved)
     elif isinstance(condition, DataFrame):
-        # key frame cast to the TABLE's types BEFORE any stats
-        # pruning (the upsert `aligned` / merge `key_src` discipline):
-        # a castable-but-different key type would derive buckets and
-        # bounds from a different canonical form than the rows the
-        # coercing anti-join below would delete — silent under-delete
-        table_type = {f.name: f.dataType for f in schema.fields}
-        condition = condition.select(
-            *[
-                F.col(c).cast(table_type[c]).alias(c)
-                if c in table_type else F.col(c)
-                for c in condition.columns
-            ]
-        )
+        # key frame in the TABLE's types before any stats pruning
+        # (see _in_table_types): silent under-delete otherwise
+        condition = _in_table_types(condition, schema)
         kcols = list(condition.columns)
         closed_refs, scan_entries, carried_open, n_segments, bounds0 = (
             _plan_key_candidates(
@@ -5046,73 +5082,37 @@ def versioned_delete(
     dropped_live = sum(
         int(e.get("rows", 0)) - int(e.get("dv_rows", 0)) for e in drop_entries
     )
-    total = sum(counts.values()) + dropped_live
-    new_rels = (
-        _stage_dv_files(
-            matched, path,
-            n_files=max(1, math.ceil(sum(counts.values()) / 5_000_000)),
-        )
-        if counts
-        else []
+    vectorized, unhit = _split_hit(scan_entries, counts)
+    plan = _DmlPlan(
+        "delete", base_v, man, man["schema"], closed_refs, n_segments,
+        carried_open + unhit, touched=vectorized,
+        dv=(matched, counts) if counts else None,
+        proof=proof,
+        markers={
+            "n_rows_deleted": str(sum(counts.values()) + dropped_live),
+            "n_files_scanned": str(len(scan_entries)),
+            "n_files_dropped": str(len(drop_entries)),
+        },
     )
-    new_entries = _extend_dvs(scan_entries + carried_open, counts, new_rels)
-    commit_meta = {
-        "op": "delete",
-        "n_files_rewritten": "0",
-        **_carried_markers(len(new_entries), closed_refs, n_segments),
-        "n_dv_files": str(len(new_rels)),
-        "n_rows_deleted": str(total),
-        "n_files_scanned": str(len(scan_entries)),
-        "n_files_dropped": str(len(drop_entries)),
-    }
     if change_feed:
         # deleted ROWS: the scan's hits plus the full content of
         # dropped files (their live rows are the delete — read once
         # here, the only IO a partition drop ever pays, and only when
         # a feed was asked for)
-        parts = []
         if hit is not None:
-            parts.append(hit.drop("__file", "__pos"))
+            plan.changes.append((hit.drop("__file", "__pos"), "delete"))
         if drop_entries:
-            parts.append(_read_entries(spark, path, drop_entries, schema))
-        cdc = parts[0]
-        for p in parts[1:]:
-            cdc = cdc.unionByName(p)
-        cdc = cdc.withColumn("_change_type", F.lit("delete"))
-        cdc_rels = _stage_aux_files(cdc, path, kind="cdc")
-        commit_meta["cdc_files"] = json.dumps(cdc_rels)
-    commit_meta.update(meta or {})
-    try:
-        return _commit_manifest(
-            path,
-            man["schema"],
-            new_entries,
-            commit_meta,
-            expected_version,
-            lock_timeout_s,
-            reuse_refs=closed_refs,
-        )
-    except LostRace:
-        # entry drops cannot be replayed by the DV rebase (it only
-        # extends vectors over the latest's entries) — refuse so the
-        # OCC loop re-derives instead of resurrecting dropped files
-        if (
-            not rebase_on_conflict
-            or not isinstance(expected_version, int)
-            or drop_entries
-        ):
-            raise
-        vectorized = [
-            e for e in scan_entries
-            if counts.get(os.path.basename(e["path"]), 0)
-        ]
-        return _rebase(
-            path, base_v=base_v, touched=vectorized,
-            touched_kind="vectorized", proof=proof,
-            carry=lambda fs: _extend_dvs(fs, counts, new_rels),
-            new_entries=[], schema_json=man["schema"],
-            commit_meta=commit_meta, lock_timeout_s=lock_timeout_s,
-        )
+            plan.changes.append(
+                (_read_entries(spark, path, drop_entries, schema), "delete")
+            )
+    # entry drops cannot be replayed by the DV rebase (it only extends
+    # vectors over the latest's entries) — a lost race then raises, so
+    # the OCC loop re-derives instead of resurrecting dropped files
+    return _dml_commit(
+        path, plan, meta=meta, expected_version=expected_version,
+        lock_timeout_s=lock_timeout_s,
+        rebase_on_conflict=rebase_on_conflict and not drop_entries,
+    )
 
 
 def versioned_replace_where(
@@ -5164,10 +5164,7 @@ def versioned_replace_where(
         table_partition_specs(path, version=base_v),
     )
     pred = _bounds_predicate(resolved)
-    table_type = {f.name: f.dataType for f in schema.fields}
-    aligned = batch.select(
-        *[F.col(c).cast(table_type[c]).alias(c) for c in table_cols]
-    )
+    aligned = _in_table_types(batch, schema)
     stray = aligned.filter(
         ~F.coalesce(pred.cast("boolean"), F.lit(False))
     ).limit(1).collect()
@@ -5183,47 +5180,28 @@ def versioned_replace_where(
     scan_entries, carried_open, drop_entries = _classify_for_delete(
         open_entries, resolved
     )
+    plan = _DmlPlan(
+        "replace_where", base_v, man, man["schema"], closed_refs, n_segments,
+        carried_open, touched=scan_entries, rows=aligned,
+        markers={"n_files_dropped": str(len(drop_entries))},
+    )
     matching = F.coalesce(pred.cast("boolean"), F.lit(False))
     if scan_entries:
         # boundary files: DV-applied read, non-matching rows survive
         # into the rewrite next to the batch
         boundary = _read_entries(spark, path, scan_entries, schema)
-        merged = boundary.filter(~matching).unionByName(aligned)
-    else:
-        merged = aligned
-    new_entries = _stage_data_files(
-        merged, path, mapping,
-        partition_by=table_partitioning(path, version=base_v),
-    )
-    commit_meta = {
-        "op": "replace_where",
-        "n_files_rewritten": str(len(scan_entries)),
-        "n_files_dropped": str(len(drop_entries)),
-        **_carried_markers(len(carried_open), closed_refs, n_segments),
-    }
+        plan.rows = boundary.filter(~matching).unionByName(aligned)
     if change_feed:
-        del_parts = []
+        plan.changes = [(aligned, "insert")]
         if scan_entries:
-            del_parts.append(boundary.filter(matching))
+            plan.changes.append((boundary.filter(matching), "delete"))
         if drop_entries:
-            del_parts.append(_read_entries(spark, path, drop_entries, schema))
-        cdc = aligned.withColumn("_change_type", F.lit("insert"))
-        for p in del_parts:
-            cdc = cdc.unionByName(
-                p.withColumn("_change_type", F.lit("delete"))
+            plan.changes.append(
+                (_read_entries(spark, path, drop_entries, schema), "delete")
             )
-        commit_meta["cdc_files"] = json.dumps(
-            _stage_aux_files(cdc, path, kind="cdc")
-        )
-    commit_meta.update(meta or {})
-    return _commit_manifest(
-        path,
-        man["schema"],
-        carried_open + new_entries,
-        commit_meta,
-        expected_version,
-        lock_timeout_s,
-        reuse_refs=closed_refs,
+    return _dml_commit(
+        path, plan, meta=meta, expected_version=expected_version,
+        lock_timeout_s=lock_timeout_s,
     )
 
 
@@ -5266,10 +5244,6 @@ def _stage_aux_files(
         rels.append(f"{_DATA_DIR}/{name}")
     shutil.rmtree(staged, ignore_errors=True)
     return rels
-
-
-def _stage_dv_files(df: DataFrame, path: str, *, n_files: int) -> list[str]:
-    return _stage_aux_files(df, path, kind="dv", n_files=n_files)
 
 
 def versioned_update(
@@ -5348,68 +5322,39 @@ def versioned_update(
     }
     if not counts:
         return base_v
-    hit_names = set(counts)
-    rewrite = [
-        e for e in scan_entries
-        if os.path.basename(e["path"]) in hit_names
-    ]
-    keep = [
-        e for e in scan_entries
-        if os.path.basename(e["path"]) not in hit_names
-    ]
+    rewrite, keep = _split_hit(scan_entries, counts)
     # pass 2: rewrite exactly the matched files, SET applied row-wise
     slice_df = _read_entries(spark, path, rewrite, schema)
-    updated = slice_df.select(
-        *[
-            (
-                F.when(cond_col, F.expr(set_map[f.name]))
-                .otherwise(F.col(f.name))
-                .cast(f.dataType)
-                .alias(f.name)
-                if f.name in set_map
-                else F.col(f.name)
-            )
-            for f in schema.fields
-        ]
+
+    # SET applies where the condition holds — every preimage row does,
+    # so one projection serves the rewrite and the postimages
+    set_proj = [
+        F.when(cond_col, F.expr(set_map[f.name]))
+        .otherwise(F.col(f.name))
+        .cast(f.dataType)
+        .alias(f.name)
+        if f.name in set_map
+        else F.col(f.name)
+        for f in schema.fields
+    ]
+    plan = _DmlPlan(
+        "update", base_v, man, man["schema"], closed_refs, n_segments,
+        keep + carried_open, touched=rewrite,
+        rows=slice_df.select(*set_proj),
+        markers={
+            "n_rows_updated": str(sum(counts.values())),
+            "n_files_scanned": str(len(scan_entries)),
+        },
     )
-    new_entries = _stage_data_files(
-        updated, path, mapping,
-        partition_by=table_partitioning(path, version=base_v),
-    )
-    commit_meta = {
-        "op": "update",
-        "n_files_rewritten": str(len(rewrite)),
-        **_carried_markers(
-            len(keep) + len(carried_open), closed_refs, n_segments
-        ),
-        "n_rows_updated": str(sum(counts.values())),
-        "n_files_scanned": str(len(scan_entries)),
-    }
     if change_feed:
         pre = slice_df.filter(cond_col).localCheckpoint(eager=True)
-        post = pre.select(
-            *[
-                (
-                    F.expr(set_map[f.name]).cast(f.dataType).alias(f.name)
-                    if f.name in set_map
-                    else F.col(f.name)
-                )
-                for f in schema.fields
-            ]
-        )
-        cdc = pre.withColumn(
-            "_change_type", F.lit("update_preimage")
-        ).unionByName(
-            post.withColumn("_change_type", F.lit("update_postimage"))
-        )
-        commit_meta["cdc_files"] = json.dumps(
-            _stage_aux_files(cdc, path, kind="cdc")
-        )
-    commit_meta.update(meta or {})
-    return _commit_manifest(
-        path, man["schema"], keep + carried_open + new_entries,
-        commit_meta, expected_version, lock_timeout_s,
-        reuse_refs=closed_refs,
+        plan.changes = [
+            (pre, "update_preimage"),
+            (pre.select(*set_proj), "update_postimage"),
+        ]
+    return _dml_commit(
+        path, plan, meta=meta, expected_version=expected_version,
+        lock_timeout_s=lock_timeout_s,
     )
 
 

@@ -434,12 +434,25 @@ class NdjsonSinkDataSource(DataSource):
 
 
 def register_all(spark) -> None:
-    """Register every skopje DataSource on a session (idempotent)."""
+    """Register every skopje DataSource on a session (idempotent).
+
+    The sources plan and write in Spark's Python workers, which import
+    ``skopje_spark`` by name. A driver may have made the package
+    importable only through ``sys.path``, which workers never see, so
+    the package's parent directory goes onto the ``PYTHONPATH`` that
+    every Python function registered from now on hands its workers."""
     from skopje_spark.sources.lakesource import (
         VersionedChangesDataSource,
         VersionedTableDataSource,
     )
 
+    env = spark.sparkContext.environment
+    root = os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__)
+    )))
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([root, *paths])
     try:
         # runtime-settable; required for pushFilters to be honored
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")

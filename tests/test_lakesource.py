@@ -862,3 +862,46 @@ def test_connector_plans_exactly_like_read_where(spark, lake):
         assert sorted(map(tuple, got.collect())) == sorted(
             map(tuple, native.collect())
         ), bounds
+
+
+def test_connector_write_from_another_cwd_without_pythonpath(tmp_path):
+    """Spark's Python workers import ``skopje_spark`` by name, so
+    registration must give them the package's location: a driver that
+    makes the package importable only through ``sys.path`` — run from
+    another working directory, with no ``PYTHONPATH`` — still writes
+    through the connector and reads the rows back."""
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    table = str(tmp_path / "t")
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from pyspark.sql import SparkSession
+        from skopje_spark.sources.pysource import register_all
+
+        spark = (
+            SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.driver.memory", "1g")
+            .getOrCreate()
+        )
+        register_all(spark)
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string") \\
+            .write.format("skopje_versioned").option("path", {table!r}) \\
+            .mode("append").save()
+        rows = spark.read.format("skopje_versioned") \\
+            .option("path", {table!r}).load().collect()
+        print("ROWS", sorted(tuple(r) for r in rows))
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    done = subprocess.run(
+        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert "ROWS [(1, 'a'), (2, 'b')]" in done.stdout, done.stderr[-4000:]

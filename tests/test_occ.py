@@ -389,6 +389,92 @@ def test_append_rebase_carries_segments_unopened(
     assert len(rows) == 82
 
 
+def test_dml_rebase_opens_only_touched_and_changed_segments(
+    spark, tmp_path, monkeypatch
+):
+    """A rebased upsert, merge and key-frame delete each lose their CAS
+    to a key-disjoint append. Each opens only the segments its plan
+    opened, the latest's segments the base lacks and the base's
+    segments the latest lacks; every other segment of the latest rides
+    into the rebased commit by reference, and the rows equal the serial
+    result."""
+    import builtins
+    import json
+
+    import skopje_spark.sinks.versioned as V
+    from skopje_spark.sinks.versioned import (
+        snapshot_meta,
+        versioned_append,
+        versioned_delete,
+        versioned_merge,
+        versioned_upsert,
+    )
+
+    monkeypatch.setattr(V, "_SEG_TARGET", 4)
+
+    def refs(path, v):
+        with open(os.path.join(path, f"v={v}", "_MANIFEST.json")) as f:
+            return {r["path"] for r in json.load(f)["segments"]}
+
+    def holding(path, v, key):
+        """The version's segments with a file whose key range holds key."""
+        out = set()
+        for rel in refs(path, v):
+            with open(os.path.join(path, rel)) as f:
+                entries = json.load(f)
+            if any(
+                e["stats"]["k"]["min"] <= key <= e["stats"]["k"]["max"]
+                for e in entries
+            ):
+                out.add(rel)
+        return out
+
+    ops = {
+        "upsert": lambda p: versioned_upsert(
+            spark, p, _df(spark, [(3, "NEW")]), ["k"],
+            expected_version=0, rebase_on_conflict=True,
+        ),
+        "merge": lambda p: versioned_merge(
+            spark, p, _df(spark, [(3, "NEW")]), ["k"],
+            expected_version=0, rebase_on_conflict=True,
+        ),
+        "delete": lambda p: versioned_delete(
+            spark, p, spark.createDataFrame([(3,)], "k long"),
+            expected_version=0, rebase_on_conflict=True,
+        ),
+    }
+    for name, op in ops.items():
+        path = str(tmp_path / name)
+        _clustered(spark, path, n=320, files=32)
+        versioned_append(spark, path, _df(spark, [(1000, "theirs")]))  # v1
+        allowed = holding(path, 0, 3) | (refs(path, 0) ^ refs(path, 1))
+        seg_reads: list[str] = []
+
+        def counting_open(file, mode="r", *a, **kw):
+            name_ = os.path.basename(str(file))
+            if name_.startswith("seg-") and name_.endswith(".json") and (
+                "w" not in mode
+            ):
+                seg_reads.append(f"data/{name_}")
+            return builtins.open(file, mode, *a, **kw)
+
+        monkeypatch.setattr(V, "open", counting_open, raising=False)
+        v = op(path)
+        monkeypatch.delattr(V, "open")
+        assert set(seg_reads) <= allowed, (name, set(seg_reads) - allowed)
+        assert v == 2 and snapshot_meta(path, "rebased_onto", version=2) == "1"
+        opened = int(snapshot_meta(path, "n_segments_opened", version=2))
+        total = int(snapshot_meta(path, "n_segments_total", version=2))
+        assert opened < total, (name, opened, total)
+        expected = [(i, f"r{i}") for i in range(320) if i != 3] + [
+            (1000, "theirs")
+        ]
+        if name != "delete":
+            expected.append((3, "NEW"))
+        got = sorted(tuple(r) for r in versioned_read(spark, path).collect())
+        assert got == sorted(expected), name
+
+
 def test_dv_delete_rebase_on_disjoint_delete_race(spark, tmp_path):
     """Two DV deletes racing on DIFFERENT files: the loser rebases
     metadata-only and BOTH deletes are effective in the final

@@ -975,6 +975,55 @@ def test_versioned_merge_clause_semantics(spark, tmp_path):
     assert rows2[3] == (333, "x") and rows2[200] == (2, "y")
 
 
+def test_upsert_keeps_duplicate_updates_and_feeds_evolved_changes(
+    spark, tmp_path
+):
+    """The two upsert behaviours MERGE does not share: duplicate update
+    rows for one key all land (MERGE refuses them as a cardinality
+    violation), and an ``evolve_schema`` upsert that records its change
+    feed writes insert, update_preimage and update_postimage rows under
+    the evolved schema (preimages NULL-filled in the new column)."""
+    from skopje_spark.sinks.versioned import (
+        versioned_change_feed,
+        versioned_merge,
+    )
+
+    path = str(tmp_path / "upsdup")
+    versioned_write(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), path
+    )                                                                  # v0
+    dup = spark.createDataFrame(
+        [(2, "x"), (2, "y"), (3, "c"), (3, "d")], "k long, v string"
+    )
+    with pytest.raises(ValueError, match="cardinality"):
+        versioned_merge(spark, path, dup, ["k"])
+    versioned_upsert(spark, path, dup, ["k"])                          # v1
+    got = sorted(tuple(r) for r in versioned_read(spark, path).collect())
+    assert got == [(1, "a"), (2, "x"), (2, "y"), (3, "c"), (3, "d")]
+
+    wide = spark.createDataFrame(
+        [(1, "a2", 1.5), (4, "e", 4.5)], "k long, v string, score double"
+    )
+    v = versioned_upsert(
+        spark, path, wide, ["k"], evolve_schema=True, change_feed=True
+    )                                                                  # v2
+    feed = versioned_change_feed(
+        spark, path, from_version=v, to_version=v
+    ).collect()
+    assert sorted(
+        (r["_change_type"], r["k"], r["v"], r["score"]) for r in feed
+    ) == [
+        ("insert", 4, "e", 4.5),
+        ("update_postimage", 1, "a2", 1.5),
+        ("update_preimage", 1, "a", None),
+    ]
+    got = sorted(tuple(r) for r in versioned_read(spark, path).collect())
+    assert got == [
+        (1, "a2", 1.5), (2, "x", None), (2, "y", None),
+        (3, "c", None), (3, "d", None), (4, "e", 4.5),
+    ]
+
+
 def test_merge_null_clause_condition_is_not_a_delete(spark, tmp_path):
     """Three-valued MERGE clauses: a matched pair whose delete
     condition evaluates to NULL (e.g. a NULL op column in a changelog
@@ -1743,8 +1792,8 @@ def test_pruned_read_skips_whole_segments(spark, tmp_path, monkeypatch):
     can match — the rest are never parsed — and the rows are exact."""
     import skopje_spark.sinks.versioned as V
     from skopje_spark.sinks.versioned import (
-        _pruned_manifest_entries,
         versioned_pruned_read,
+        versioned_read_where,
     )
 
     monkeypatch.setattr(V, "_SEG_TARGET", 4)
@@ -1755,9 +1804,12 @@ def test_pruned_read_skips_whole_segments(spark, tmp_path, monkeypatch):
     versioned_write(
         df.repartitionByRange(80, "k").sortWithinPartitions("k"), path
     )
-    entries, _, opened, total = _pruned_manifest_entries(path, 0, "k", 50, 55)
+    m: dict = {}
+    rows = versioned_read_where(spark, path, {"k": (50, 55)}, metrics=m)
+    opened, total = m["segments_opened"], m["segments_total"]
     assert total >= 6 and opened < total  # segments skipped unopened
     # the opened segments still hold every candidate file
+    assert {r["k"] for r in rows.collect()} == set(range(50, 56))
     got = {
         r["k"]
         for r in versioned_pruned_read(spark, path, "k", 50, 55).collect()
