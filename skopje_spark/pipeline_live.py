@@ -72,6 +72,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from skopje_spark.sinks.expect import expectation_gate
 from skopje_spark.sinks.versioned import (
     latest_version,
     snapshot_meta,
@@ -224,13 +225,8 @@ class LivePipeline:
             "live_mode": node.mode,
             "live_full_refresh": "true",
         }
-        if node.expectations:
-            admitted, n_rows, q_df, exp_meta = _gate(
-                spark, out, node.expectations, node.on_violation, name,
-            )
-            meta.update(exp_meta)
-        else:
-            admitted, n_rows, q_df = out, None, None
+        admitted, n_rows, q_df, exp_meta = _gate(out, node)
+        meta.update(exp_meta)
         expected = latest_version(node.target)
         _stage_quarantine(spark, node, q_df, expected)
         v = versioned_write(
@@ -340,14 +336,8 @@ class LivePipeline:
             else ("replace" if node.mode == "replace" else "append")
         )
 
-        if node.expectations:
-            admitted, n_rows, q_df, exp_meta = _gate(
-                spark, out, node.expectations, node.on_violation,
-                node.name,
-            )
-            meta.update(exp_meta)
-        else:
-            admitted, n_rows, q_df = out, None, None
+        admitted, n_rows, q_df, exp_meta = _gate(out, node)
+        meta.update(exp_meta)
 
         # quarantine is staged BEFORE the cursor-carrying data commit:
         # a crash between the two replays the range and quarantines
@@ -431,13 +421,8 @@ def _run_upsert(self: "LivePipeline", spark: SparkSession,
         "live_node": node.name,
         "live_mode": node.mode,
     }
-    if node.expectations:
-        admitted, n_rows, q_df, exp_meta = _gate(
-            spark, out, node.expectations, node.on_violation, node.name,
-        )
-        base_meta.update(exp_meta)
-    else:
-        admitted, n_rows, q_df = out, None, None
+    admitted, n_rows, q_df, exp_meta = _gate(out, node)
+    base_meta.update(exp_meta)
     cursor_meta = {
         **base_meta,
         _CURSORS_KEY: json.dumps(new_cursors, sort_keys=True),
@@ -516,61 +501,14 @@ def _stage_quarantine(spark, node: LiveNode, q_df, expected) -> None:
         versioned_append(spark, qpath, q_df, meta=q_meta)
 
 
-def _gate(spark, df, expectations, on_violation, node_name):
-    """The expectation ladder for incremental node commits (the
-    append path cannot reuse expectations_write, which owns the whole
-    write): returns (admitted, rows_written, quarantine_df|None,
-    commit_meta)."""
-    from skopje_spark.sinks.expect import (
-        ExpectationViolation,
-        _flags,
-        expectation_metrics,
-    )
-
-    m = expectation_metrics(df, expectations)
-    total = sum(m["violations"].values())
-    exp_meta = {
-        "expectations": json.dumps(
-            {
-                n: {"condition": expectations[n],
-                    "violations": m["violations"][n]}
-                for n in expectations
-            },
-            sort_keys=True,
-        ),
-        "expectations_mode": on_violation,
-        "rows_in": str(m["rows_in"]),
-    }
-    if on_violation == "fail" and total:
-        raise ExpectationViolation(
-            f"live node {node_name!r}: {total} expectation violation(s) "
-            f"across {[n for n, v in m['violations'].items() if v]} — "
-            "nothing committed",
-            m["violations"],
-        )
-    if on_violation == "warn" or not total:
-        exp_meta["rows_written"] = str(m["rows_in"])
-        return df, m["rows_in"], None, exp_meta
-    flags = _flags(df, expectations)
-    from functools import reduce
-
-    all_ok = reduce(lambda a, b: a & b, flags.values())
-    admitted = df.filter(all_ok)
-    n_bad = int(
-        df.agg(F.sum((~all_ok).cast("long"))).collect()[0][0] or 0
-    )
-    exp_meta["rows_written"] = str(m["rows_in"] - n_bad)
-    q_df = None
-    if on_violation == "quarantine" and n_bad:
-        names = list(flags)
-        viol = F.filter(
-            F.array(
-                *[
-                    F.when(~flags[n], F.lit(n)).otherwise(F.lit(None))
-                    for n in names
-                ]
-            ),
-            lambda x: x.isNotNull(),
-        ).alias("_violations")
-        q_df = df.filter(~all_ok).select("*", viol)
-    return admitted, m["rows_in"] - n_bad, q_df, exp_meta
+def _gate(df, node: LiveNode):
+    """The expectation ladder of one node commit
+    (:func:`~skopje_spark.sinks.expect.expectation_gate`): returns
+    (admitted, rows_written, quarantine_df|None, commit_meta); a node
+    without expectations admits everything, uncounted."""
+    if not node.expectations:
+        return df, None, None, {}
+    return expectation_gate(
+        df, node.expectations, node.on_violation,
+        prefix=f"live node {node.name!r}: ",
+    )[:4]

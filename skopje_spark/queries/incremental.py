@@ -3829,7 +3829,8 @@ def q_versioned_dv_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: merge-on-read deletes are O(vectors) at write time; this
     is the read-amortization flip side priced right — a 100 TB table
     that deleted 1% of rows scattered over 2% of files rewrites those
-    files only, decided by a kilobyte manifest fold."""
+    files only, decided from the top-level manifest and the segments
+    that hold deletion vectors."""
     import atexit
     import shutil
     import tempfile

@@ -52,6 +52,7 @@ from skopje_spark.sinks.versioned import versioned_write
 
 __all__ = [
     "ExpectationViolation",
+    "expectation_gate",
     "expectation_metrics",
     "expectations_write",
 ]
@@ -108,6 +109,75 @@ def expectation_metrics(
     }
 
 
+def expectation_gate(
+    df: DataFrame,
+    expectations: dict[str, str],
+    on_violation: str,
+    *,
+    prefix: str = "",
+    suffix: str = "",
+) -> tuple:
+    """THE expectation ladder (module docstring) over ``df``, shared by
+    :func:`expectations_write` and live pipeline nodes: returns
+    ``(admitted, rows_written, quarantine rows or None, commit markers,
+    metrics)``. The markers are ``expectations`` (json: per-expectation
+    condition and violation count), ``expectations_mode``, ``rows_in``
+    and ``rows_written``; quarantine rows carry every source column plus
+    ``_violations``, the names of the expectations they failed. A
+    ``fail``-mode violation raises :class:`ExpectationViolation`, its
+    message framed by ``prefix`` and ``suffix`` (the caller's context).
+
+    Jobs: the metrics pass, plus — only when rows are dropped — one
+    sum of the any-violation flag (per-expectation counts overlap, so
+    ``rows_written`` needs its own count)."""
+    if on_violation not in _MODES:
+        raise ValueError(
+            f"on_violation={on_violation!r} must be one of {_MODES}"
+        )
+    flags = _flags(df, expectations)
+    m = expectation_metrics(df, expectations)
+    rows_in, violations = m["rows_in"], m["violations"]
+    total = sum(violations.values())
+    if on_violation == "fail" and total:
+        raise ExpectationViolation(
+            f"{prefix}{total} expectation violation(s) across "
+            f"{[n for n, v in violations.items() if v]} — nothing "
+            f"committed{suffix}",
+            violations,
+        )
+    markers = {
+        "expectations": json.dumps(
+            {
+                n: {"condition": expectations[n], "violations": violations[n]}
+                for n in expectations
+            },
+            sort_keys=True,
+        ),
+        "expectations_mode": on_violation,
+        "rows_in": str(rows_in),
+    }
+    admitted, n_written, bad = df, rows_in, None
+    if on_violation != "warn" and total:
+        all_ok = reduce(lambda a, b: a & b, flags.values())
+        admitted = df.filter(all_ok)
+        n_written = rows_in - int(
+            df.agg(F.sum((~all_ok).cast("long"))).collect()[0][0] or 0
+        )
+        if on_violation == "quarantine":
+            viol_names = F.filter(
+                F.array(
+                    *[
+                        F.when(~flag, F.lit(n)).otherwise(F.lit(None))
+                        for n, flag in flags.items()
+                    ]
+                ),
+                lambda x: x.isNotNull(),
+            ).alias("_violations")
+            bad = df.filter(~all_ok).select("*", viol_names)
+    markers["rows_written"] = str(n_written)
+    return admitted, n_written, bad, markers, m
+
+
 def expectations_write(
     df: DataFrame,
     path: str,
@@ -137,79 +207,28 @@ def expectations_write(
     ``<path>_quarantine``) with commit metadata back-pointing to the
     main commit — re-admission after a fix is a key-join away, and
     the quarantine table has history like any other."""
-    if on_violation not in _MODES:
-        raise ValueError(
-            f"on_violation={on_violation!r} must be one of {_MODES}"
-        )
-    flags = _flags(df, expectations)
-    m = expectation_metrics(df, expectations)
-    rows_in, violations = m["rows_in"], m["violations"]
-    total_viol = sum(violations.values())
-    if on_violation == "fail" and total_viol:
-        raise ExpectationViolation(
-            f"{total_viol} expectation violation(s) across "
-            f"{[n for n, v in violations.items() if v]} — nothing "
-            f"committed to {path}",
-            violations,
-        )
-    commit_meta = dict(meta or {})
-    commit_meta["expectations"] = json.dumps(
-        {
-            name: {"condition": expectations[name], "violations": violations[name]}
-            for name in expectations
-        },
-        sort_keys=True,
+    admitted, n_written, bad, markers, m = expectation_gate(
+        df, expectations, on_violation, suffix=f" to {path}"
     )
-    commit_meta["expectations_mode"] = on_violation
-
-    all_ok = reduce(lambda a, b: a & b, flags.values())
-    if on_violation == "warn" or not total_viol:
-        admitted = df
-        n_written = rows_in
-    else:
-        admitted = df.filter(all_ok)
-        n_written = None  # filled below without a second count job
-    # rows_written is derivable from the metrics pass: a row is
-    # dropped iff it violates ANY expectation — but per-expectation
-    # counts overlap, so the any-violation count needs its own sum.
-    if n_written is None:
-        n_written = rows_in - int(
-            df.agg(F.sum((~all_ok).cast("long"))).collect()[0][0] or 0
-        )
-    commit_meta["rows_in"] = str(rows_in)
-    commit_meta["rows_written"] = str(n_written)
-    v = versioned_write(admitted, path, meta=commit_meta, **write_kw)
-
+    v = versioned_write(
+        admitted, path, meta={**(meta or {}), **markers}, **write_kw
+    )
     q_version = None
-    n_quarantined = 0
-    if on_violation == "quarantine" and total_viol:
-        qpath = quarantine_path or f"{path.rstrip('/')}_quarantine"
-        names = list(flags)
-        viol_names = F.filter(
-            F.array(
-                *[
-                    F.when(~flags[n], F.lit(n)).otherwise(F.lit(None))
-                    for n in names
-                ]
-            ),
-            lambda x: x.isNotNull(),
-        ).alias("_violations")
-        bad = df.filter(~all_ok).select("*", viol_names)
-        n_quarantined = rows_in - n_written
+    if bad is not None:
         q_version = versioned_write(
             bad,
-            qpath,
+            quarantine_path or f"{path.rstrip('/')}_quarantine",
             meta={
                 "quarantine_of": path,
                 "quarantine_source_version": str(v),
-                "expectations": commit_meta["expectations"],
+                "expectations": markers["expectations"],
             },
         )
     return {
         "version": v,
-        "rows_in": rows_in,
+        "rows_in": m["rows_in"],
         "rows_written": n_written,
-        "rows_quarantined": n_quarantined,
-        "violations": violations,
+        "rows_quarantined": m["rows_in"] - n_written if bad is not None else 0,
+        "violations": m["violations"],
         "quarantine_version": q_version,
     }

@@ -1738,6 +1738,17 @@ def snapshot_meta(path: str, key: str, *, version: int) -> str | None:
         return None
 
 
+def _snapshot_markers(path: str, version: int) -> dict[str, str]:
+    """Every ``_meta_<key>`` marker of a snapshot, key → value."""
+    snap = os.path.join(path, f"v={version}")
+    out = {}
+    for f in os.listdir(snap):
+        if f.startswith("_meta_"):
+            with open(os.path.join(snap, f)) as fh:
+                out[f[len("_meta_"):]] = fh.read()
+    return out
+
+
 def table_constraints(path: str, *, version: int | None = None) -> dict[str, str]:
     """The CHECK constraints in force at a snapshot (name → SQL
     boolean expression), read from the kilobyte ``constraints``
@@ -3879,8 +3890,8 @@ def _commit_blind_append(
 
 @dataclass
 class _DmlPlan:
-    """What one row-level DML op decided over its base snapshot, for
-    :func:`_dml_commit` to stage and publish. ``touched`` are opened
+    """What one row-level DML op, compaction or purge decided over its
+    base snapshot, for :func:`_dml_commit` to stage and publish. ``touched`` are opened
     base entries the op replaces: rewritten away (their surviving rows
     are part of ``rows``) or, with ``dv``, kept with their deletion
     vectors extended. ``carried`` are the other opened base entries,
@@ -3903,6 +3914,9 @@ class _DmlPlan:
     # or None for an opaque predicate that refuses any added file
     proof: tuple | None = None
     markers: dict = field(default_factory=dict)
+    # staged files per partition tuple: a compaction spreads its file
+    # budget so a big partition never funnels into one writer task
+    files_per_partition: int = 1
 
 
 def _dml_commit(
@@ -3915,12 +3929,16 @@ def _dml_commit(
     rebase_on_conflict: bool = False,
 ) -> int:
     """THE commit tail of the six row-level DML ops (upsert, merge,
-    append, delete, replace_where, update): stage ``plan.rows`` as data
-    files in the table's layout and ``plan.dv``'s positions as
-    deletion-vector sidecars, record the change feed (each frame
-    conformed to the published schema and labelled ``_change_type``),
-    build the markers and publish through :func:`_commit_manifest`,
-    closed segments by reference.
+    append, delete, replace_where, update) and of compaction and purge
+    (:func:`_compact_commit`): stage ``plan.rows`` as data files in the
+    table's layout and ``plan.dv``'s positions as deletion-vector
+    sidecars, record the change feed (each frame conformed to the
+    published schema and labelled ``_change_type``), build the markers
+    and publish through :func:`_commit_manifest`, closed segments by
+    reference. A compaction moves content without changing it, so the
+    base commit's markers (a view's ``base_version``, a stream's batch
+    id) stay true: they are its lowest marker layer, all but the
+    base's ``commit_ts``.
 
     A lost CAS race with ``rebase_on_conflict`` (guarded mode only)
     re-targets the already-staged commit at the new latest: an append,
@@ -3937,6 +3955,7 @@ def _dml_commit(
     new_entries = [] if plan.rows is None else _stage_data_files(
         plan.rows, path, _schema_mapping(schema),
         partition_by=table_partitioning(path, version=plan.base_v),
+        files_per_partition=plan.files_per_partition,
     )
     touched_out: list[dict] = []
     dv_rels: list[str] = []
@@ -3948,7 +3967,12 @@ def _dml_commit(
         )
         touched_out = _extend_dvs(plan.touched, counts, dv_rels)
     kept = plan.carried + touched_out
+    inherited = {}
+    if plan.op == "compact":
+        inherited = _snapshot_markers(path, plan.base_v)
+        inherited.pop("commit_ts", None)
     commit_meta = {
+        **inherited,
         "op": plan.op,
         "n_files_rewritten": str(0 if plan.dv else len(plan.touched)),
         **_carried_markers(len(kept), plan.closed_refs, plan.n_segments),
@@ -7056,80 +7080,100 @@ def versioned_digest_frames(
     return inserts, deletes
 
 
-def _compact_scoped(
+def _compact_commit(
     spark: SparkSession,
     path: str,
-    v: int,
-    where: dict,
+    plan: _DmlPlan,
     *,
     target_files: int | None,
     target_file_bytes: int,
     guarded: bool,
-    cluster_by: list[str] | None,
+    lock_timeout_s: float,
+    cluster_by: list[str] | None = None,
+    zorder: bool = False,
 ) -> int:
-    """Partition-scoped OPTIMIZE: rewrite ONLY the files provably
-    fully inside ``where`` (same coverage proofs as the bounds
-    DELETE — exact on partition columns), carry everything else by
-    identical entries. The rewrite reads DV-applied, so the scoped
-    files shed their deletion vectors; rows are untouched."""
+    """THE rewrite of compaction and purge: read ``plan.touched`` (the
+    covered files) with their deletion vectors applied, lay the rows
+    out in ``target_files`` files — by default one per
+    ``target_file_bytes`` of LIVE bytes, since dead rows never come
+    back — and commit through :func:`_dml_commit` with
+    ``plan.carried`` kept as they are, ``plan.closed_refs`` by
+    reference and, when ``guarded``, a compare-and-swap on the base.
+
+    Layout: z-order over ``cluster_by`` with ``zorder`` (one extra
+    aggregate job for the column ranges), a range partition and sort
+    on ``cluster_by`` without, and with neither a ``coalesce`` — a
+    NARROW dependency, no shuffle — or a ``repartition`` when asked to
+    grow the file count. On a partitioned table the file budget is
+    spread across the covered partition tuples (keyed by transform
+    TARGET, as the entries record them).
+
+    A rewrite that carries no file replaces every file, so no earlier
+    layout epoch and no pre-rename physical name survives it: it
+    resets the partition-spec history and stages under the logical
+    column names."""
     import math
 
     from pyspark.sql.types import StructType
 
-    man = _read_manifest(path, v)
-    schema = StructType.fromJson(man["schema"])
-    mapping = _schema_mapping(schema)
-    spec = table_partitioning(path, version=v)
-    resolved = _resolve_bounds(
-        where, schema, mapping, table_partition_specs(path, version=v)
-    )
-    boundary, carried, covered = _classify_for_delete(
-        man["files"], resolved
-    )
-    carried = carried + boundary  # boundary files wait for full bounds
-    if not covered:
-        return v  # nothing provably in scope: no-op, not an empty commit
-    cur = _read_entries(spark, path, covered, schema)
-    if target_files is None:
-        nbytes = sum(int(e["bytes"]) for e in covered)
-        target_files = max(1, math.ceil(nbytes / target_file_bytes))
-    if cluster_by:
-        out = cur.repartitionByRange(
-            target_files, *cluster_by
-        ).sortWithinPartitions(*cluster_by)
-    else:
-        n_parts = cur.rdd.getNumPartitions()
-        out = (
-            cur.coalesce(target_files)
-            if target_files <= n_parts
-            else cur.repartition(target_files)
+    covered = plan.touched
+    if not plan.carried and not plan.closed_refs:
+        plan.schema_json = {**plan.schema_json, "fields": [
+            {**f, "metadata": {
+                k: v for k, v in (f.get("metadata") or {}).items()
+                if k != "physical"
+            }}
+            for f in plan.schema_json["fields"]
+        ]}
+        plan.markers["partition_specs"] = "[]"
+    plan.markers["source_version"] = str(plan.base_v)
+    if covered:
+        cur = _read_entries(
+            spark, path, covered, StructType.fromJson(plan.man["schema"])
         )
-    fpp = 1
-    if spec:
-        tgts = {
-            tuple(
-                (e.get("partition") or {}).get(t)
-                for t, _, _ in _parse_partition_spec(spec)
+        if target_files is None:
+            live_bytes = sum(
+                int(e["bytes"])
+                * (int(e["rows"]) - int(e.get("dv_rows", 0)))
+                // max(1, int(e["rows"]))
+                for e in covered
             )
-            for e in covered
-        }
-        fpp = max(1, target_files // max(1, len(tgts)))
-    new_entries = _stage_data_files(
-        out, path, mapping,
-        partition_by=spec or None, files_per_partition=fpp,
-    )
-    commit_meta = {
-        "op": "compact",
-        "source_version": str(v),
-        "n_files_compacted": str(len(covered)),
-        "n_files_carried": str(len(carried)),
-        "compact_where": json.dumps(
-            {k: repr(val) for k, val in where.items()}, sort_keys=True
-        ),
-    }
-    return _commit_manifest(
-        path, man["schema"], carried + new_entries, commit_meta,
-        v if guarded else _UNGUARDED, 600.0,
+            target_files = max(1, math.ceil(live_bytes / target_file_bytes))
+        if cluster_by and zorder:
+            from pyspark.sql import functions as F
+
+            from skopje_spark.sources.skipping import column_ranges, zorder_col
+
+            z = zorder_col(
+                [F.col(c) for c in cluster_by],
+                column_ranges(cur, list(cluster_by)),
+            )
+            plan.rows = (
+                cur.withColumn("__z", z)
+                .repartitionByRange(target_files, F.col("__z"))
+                .sortWithinPartitions("__z")
+                .drop("__z")
+            )
+        elif cluster_by:
+            plan.rows = cur.repartitionByRange(
+                target_files, *cluster_by
+            ).sortWithinPartitions(*cluster_by)
+        elif target_files <= cur.rdd.getNumPartitions():
+            plan.rows = cur.coalesce(target_files)
+        else:
+            plan.rows = cur.repartition(target_files)
+        spec = table_partitioning(path, version=plan.base_v)
+        if spec:
+            tgts = [t for t, _, _ in _parse_partition_spec(spec)]
+            n_parts = len({
+                tuple((e.get("partition") or {}).get(t) for t in tgts)
+                for e in covered
+            })
+            plan.files_per_partition = max(1, target_files // n_parts)
+    return _dml_commit(
+        path, plan, meta=None,
+        expected_version=plan.base_v if guarded else _UNGUARDED,
+        lock_timeout_s=lock_timeout_s,
     )
 
 
@@ -7146,7 +7190,8 @@ def versioned_compact(
 ) -> int:
     """Small-file compaction as a commit: rewrite the committed latest
     snapshot into fewer, right-sized files and commit the result as
-    the next version (markers ``op=compact``, ``source_version``).
+    the next version (markers ``op=compact``, ``source_version``,
+    ``n_files_compacted``, over the source commit's own markers).
     Content-identical by construction; history (and any pinned
     readers) untouched — compaction is just another snapshot.
 
@@ -7160,7 +7205,7 @@ def versioned_compact(
     latest; the default stays unguarded for single-writer pipelines.
 
     Sizing: ``target_files`` wins if given; otherwise
-    ceil(snapshot bytes / ``target_file_bytes``). The rewrite uses
+    ceil(live bytes / ``target_file_bytes``). The rewrite uses
     ``coalesce`` when reducing the file count — a NARROW dependency
     (each output task reads several input files, no shuffle), which is
     the whole economics of compaction at 100 TB: IO-bound copy, zero
@@ -7174,97 +7219,56 @@ def versioned_compact(
     key-clustered table degrades (rewritten files span wide key
     ranges, so partial-rewrite pruning and pruned reads elect ever
     more candidates); a clustered compaction restores the skip
-    economics in one pass. Content identical either way.
+    economics in one pass. ``zorder=True`` interleaves the columns
+    instead (one extra aggregate job for their ranges), so a narrow
+    range on ANY of them skips files. Content identical either way.
 
     ``where`` (column → value or ``(lo, hi)``, the bounds-dict shape)
-    SCOPES the compaction: only files PROVABLY fully inside the
-    bounds are rewritten — the one-hot-partition OPTIMIZE every
-    streaming ingest needs nightly — and every other file (boundary
-    files included: compaction is an optimization, partial coverage
-    can simply wait) rides into the new version by reference. At
-    100 TB this is the difference between re-copying the table and
-    re-copying one day."""
-    import math
+    SCOPES the compaction, clustering and z-order included: only files
+    PROVABLY fully inside the bounds are rewritten — the
+    one-hot-partition OPTIMIZE every streaming ingest needs nightly —
+    and every other file (boundary files included: compaction is an
+    optimization, partial coverage can simply wait) rides into the new
+    version unchanged; a manifest segment whose ref aggregates prove
+    it disjoint from the bounds is carried by reference, never
+    opened. At 100 TB this is the difference between re-copying the
+    table and re-copying one day, and between parsing the whole
+    manifest and parsing that day's segments. A scope nothing
+    provably covers is a no-op."""
+    from pyspark.sql.types import StructType
 
-    v = latest_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    snap = os.path.join(path, f"v={v}")
-    if where is not None:
-        return _compact_scoped(
-            spark, path, v, where,
-            target_files=target_files,
-            target_file_bytes=target_file_bytes,
-            guarded=guarded, cluster_by=cluster_by,
-        )
-    cur = versioned_read(spark, path, version=v)
-    if target_files is None:
-        # byte sizes come straight off the manifest — no file stats
-        nbytes = sum(e["bytes"] for e in _read_manifest(path, v)["files"])
-        target_files = max(1, math.ceil(nbytes / target_file_bytes))
-    if cluster_by and zorder:
-        from pyspark.sql import functions as F
-
-        from skopje_spark.sources.skipping import column_ranges, zorder_col
-
-        ranges = column_ranges(cur, list(cluster_by))
-        z = zorder_col([F.col(c) for c in cluster_by], ranges)
-        out = (
-            cur.withColumn("__z", z)
-            .repartitionByRange(target_files, F.col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-    elif cluster_by:
-        out = cur.repartitionByRange(
-            target_files, *cluster_by
-        ).sortWithinPartitions(*cluster_by)
+    base_v, man = _base_snapshot(path, _UNGUARDED)
+    if where is None:
+        closed, covered, n_segments = _split_segments(path, man, [])
+        carried: list[dict] = []
+        markers = {}
     else:
-        n_parts = cur.rdd.getNumPartitions()
-        out = (
-            cur.coalesce(target_files)
-            if target_files <= n_parts
-            else cur.repartition(target_files)
+        schema = StructType.fromJson(man["schema"])
+        resolved = _resolve_bounds(
+            where, schema, _schema_mapping(schema),
+            table_partition_specs(path, version=base_v),
         )
-    # inherit the source commit's markers (base_version for maintained
-    # views, stream_batch_id for stream ledgers, ...) so downstream
-    # maintenance that reads the LATEST commit's markers keeps working
-    # across a compaction; compact's own markers overlay them.
-    meta = {
-        f[len("_meta_"):]: open(os.path.join(snap, f)).read()
-        for f in os.listdir(snap)
-        if f.startswith("_meta_")
-    }
-    # the compacted commit gets its own clock — inheriting the source's
-    # commit_ts would backdate it in timestamp time travel
-    meta.pop("commit_ts", None)
-    meta.update({"op": "compact", "source_version": str(v)})
-    # compaction preserves the partition layout (the rewrite re-splits
-    # per partition value); the inherited marker stays truthful, and
-    # the file-count budget is spread across partitions so a big
-    # partition never funnels into one writer task
-    spec = table_partitioning(path, version=v)
-    fpp = 1
-    if spec:
-        # partition dicts are keyed by the transform TARGET (a hidden
-        # 'day=date(ts)' entry records {'day': ...}), so counting by
-        # raw spec strings would collapse every partition into one
-        # and over-split the rewrite
-        tgts = [t for t, _, _ in _parse_partition_spec(spec)]
-        n_parts = len(
-            {
-                tuple((e.get("partition") or {}).get(t) for t in tgts)
-                for e in _read_manifest(path, v)["files"]
-            }
-        ) or 1
-        fpp = max(1, target_files // n_parts)
-    if guarded:
-        return versioned_write(
-            out, path, meta=meta, expected_version=v, partition_by=spec,
-            files_per_partition=fpp,
+        closed, open_entries, n_segments = _split_segments(
+            path, man, _resolved_ref_bounds(resolved)
         )
-    return versioned_write(
-        out, path, meta=meta, partition_by=spec, files_per_partition=fpp
+        boundary, carried, covered = _classify_for_delete(
+            open_entries, resolved
+        )
+        carried += boundary  # boundary files wait for full bounds
+        if not covered:
+            return base_v  # nothing provably in scope: no empty commit
+        markers = {"compact_where": json.dumps(
+            {k: repr(val) for k, val in where.items()}, sort_keys=True
+        )}
+    markers["n_files_compacted"] = str(len(covered))
+    plan = _DmlPlan(
+        "compact", base_v, man, man["schema"], closed, n_segments, carried,
+        touched=covered, markers=markers,
+    )
+    return _compact_commit(
+        spark, path, plan, target_files=target_files,
+        target_file_bytes=target_file_bytes, guarded=guarded,
+        lock_timeout_s=600.0, cluster_by=cluster_by, zorder=zorder,
     )
 
 
@@ -7296,7 +7300,8 @@ def versioned_purge(
 
     Content-identical by construction (the rewrite reads exactly the
     surviving rows); history and pinned readers untouched; partition
-    layout preserved (the rewrite re-fans per recorded tuple).
+    layout preserved (the rewrite re-fans per recorded tuple); the
+    source commit's markers carry over as for :func:`versioned_compact`.
     ``guarded=True`` compare-and-swaps on the source version — the
     same compaction/ingest race contract as :func:`versioned_compact`.
     Returns the new version (or the current one when nothing
@@ -7304,21 +7309,23 @@ def versioned_purge(
 
     Scale: a 100 TB table that deleted 1% of rows scattered across 2%
     of its files rewrites those files only — O(affected bytes), not
-    O(table) — and the decision costs one kilobyte manifest fold."""
-    import math
-
-    from pyspark.sql.types import StructType
-
+    O(table). The decision reads the kilobyte top-level manifest and
+    parses only the segments whose ref records deleted rows
+    (``dv_rows > 0``; a ref that records no count is opened too):
+    O(segments holding vectors) driver JSON, every pristine segment
+    carried by reference."""
     if not 0.0 < min_dv_ratio <= 1.0:
         raise ValueError(f"min_dv_ratio must be in (0, 1]: {min_dv_ratio}")
-    v = latest_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, v)
+    base_v, man = _base_snapshot(path, _UNGUARDED)
+    refs = man.get("segments")
+    closed = [r for r in refs or [] if r.get("dv_rows", 1) == 0]
+    open_entries = man["files"] if refs is None else _ref_entries(
+        path, [r for r in refs if r.get("dv_rows", 1) != 0]
+    )
     dead: list[dict] = []
     covered: list[dict] = []
     carried: list[dict] = []
-    for e in man["files"]:
+    for e in open_entries:
         rows = int(e.get("rows", 0))
         dv = int(e.get("dv_rows", 0))
         if rows and dv >= rows:
@@ -7328,52 +7335,21 @@ def versioned_purge(
         else:
             carried.append(e)
     if not dead and not covered:
-        return v
-    new_entries: list[dict] = []
-    if covered:
-        schema = StructType.fromJson(man["schema"])
-        mapping = _schema_mapping(schema)
-        spec = table_partitioning(path, version=v)
-        cur = _read_entries(spark, path, covered, schema)
-        # live-byte estimate sizes the rewrite (dead rows won't come back)
-        live_bytes = sum(
-            int(e["bytes"])
-            * (int(e["rows"]) - int(e.get("dv_rows", 0)))
-            // max(1, int(e["rows"]))
-            for e in covered
-        )
-        target_files = max(1, math.ceil(live_bytes / target_file_bytes))
-        n_parts = cur.rdd.getNumPartitions()
-        out = (
-            cur.coalesce(target_files)
-            if target_files <= n_parts
-            else cur.repartition(target_files)
-        )
-        fpp = 1
-        if spec:
-            tgts = {
-                tuple(
-                    (e.get("partition") or {}).get(t)
-                    for t, _, _ in _parse_partition_spec(spec)
-                )
-                for e in covered
-            }
-            fpp = max(1, target_files // max(1, len(tgts)))
-        new_entries = _stage_data_files(
-            out, path, mapping,
-            partition_by=spec or None, files_per_partition=fpp,
-        )
-    commit_meta = {
-        "op": "compact",  # content-motion only: feed/IVM treat it as such
-        "source_version": str(v),
-        "purge_min_dv_ratio": repr(float(min_dv_ratio)),
-        "n_files_purged": str(len(covered)),
-        "n_files_dropped": str(len(dead)),
-        "n_files_carried": str(len(carried)),
-    }
-    return _commit_manifest(
-        path, man["schema"], carried + new_entries, commit_meta,
-        v if guarded else _UNGUARDED, lock_timeout_s,
+        return base_v
+    plan = _DmlPlan(
+        "compact",  # content-motion only: feed/IVM treat it as such
+        base_v, man, man["schema"], closed,
+        None if refs is None else len(refs), carried, touched=covered,
+        markers={
+            "purge_min_dv_ratio": repr(float(min_dv_ratio)),
+            "n_files_purged": str(len(covered)),
+            "n_files_dropped": str(len(dead)),
+        },
+    )
+    return _compact_commit(
+        spark, path, plan, target_files=None,
+        target_file_bytes=target_file_bytes, guarded=guarded,
+        lock_timeout_s=lock_timeout_s,
     )
 
 
@@ -7978,13 +7954,8 @@ def versioned_history(
     for v in _versions(path):
         if committed is None or v > committed:
             continue
-        snap = os.path.join(path, f"v={v}")
         n_files, n_bytes, n_rows, _ = _manifest_summary(path, v)
-        meta = {
-            f[len("_meta_"):]: open(os.path.join(snap, f)).read()
-            for f in os.listdir(snap)
-            if f.startswith("_meta_")
-        }
+        meta = _snapshot_markers(path, v)
         rows.append(
             (
                 v,

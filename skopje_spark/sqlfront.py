@@ -446,11 +446,11 @@ def _optimize_stmt(spark, stmt, tables, kwargs) -> int:
     """``OPTIMIZE <path> [WHERE col = lit [AND …]] [ZORDER BY (c, …)]``
     — the Delta maintenance spelling, routed to
     :func:`~skopje_spark.sinks.versioned.versioned_compact`:
-    bin-packing compaction by default, linear re-clustering with
+    bin-packing compaction by default, z-order re-clustering with
     ``ZORDER BY``, and a bounds-scoped rewrite with ``WHERE``
     (equality conjuncts over partition-ish columns — only files
-    provably inside the bounds rewrite; everything else rides by
-    reference)."""
+    provably inside the bounds rewrite, z-ordered when both clauses
+    are given; everything else rides by reference)."""
     from skopje_spark.sinks.versioned import versioned_compact
 
     m = re.match(

@@ -208,18 +208,29 @@ def test_stream_materialized_view_exactly_once(spark, tmp_path):
     )
 
 
-def test_compact_inherits_markers_and_view_still_refreshes(spark, tmp_path):
+@pytest.mark.parametrize(
+    "where", [None, {"grp": ("a", "z")}], ids=["full", "scoped"]
+)
+def test_compact_inherits_markers_and_view_still_refreshes(
+    spark, tmp_path, where
+):
     """Compacting a maintained view's own table must not strand it:
     the compaction commit inherits the source commit's markers
-    (base_version et al.), so the next refresh still resolves."""
+    (base_version et al.) on every scope, a ``where=`` compaction as
+    much as the full rewrite, so the next refresh still resolves."""
     base_p, view_p = str(tmp_path / "base"), str(tmp_path / "view")
     versioned_write(_base(spark, [(1, "a", 10), (2, "b", 20)]), base_p)
     kw = dict(table_keys=["id"], group_keys=["grp"], sum_cols=["v"])
     versioned_ivm_view(spark, base_p, view_p, **kw)
 
-    cv = versioned_compact(spark, view_p, target_files=1)
+    cv = versioned_compact(spark, view_p, target_files=1, where=where)
+    assert cv == 1
     assert snapshot_meta(view_p, "base_version", version=cv) == "0"
     assert snapshot_meta(view_p, "op", version=cv) == "compact"
+    assert snapshot_meta(view_p, "source_version", version=cv) == "0"
+    assert snapshot_meta(view_p, "commit_ts", version=cv) != snapshot_meta(
+        view_p, "commit_ts", version=0
+    )
 
     versioned_write(_base(spark, [(1, "a", 11), (2, "b", 20)]), base_p)
     versioned_ivm_view(spark, base_p, view_p, **kw)  # must not raise

@@ -475,6 +475,87 @@ def test_dml_rebase_opens_only_touched_and_changed_segments(
         assert got == sorted(expected), name
 
 
+def test_scoped_compaction_and_purge_open_only_their_segments(
+    spark, tmp_path, monkeypatch
+):
+    """A ``where=`` compaction opens no segment whose ref aggregates are
+    disjoint from the scope, and a purge opens no segment whose ref
+    records zero deleted rows; every other segment rides into the
+    commit by reference, and the rows equal the parent version's."""
+    import builtins
+    import json
+
+    import skopje_spark.sinks.versioned as V
+    from skopje_spark.sinks.versioned import (
+        snapshot_meta,
+        versioned_compact,
+        versioned_delete,
+        versioned_purge,
+    )
+
+    monkeypatch.setattr(V, "_SEG_TARGET", 4)
+
+    def refs(path, v):
+        with open(os.path.join(path, f"v={v}", "_MANIFEST.json")) as f:
+            return json.load(f)["segments"]
+
+    def rows(path, v):
+        return sorted(tuple(r) for r in versioned_read(
+            spark, path, version=v
+        ).collect())
+
+    def run_counting(fn):
+        seg_reads: list[str] = []
+
+        def counting_open(file, mode="r", *a, **kw):
+            name_ = os.path.basename(str(file))
+            if name_.startswith("seg-") and name_.endswith(".json") and (
+                "w" not in mode
+            ):
+                seg_reads.append(f"data/{name_}")
+            return builtins.open(file, mode, *a, **kw)
+
+        monkeypatch.setattr(V, "open", counting_open, raising=False)
+        try:
+            return fn(), set(seg_reads)
+        finally:
+            monkeypatch.delattr(V, "open")
+
+    def opened_lt_total(path, v):
+        opened = int(snapshot_meta(path, "n_segments_opened", version=v))
+        total = int(snapshot_meta(path, "n_segments_total", version=v))
+        return opened < total
+
+    # scoped compaction: segments whose k range misses [0, 59] stay shut
+    path = str(tmp_path / "compact")
+    _clustered(spark, path, n=320, files=32)
+    allowed = {
+        r["path"] for r in refs(path, 0)
+        if r["stats"]["k"]["min"] <= 59 and r["stats"]["k"]["max"] >= 0
+    }
+    v, seg_reads = run_counting(lambda: versioned_compact(
+        spark, path, where={"k": (0, 59)}, target_files=1
+    ))
+    assert v == 1 and int(snapshot_meta(path, "n_files_compacted", version=1))
+    assert seg_reads <= allowed, seg_reads - allowed
+    assert opened_lt_total(path, 1)
+    assert rows(path, 1) == rows(path, 0)
+
+    # purge: only segments whose ref records deleted rows are opened
+    path = str(tmp_path / "purge")
+    _clustered(spark, path, n=320, files=32)
+    versioned_delete(spark, path, "k IN (3, 4, 5)")  # v1: one file's DVs
+    allowed = {r["path"] for r in refs(path, 1) if r["dv_rows"]}
+    v, seg_reads = run_counting(lambda: versioned_purge(
+        spark, path, min_dv_ratio=0.1
+    ))
+    assert v == 2 and int(snapshot_meta(path, "n_files_purged", version=2))
+    assert seg_reads <= allowed, seg_reads - allowed
+    assert opened_lt_total(path, 2)
+    assert rows(path, 2) == rows(path, 1)
+    assert not [r for r in refs(path, 2) if r["dv_rows"]]
+
+
 def test_dv_delete_rebase_on_disjoint_delete_race(spark, tmp_path):
     """Two DV deletes racing on DIFFERENT files: the loser rebases
     metadata-only and BOTH deletes are effective in the final

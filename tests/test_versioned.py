@@ -1357,11 +1357,15 @@ def test_stream_apply_changes_exactly_once(spark, tmp_path):
     ) == rows
 
 
-def test_zorder_compaction_prunes_on_every_dimension(spark, tmp_path):
+@pytest.mark.parametrize("scope", ["full", "where", "sql"])
+def test_zorder_compaction_prunes_on_every_dimension(spark, tmp_path, scope):
     """versioned_compact(zorder=True): after the interleaved rewrite,
     a narrow range on EITHER clustered column skips most files —
     lexicographic clustering can only serve its leading column (its
-    trailing-column candidate set stays ~everything)."""
+    trailing-column candidate set stays ~everything). A ``where=``
+    scope keeps the z-order, through the API and through SQL
+    ``OPTIMIZE ... WHERE ... ZORDER BY``; the constant column ``p``
+    makes the scope cover every file."""
     from pyspark.sql import functions as F
 
     from skopje_spark.sinks.versioned import (
@@ -1369,6 +1373,7 @@ def test_zorder_compaction_prunes_on_every_dimension(spark, tmp_path):
         _read_manifest,
         versioned_compact,
     )
+    from skopje_spark.sqlfront import versioned_sql
 
     path = str(tmp_path / "vzo")
     n = 64
@@ -1377,20 +1382,30 @@ def test_zorder_compaction_prunes_on_every_dimension(spark, tmp_path):
         .select(
             (F.col("id") % n).cast("int").alias("a"),
             (F.col("id") / n).cast("int").alias("b"),
+            F.lit(0).alias("p"),
         )
     )
     versioned_write(df.repartition(16), path)
+    where = None if scope == "full" else {"p": 0}
 
     v_lex = versioned_compact(
-        spark, path, target_files=16, cluster_by=["a", "b"]
+        spark, path, target_files=16, cluster_by=["a", "b"], where=where
     )
     lex_files = _read_manifest(path, v_lex)["files"]
     lex_a, _ = _interval_split(lex_files, "a", 10, 13)
     lex_b, _ = _interval_split(lex_files, "b", 10, 13)
 
-    v_z = versioned_compact(
-        spark, path, target_files=16, cluster_by=["a", "b"], zorder=True
-    )
+    if scope == "sql":
+        v_z = versioned_sql(
+            spark, f"OPTIMIZE '{path}' WHERE p = 0 ZORDER BY (a, b)",
+            target_files=16,
+        )
+    else:
+        v_z = versioned_compact(
+            spark, path, target_files=16, cluster_by=["a", "b"],
+            zorder=True, where=where,
+        )
+    assert v_z == v_lex + 1
     z_files = _read_manifest(path, v_z)["files"]
     z_a, _ = _interval_split(z_files, "a", 10, 13)
     z_b, _ = _interval_split(z_files, "b", 10, 13)
