@@ -1725,22 +1725,19 @@ def crawl_ingest_stream(
     Read the output with ``spark.read.parquet(out_path + "/data")``
     (hive-partitioned by the batch subdirectory)."""
     from skopje_spark.sinks.versioned import stream_incarnation_id
-    from skopje_spark.streaming.streams import foreach_batch_sink
+    from skopje_spark.streaming.streams import (
+        batch_ledger_has,
+        batch_ledger_record,
+        foreach_batch_sink,
+    )
 
     stream_id = stream_incarnation_id(checkpoint)
     ledger = f"{out_path}/_batch_ledger"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
-
         spark = batch_df.sparkSession
-        if _os.path.isdir(ledger):
-            applied = {
-                (r["stream_id"], r["batch_id"])
-                for r in spark.read.parquet(ledger).collect()
-            }
-            if (stream_id, batch_id) in applied:
-                return
+        if batch_ledger_has(spark, ledger, stream_id, batch_id):
+            return
         batch = batch_df.select(id_col, text_col)
         if batch.isEmpty():
             return
@@ -1770,9 +1767,7 @@ def crawl_ingest_stream(
             f"{out_path}/data/batch={stream_id}-{batch_id}"
         )
         lsh_index_append(novel, index_path, id_col=id_col, text_col=text_col)
-        spark.createDataFrame(
-            [(stream_id, int(batch_id))], "stream_id string, batch_id long"
-        ).write.mode("append").parquet(ledger)
+        batch_ledger_record(spark, ledger, stream_id, batch_id)
 
     return foreach_batch_sink(
         stream_df, checkpoint, write_batch, available_now=available_now

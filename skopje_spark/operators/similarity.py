@@ -925,24 +925,20 @@ def ivf_apply_stream_batch(
     directly unit-testable): append the batch unless
     ``(stream_id, batch_id)`` is already in the ledger. Returns
     whether the batch was freshly applied."""
-    import os as _os
+    from skopje_spark.streaming.streams import (
+        batch_ledger_has,
+        batch_ledger_record,
+    )
 
     spark = batch_df.sparkSession
     ledger = f"{path}/_batch_ledger"
-    if _os.path.isdir(ledger):
-        applied = {
-            (r["stream_id"], r["batch_id"])
-            for r in spark.read.parquet(ledger).collect()
-        }
-        if (stream_id, batch_id) in applied:
-            return False
+    if batch_ledger_has(spark, ledger, stream_id, batch_id):
+        return False
     batch = batch_df.select(id_col, vec_col)
     if batch.isEmpty():
         return False
     summary = ivf_index_append(batch, path, id_col=id_col, vec_col=vec_col)
-    spark.createDataFrame(
-        [(stream_id, int(batch_id))], "stream_id string, batch_id long"
-    ).write.mode("append").parquet(ledger)
+    batch_ledger_record(spark, ledger, stream_id, batch_id)
     if on_batch is not None:
         on_batch(dict(summary, batch_id=batch_id))
     return True

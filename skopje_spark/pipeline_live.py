@@ -39,12 +39,19 @@ stop growing version debt).
 EXACTLY-ONCE BY COMMIT ATOMICITY: each node's input cursors
 (``{input: last_processed_version}``) ride the SAME manifest commit as
 the data they produced, under a compare-and-swap on the target's
-version. A crash before the commit leaves the cursor untouched (the
-rerun re-reads the same range); a crash after has the cursor advanced
-with the data. When a run needs MORE than one commit (an upsert run
-with both a merge and a key-frame delete), only the run's FINAL
-commit carries the cursor — a crash between the commits replays the
-whole range, and every apply step is idempotent by key. There is no
+version. ``live_cursors`` is a carried table property of the target,
+read from its latest commit alone: every later commit (a compaction,
+a constraint change, any manual write) carries it forward, and
+``vacuum`` can never retire it. A crash before the commit leaves the
+cursor untouched (the rerun re-reads the same range); a crash after
+has the cursor advanced with the data. When a run needs MORE than one
+commit (an upsert run with both a merge and a key-frame delete), only
+the run's FINAL commit advances the cursor (the first carries the old
+one) — a crash between the commits replays the whole range, and every
+apply step is idempotent by key. A target whose latest commit carries
+no cursors (one written before cursors were carried, or a table the
+pipeline never wrote) takes the first-run path: the node rebuilds it
+from the inputs' snapshots. There is no
 side-channel checkpoint to drift, and two racing runners resolve by
 CAS — one wins, one gets a loud CommitConflict. Quarantine rows are
 staged BEFORE the cursor-carrying commit (at-least-once for the
@@ -80,7 +87,6 @@ from skopje_spark.sinks.versioned import (
     versioned_change_feed,
     versioned_read,
     versioned_write,
-    _versions,
 )
 
 __all__ = ["LiveNode", "LivePipeline"]
@@ -140,19 +146,17 @@ class LiveNode:
 
 
 def _node_cursors(target: str) -> dict[str, int] | None:
-    """The node's recorded cursors: newest commit carrying the marker
-    (manual commits to the target — compactions, repairs — carry none
-    and are skipped). None before the first pipeline commit."""
+    """The node's recorded cursors, read from the target's latest
+    commit: ``live_cursors`` is a carried table property, so manual
+    commits (compactions, repairs, constraint changes) and ``vacuum``
+    keep it. None before the first pipeline commit — or on a target
+    whose latest commit carries none, which the first-run path
+    rebuilds from the inputs' snapshots."""
     committed = latest_version(target)
-    if committed is None:
-        return None
-    for v in sorted(_versions(target), reverse=True):
-        if v > committed:
-            continue
-        raw = snapshot_meta(target, _CURSORS_KEY, version=v)
-        if raw is not None:
-            return json.loads(raw)
-    return {}
+    raw = None if committed is None else snapshot_meta(
+        target, _CURSORS_KEY, version=committed
+    )
+    return None if raw is None else json.loads(raw)
 
 
 class LivePipeline:
@@ -379,8 +383,8 @@ def _run_upsert(self: "LivePipeline", spark: SparkSession,
 
     EXACTLY-ONCE: the advanced cursor rides ONLY the run's FINAL
     commit. When the run needs both a merge and a key-frame delete,
-    the merge commits WITHOUT the cursor marker — a crash between the
-    two leaves the cursor at its old value, so the rerun re-reads the
+    the merge carries the OLD cursors from its base — a crash between
+    the two leaves the cursor at its old value, so the rerun re-reads the
     same range and re-applies both steps (merge and key-delete are
     idempotent by key). Attaching the cursor to the first commit
     would make the rerun see the range consumed and the net-deleted
@@ -434,8 +438,8 @@ def _run_upsert(self: "LivePipeline", spark: SparkSession,
     has_ups = bool(admitted.limit(1).count())
     has_dels = bool(dels.limit(1).count())
     if has_ups and has_dels:
-        # merge WITHOUT the cursor marker — only the final (delete)
-        # commit advances the cursor; crash between them replays both
+        # the merge carries the old cursors — only the final (delete)
+        # commit advances them; crash between them replays both
         v = versioned_upsert(
             spark, node.target, admitted, node.keys, meta=base_meta,
             expected_version=expected,

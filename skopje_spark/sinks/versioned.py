@@ -89,6 +89,17 @@ def _stat_encode(v):
     return v
 
 
+_GLOB_META = re.compile(r"[\\\[\]{}*?]")
+
+
+def _pool_paths(path: str, rels) -> list[str]:
+    """Absolute paths of the pool files ``rels`` of the table at
+    ``path``, as Spark's file readers take them: they expand every
+    path as a Hadoop glob, so glob characters in the table's own path
+    (a table under ``t['p']``) are backslash-escaped."""
+    return [_GLOB_META.sub(r"\\\g<0>", os.path.join(path, r)) for r in rels]
+
+
 def _freshen(path: str) -> None:
     """Reset a pooled file's mtime to NOW. os.link and metadata-
     preserving copies carry the SOURCE file's mtime into the pool, but
@@ -1118,7 +1129,7 @@ def _enforce_constraints(
     if not cons or not entries:
         return
     batch = spark.read.parquet(
-        *[os.path.join(path, e["path"]) for e in entries]
+        *_pool_paths(path, [e["path"] for e in entries])
     )
     if mapping and any(mapping.get(c, c) != c for c in mapping):
         from pyspark.sql import functions as F
@@ -1551,6 +1562,15 @@ def _plan_read(
     return entries, n - len(closed), n
 
 
+# TABLE properties, not commit facts: every commit carries them from
+# its base until it sets them itself (:func:`_commit_manifest`)
+_TABLE_PROPS = (
+    "constraints", "stream_ledger", "column_stats", "partition_by",
+    "retired_physicals", "partition_specs", "value_index", "refs",
+    "parquet_codec", "live_cursors",
+)
+
+
 def _commit_manifest(
     path: str,
     schema_json: dict,
@@ -1574,12 +1594,17 @@ def _commit_manifest(
     (:func:`version_as_of_timestamp`). Caller-supplied markers win on
     collision (tests pin clocks that way).
 
-    TABLE properties (not commit facts) — CHECK constraints, the
-    streaming-writer batch ledger, layout, ledgers, indexes, refs,
-    codec — carry forward verbatim from the base (``expected_version``,
-    else the current latest, resolved once) until a commit sets them,
-    so e.g. CHECK constraints persist across every commit until
-    :func:`drop_check_constraint` rewrites them."""
+    :data:`_TABLE_PROPS` (not commit facts) — CHECK constraints,
+    layout, ledgers, indexes, refs, codec, and writer progress (the
+    stream batch ledger, a live pipeline node's input cursors) — carry
+    forward verbatim from the base (``expected_version``, else the
+    current latest, resolved once) until a commit sets them, so e.g.
+    CHECK constraints persist across every commit until
+    :func:`drop_check_constraint` rewrites them, and writer progress
+    survives any interleaved commit and any ``vacuum``. A commit's
+    ``stream_ledger`` names only its own writer's entry; it is laid
+    over the base's map, so writers sharing a table never erase each
+    other's progress."""
     meta = {"commit_ts": repr(time.time()), **(meta or {})}
     base = (
         expected_version
@@ -1587,13 +1612,15 @@ def _commit_manifest(
         else latest_version(path)
     )
     if base is not None:
-        for prop in ("constraints", "stream_ledger", "column_stats",
-                     "partition_by", "retired_physicals", "partition_specs",
-                     "value_index", "refs", "parquet_codec"):
-            if prop not in meta:
-                inherited = snapshot_meta(path, prop, version=base)
-                if inherited is not None:
-                    meta[prop] = inherited
+        for prop in _TABLE_PROPS:
+            inherited = snapshot_meta(path, prop, version=base)
+            if prop == "stream_ledger" and inherited and prop in meta:
+                meta[prop] = json.dumps(
+                    json.loads(inherited) | json.loads(meta[prop]),
+                    sort_keys=True,
+                )
+            if inherited is not None:
+                meta.setdefault(prop, inherited)
     return _publish(
         path,
         lambda staged: _write_manifest_dir(
@@ -2714,7 +2741,7 @@ def _maintain_value_index(
     # the property carries PHYSICAL names (rename-stable); pooled
     # files are written under physical names, so no mapping applies
     phys_cols = list(cfg.get("cols", []))
-    staged = [os.path.join(path, e["path"]) for e in entries]
+    staged = _pool_paths(path, [e["path"] for e in entries])
     per_col = _collect_value_sets(
         spark, staged, phys_cols, int(cfg.get("max_distinct", 64)),
     )
@@ -3014,7 +3041,7 @@ def versioned_value_index(
             for f in schema.fields
         ]
     )
-    paths = [os.path.join(path, e["path"]) for e in man0["files"]]
+    paths = _pool_paths(path, [e["path"] for e in man0["files"]])
     per_col = _collect_value_sets(
         spark, paths, [mapping.get(c, c) for c in cols], max_distinct,
         read_schema=phys_schema,
@@ -3253,7 +3280,7 @@ def _read_entries(spark: SparkSession, path: str, entries: list[dict], schema):
     if clean:
         parts.append(
             spark.read.schema(read_schema).parquet(
-                *[os.path.join(path, e["path"]) for e in clean]
+                *_pool_paths(path, [e["path"] for e in clean])
             )
         )
     if dirty:
@@ -3305,12 +3332,12 @@ def _apply_dvs(
 
     df = _with_row_identity(
         spark.read.schema(schema).parquet(
-            *[os.path.join(path, e["path"]) for e in dirty]
+            *_pool_paths(path, [e["path"] for e in dirty])
         )
     )
     dv_paths = sorted({p for e in dirty for p in e["dv_files"]})
     dv = (
-        spark.read.parquet(*[os.path.join(path, p) for p in dv_paths])
+        spark.read.parquet(*_pool_paths(path, dv_paths))
         .select("__file", "__pos")
         .distinct()
     )
@@ -3935,10 +3962,9 @@ def _dml_commit(
     sidecars, record the change feed (each frame conformed to the
     published schema and labelled ``_change_type``), build the markers
     and publish through :func:`_commit_manifest`, closed segments by
-    reference. A compaction moves content without changing it, so the
-    base commit's markers (a view's ``base_version``, a stream's batch
-    id) stay true: they are its lowest marker layer, all but the
-    base's ``commit_ts``.
+    reference. Durable state (constraints, layout, writer progress) is
+    carried by :func:`_commit_manifest`; every other marker is a fact
+    of the commit that records it, never copied from the base.
 
     A lost CAS race with ``rebase_on_conflict`` (guarded mode only)
     re-targets the already-staged commit at the new latest: an append,
@@ -3967,12 +3993,7 @@ def _dml_commit(
         )
         touched_out = _extend_dvs(plan.touched, counts, dv_rels)
     kept = plan.carried + touched_out
-    inherited = {}
-    if plan.op == "compact":
-        inherited = _snapshot_markers(path, plan.base_v)
-        inherited.pop("commit_ts", None)
     commit_meta = {
-        **inherited,
         "op": plan.op,
         "n_files_rewritten": str(0 if plan.dv else len(plan.touched)),
         **_carried_markers(len(kept), plan.closed_refs, plan.n_segments),
@@ -5405,7 +5426,7 @@ def _with_row_identity_entries(
     )
     df = _with_row_identity(
         spark.read.schema(read_schema).parquet(
-            *[os.path.join(path, e["path"]) for e in entries]
+            *_pool_paths(path, [e["path"] for e in entries])
         )
     )
     if renamed:
@@ -5419,7 +5440,7 @@ def _with_row_identity_entries(
     )
     if old_dvs:
         prior = (
-            spark.read.parquet(*[os.path.join(path, p) for p in old_dvs])
+            spark.read.parquet(*_pool_paths(path, old_dvs))
             .select("__file", "__pos")
             .distinct()
         )
@@ -5893,9 +5914,10 @@ def versioned_branch(
 
 # branch table properties adopted by main on publish — the audited
 # state is the WHOLE branch table, schema evolution and layout included
-_PUBLISH_PROPS = (
-    "constraints", "partition_by", "partition_specs",
-    "retired_physicals", "column_stats", "value_index", "parquet_codec",
+# (a branch's refs, stream ledger and live cursors are its own)
+_PUBLISH_PROPS = tuple(
+    p for p in _TABLE_PROPS
+    if p not in ("refs", "stream_ledger", "live_cursors")
 )
 
 # commit ops that change ONLY the refs map: the file set and every
@@ -6055,10 +6077,7 @@ class MergeConflict(CommitConflict):
 # property BOTH sides changed (differently) is a conflict. column_stats
 # is deliberately absent: stats are advisory and possibly stale on both
 # sides, so the merge keeps main's and lets the next ANALYZE refresh.
-_MERGE_PROPS = (
-    "constraints", "partition_by", "partition_specs",
-    "retired_physicals", "value_index", "parquet_codec",
-)
+_MERGE_PROPS = tuple(p for p in _PUBLISH_PROPS if p != "column_stats")
 
 
 def _three_way(fork_val, branch_val, main_val, what: str):
@@ -6431,6 +6450,21 @@ def versioned_merge_branch(
     )
 
 
+# commit ops with zero logical row changes, which every change-feed
+# reader skips: physical motion or a metadata-only property change
+# (rename serves each range in its as-recorded schema — consumers
+# spanning a rename map old names themselves, per
+# versioned_rename_column). Ref-only commits (tag/drop_ref/branch)
+# carry the file set verbatim. publish_branch is NOT here: it really
+# changes content, and with no recorded CDC sidecars it takes the
+# keyed snapshot-diff fallback (or raises loudly without keys).
+_ZERO_CHANGE_OPS = frozenset({
+    "compact", "rename_column", "set_constraint", "drop_constraint",
+    "analyze", "drop_column", "widen_column", "set_partition_spec",
+    "value_index", "refold_refs", "tag", "drop_ref", "branch",
+})
+
+
 def versioned_change_feed(
     spark: SparkSession,
     path: str,
@@ -6486,20 +6520,7 @@ def versioned_change_feed(
                 "the gap) or run vacuum with retention covering the "
                 "slowest consumer's cursor."
             )
-        op = snapshot_meta(path, "op", version=v) or ""
-        if op in ("compact", "rename_column", "set_constraint",
-                  "drop_constraint", "analyze", "drop_column",
-                  "widen_column", "set_partition_spec", "value_index",
-                  "refold_refs", "tag", "drop_ref", "branch"):
-            # physical motion or metadata-only property change: zero
-            # logical row changes (rename serves each range in its
-            # as-recorded schema — consumers spanning a rename map
-            # old names themselves, per versioned_rename_column).
-            # Ref-only commits (tag/drop_ref/branch) carry the file
-            # set verbatim — nothing to feed. publish_branch is NOT
-            # here: it really changes content, and with no recorded
-            # CDC sidecars it takes the keyed snapshot-diff fallback
-            # below (or raises loudly without keys).
+        if snapshot_meta(path, "op", version=v) in _ZERO_CHANGE_OPS:
             continue
         cdc_json = snapshot_meta(path, "cdc_files", version=v)
         if v == 0:
@@ -6507,13 +6528,12 @@ def versioned_change_feed(
                 "_change_type", F.lit("insert")
             )
         elif cdc_json is not None:
-            rels = json.loads(cdc_json)
             man = _read_manifest(path, v)
             schema = StructType.fromJson(man["schema"]).add(
                 "_change_type", "string"
             )
             frame = spark.read.schema(schema).parquet(
-                *[os.path.join(path, r) for r in rels]
+                *_pool_paths(path, json.loads(cdc_json))
             )
         else:
             if keys is None:
@@ -6794,28 +6814,39 @@ def stream_incarnation_id(checkpoint: str) -> str:
     ).hexdigest()[:12]
 
 
+def _stream_ledger(path: str, version: int | None) -> dict[str, int]:
+    """The ``stream_ledger`` table property at ``version``: writer id
+    → the last batch id it committed (empty before any)."""
+    raw = None if version is None else snapshot_meta(
+        path, "stream_ledger", version=version
+    )
+    return json.loads(raw or "{}")
+
+
+def _ledger_entry(
+    path: str, version: int | None, stream_id: str, batch_id: int
+) -> dict[str, str] | None:
+    """THE replay check of every ledgered stream commit: the batch's
+    own ``stream_ledger`` entry, to commit WITH its data (a post-commit
+    stamp would leave a crash window where a replay re-applies the
+    batch), or None when the ledger at ``version`` already covers
+    ``batch_id`` (a replay)."""
+    if _stream_ledger(path, version).get(stream_id, -1) >= batch_id:
+        return None
+    return {"stream_ledger": json.dumps({stream_id: int(batch_id)})}
+
+
 def last_stream_batch(path: str, *, stream_id: str | None = None) -> int | None:
     """Highest micro-batch id durably applied to the table BY the
-    given stream incarnation: walk committed versions newest-first for
-    the most recent commit whose ``stream_batch_id`` marker matches
-    ``stream_id`` (manual commits carry no marker; other incarnations'
-    commits don't constrain this one). ``stream_id=None`` returns the
-    newest stream-marked commit's batch id regardless of incarnation
-    (display/diagnostics). O(#versions) file reads — bounded by vacuum
-    retention."""
-    committed = latest_version(path)
-    if committed is None:
-        return None
-    for v in sorted(_versions(path), reverse=True):
-        if v > committed:
-            continue  # written but never committed
-        m = snapshot_meta(path, "stream_batch_id", version=v)
-        if m is None:
-            continue
-        sid, _, bid = m.rpartition(":")
-        if stream_id is None or sid == stream_id:
-            return int(bid)
-    return None
+    given stream incarnation, read from the latest commit's carried
+    ``stream_ledger`` property: one marker read, however long the
+    history and whatever ``vacuum`` retired. ``stream_id=None`` returns
+    the highest batch id of any writer in the ledger
+    (display/diagnostics)."""
+    led = _stream_ledger(path, latest_version(path))
+    if stream_id is None:
+        return max(led.values(), default=None)
+    return led.get(stream_id)
 
 
 def apply_stream_batch(
@@ -6835,17 +6866,16 @@ def apply_stream_batch(
     passes through to the MERGE so every fresh stream commit records
     its logical changes (the creation commit needs no recording —
     version 0 is served as inserts by the feed reader)."""
-    last = last_stream_batch(path, stream_id=stream_id)
-    fresh = last is None or batch_id > last
-    if fresh:
-        meta = {"stream_batch_id": f"{stream_id}:{batch_id}"}
-        if latest_version(path) is None:
-            versioned_write(batch_df, path, meta=meta)
-        else:
-            versioned_upsert(
-                batch_df.sparkSession, path, batch_df, keys, meta=meta,
-                change_feed=change_feed,
-            )
+    committed = latest_version(path)
+    meta = _ledger_entry(path, committed, stream_id, batch_id)
+    if meta is not None and committed is None:
+        versioned_write(batch_df, path, meta=meta)
+    elif meta is not None:
+        versioned_upsert(
+            batch_df.sparkSession, path, batch_df, keys, meta=meta,
+            change_feed=change_feed,
+        )
+    fresh = meta is not None
     # on_commit runs even for replay-SKIPPED batches: a crash in the
     # window between the base commit and the hook's own work would
     # otherwise never be healed (the replay skips the commit and would
@@ -6876,13 +6906,16 @@ def versioned_stream_upsert(
     Structured Streaming guarantees at-least-once delivery to
     foreachBatch — a batch that crashed mid-apply is REPLAYED with
     the same ``batch_id`` under the SAME checkpoint. Each successful
-    apply commits ``<incarnation>:<batch_id>`` as a
-    ``stream_batch_id`` marker inside the snapshot (written before
-    the pointer swap, so data and ledger are atomic together), where
-    the incarnation is :func:`stream_incarnation_id` of the
+    apply commits ``{<incarnation>: <batch_id>}`` into the carried
+    ``stream_ledger`` table property inside the snapshot (written
+    before the pointer swap, so data and ledger are atomic together),
+    where the incarnation is :func:`stream_incarnation_id` of the
     checkpoint. A replayed batch whose id is <= this incarnation's
-    ledger is skipped without touching the table — same-checkpoint
-    replays leave BOTH row content and version history identical.
+    ledger entry is skipped without touching the table —
+    same-checkpoint replays leave BOTH row content and version history
+    identical. The ledger is read from the latest commit alone, so
+    interleaved commits and ``vacuum`` never lose it, and streams with
+    different checkpoints keep separate entries on one table.
 
     A job restarted with a FRESH checkpoint is a NEW incarnation:
     batch ids renumber from 0 over re-read (and possibly new) data,
@@ -6894,11 +6927,6 @@ def versioned_stream_upsert(
 
     First batch on an empty table commits v=0 directly; later batches
     run the anti-join MERGE. Returns the streaming query.
-
-    Retention caveat: the ledger lives in the commits themselves, so
-    ``vacuum`` must retain at least this incarnation's newest
-    stream-marked commit; one stream per table (single-writer, as for
-    the store itself).
 
     ``on_commit(spark, batch_df, fresh)``, if given, runs after EVERY
     batch — fresh or replay-skipped (``fresh`` False) — so idempotent
@@ -6939,6 +6967,13 @@ def vacuum(
     Run it with retention matched to the longest running reader — a
     reader pinned to a vacuumed version fails on its next file open,
     exactly as in Delta.
+
+    Writer progress — stream batch ledgers, live-pipeline input
+    cursors — is a carried table property of the latest commit, which
+    is always retained, so no keep-window strands a writer. A
+    maintained view's ``base_version`` is different: it names a
+    version of its BASE table, which the base's keep-window must
+    cover.
 
     ``dry_run=True`` reports the versions that WOULD be removed and
     deletes nothing — the safety check before vacuuming a table whose
@@ -7111,12 +7146,21 @@ def _compact_commit(
     A rewrite that carries no file replaces every file, so no earlier
     layout epoch and no pre-rename physical name survives it: it
     resets the partition-spec history and stages under the logical
-    column names."""
+    column names.
+
+    A maintained view's ``base_version`` is the one source-commit
+    marker a rewrite keeps: the view's content is unchanged, so its
+    next refresh still starts there. It is deliberately no carried
+    table property — a manual write to the view must still strand
+    that refresh loudly."""
     import math
 
     from pyspark.sql.types import StructType
 
     covered = plan.touched
+    view_base = snapshot_meta(path, "base_version", version=plan.base_v)
+    if view_base is not None:
+        plan.markers["base_version"] = view_base
     if not plan.carried and not plan.closed_refs:
         plan.schema_json = {**plan.schema_json, "fields": [
             {**f, "metadata": {
@@ -7191,7 +7235,8 @@ def versioned_compact(
     """Small-file compaction as a commit: rewrite the committed latest
     snapshot into fewer, right-sized files and commit the result as
     the next version (markers ``op=compact``, ``source_version``,
-    ``n_files_compacted``, over the source commit's own markers).
+    ``n_files_compacted``, plus a maintained view's ``base_version``;
+    table properties carry as on every commit).
     Content-identical by construction; history (and any pinned
     readers) untouched — compaction is just another snapshot.
 
@@ -7300,8 +7345,8 @@ def versioned_purge(
 
     Content-identical by construction (the rewrite reads exactly the
     surviving rows); history and pinned readers untouched; partition
-    layout preserved (the rewrite re-fans per recorded tuple); the
-    source commit's markers carry over as for :func:`versioned_compact`.
+    layout preserved (the rewrite re-fans per recorded tuple); markers
+    as for :func:`versioned_compact`.
     ``guarded=True`` compare-and-swaps on the source version — the
     same compaction/ingest race contract as :func:`versioned_compact`.
     Returns the new version (or the current one when nothing
@@ -7627,21 +7672,17 @@ def versioned_stream_apply_changes(
     sid = stream_incarnation_id(checkpoint)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last = last_stream_batch(path, stream_id=sid)
-        if last is not None and batch_id <= last:
+        committed = latest_version(path)
+        meta = _ledger_entry(path, committed, sid, batch_id)
+        if meta is None:
             return  # replay: already applied under this incarnation
-        meta = {"stream_batch_id": f"{sid}:{batch_id}"}
-        spark = batch_df.sparkSession
-        if latest_version(path) is None:
+        if committed is None:
             # bootstrap: first batch's non-delete rows create the table
             first = batch_df.filter(_F.col(op_col) != "D").drop(op_col)
             versioned_write(first, path, meta=meta)
             return
-        # the ledger marker rides INSIDE the commit (atomic with the
-        # data via the pointer swap) — a post-commit stamp would leave
-        # a crash window where a replay re-applies the batch
         apply_changelog_batch(
-            spark, path, batch_df, keys, op_col=op_col,
+            batch_df.sparkSession, path, batch_df, keys, op_col=op_col,
             change_feed=change_feed, meta=meta,
         )
 

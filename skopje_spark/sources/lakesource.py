@@ -70,14 +70,6 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-# metadata-only commit ops: they move or relabel bytes but produce
-# zero logical changes, so the CDF stream skips them outright
-# (op markers as written by sinks/versioned.py)
-_ZERO_CHANGE_OPS = {"compact", "rename_column", "set_constraint",
-                    "drop_constraint", "analyze", "drop_column",
-                    "widen_column", "set_partition_spec", "value_index",
-                    "refold_refs", "tag", "drop_ref", "branch"}
-
 
 def _logical_schema(man: dict) -> StructType:
     """The manifest's schema with per-field metadata (the physical
@@ -840,12 +832,13 @@ class VersionedStreamWriter(DataSourceStreamArrowWriter):
     the ``stream_ledger`` marker maps ``streamId`` → last committed
     batchId, so a replayed micro-batch (crash between sink commit and
     checkpoint advance) is recognized and its files dropped instead
-    of double-appended — the same in-commit-ledger idea as
-    ``versioned_stream_upsert``, surfaced through Spark's native
-    streaming sink contract. The commit runs the batch writer's
-    validation and the store's one blind-append CAS loop
-    (``versioned._commit_blind_append``), which re-checks the ledger
-    on every try against the version it is about to commit over.
+    of double-appended — the same ledger, and the same check
+    (``versioned._ledger_entry``), as ``versioned_stream_upsert``,
+    surfaced through Spark's native streaming sink contract. The
+    commit runs the batch writer's validation and the store's one
+    blind-append CAS loop (``versioned._commit_blind_append``), which
+    re-checks the ledger on every try against the version it is
+    about to commit over; the commit names only this stream's entry.
 
     Two different queries writing one table must set distinct
     ``streamId`` options (default ``"default"``) — the ledger is
@@ -862,25 +855,18 @@ class VersionedStreamWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int) -> None:
         from skopje_spark.sinks.versioned import (
             _commit_blind_append,
+            _ledger_entry,
             latest_version,
-            snapshot_meta,
         )
 
         entries = _staged_entries(messages)
 
         def ledger(base: int | None) -> dict | None:
-            raw = None if base is None else snapshot_meta(
-                self.path, "stream_ledger", version=base
-            )
-            led = json.loads(raw or "{}")
-            if int(led.get(self.stream_id, -1)) >= batchId:
+            entry = _ledger_entry(self.path, base, self.stream_id, batchId)
+            if entry is None:
                 _drop_staged(self.path, entries)  # replay: already landed
                 return None
-            led[self.stream_id] = batchId
-            return {
-                "batch_id": str(batchId),
-                "stream_ledger": json.dumps(led, sort_keys=True),
-            }
+            return {"batch_id": str(batchId), **entry}
 
         if ledger(latest_version(self.path)) is None:
             return  # checked before paying for validation
@@ -985,6 +971,7 @@ class VersionedChangesStreamReader(DataSourceStreamReader):
         self, start: dict, end: dict
     ) -> Sequence[InputPartition]:
         from skopje_spark.sinks.versioned import (
+            _ZERO_CHANGE_OPS,
             _read_manifest,
             snapshot_meta,
         )

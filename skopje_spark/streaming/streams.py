@@ -22,6 +22,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -286,6 +287,32 @@ def foreach_batch_sink(stream_df: DataFrame, checkpoint: str,
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def batch_ledger_has(spark: SparkSession, ledger: str, stream_id: str,
+                     batch_id: int) -> bool:
+    """Whether the parquet batch ledger at ``ledger`` (rows
+    ``stream_id string, batch_id long``) records this batch — the
+    replay check of a foreachBatch sink whose output is not a
+    versioned table. Scoped by the checkpoint's incarnation id
+    (``versioned.stream_incarnation_id``), like the store's
+    ``stream_ledger`` property."""
+    if not os.path.isdir(ledger):
+        return False
+    return not spark.read.parquet(ledger).filter(
+        (F.col("stream_id") == stream_id)
+        & (F.col("batch_id") == int(batch_id))
+    ).isEmpty()
+
+
+def batch_ledger_record(spark: SparkSession, ledger: str, stream_id: str,
+                        batch_id: int) -> None:
+    """Append this batch to the parquet batch ledger at ``ledger``;
+    call it AFTER the batch's writes, so a crash in between replays
+    the batch instead of losing it."""
+    spark.createDataFrame(
+        [(stream_id, int(batch_id))], "stream_id string, batch_id long"
+    ).write.mode("append").parquet(ledger)
 
 
 def stream_static_join(stream_df: DataFrame, static_df: DataFrame,

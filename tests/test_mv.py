@@ -215,9 +215,9 @@ def test_compact_inherits_markers_and_view_still_refreshes(
     spark, tmp_path, where
 ):
     """Compacting a maintained view's own table must not strand it:
-    the compaction commit inherits the source commit's markers
-    (base_version et al.) on every scope, a ``where=`` compaction as
-    much as the full rewrite, so the next refresh still resolves."""
+    the compaction commit keeps the source commit's ``base_version``
+    on every scope, a ``where=`` compaction as much as the full
+    rewrite, so the next refresh still resolves."""
     base_p, view_p = str(tmp_path / "base"), str(tmp_path / "view")
     versioned_write(_base(spark, [(1, "a", 10), (2, "b", 20)]), base_p)
     kw = dict(table_keys=["id"], group_keys=["grp"], sum_cols=["v"])

@@ -109,6 +109,35 @@ def test_append_node_delta_is_only_new_rows(spark, tmp_path):
     assert seen[1] == [5, 6, 7]
 
 
+def test_append_node_cursors_survive_metadata_commits_and_vacuum(
+    spark, tmp_path
+):
+    """The cursors are a carried table property of the target: two
+    metadata commits and a vacuum that retires every pipeline-written
+    version must not make the next run re-append the input from v0."""
+    from skopje_spark.sinks.versioned import (
+        drop_check_constraint,
+        set_check_constraint,
+        vacuum,
+    )
+
+    src = str(tmp_path / "src")
+    tgt = str(tmp_path / "t")
+    _ingest(spark, src, 0, 10)
+    pipe = LivePipeline([_clean_node(src, tgt)])
+    pipe.run(spark)
+    _ingest(spark, src, 10, 16)
+    pipe.run(spark)
+    set_check_constraint(spark, tgt, "k_nonneg", "k >= 0")
+    drop_check_constraint(tgt, "k_nonneg")
+    vacuum(tgt, keep=2, min_file_age_s=0)
+    _ingest(spark, src, 16, 18)
+    assert pipe.run(spark)["clean"]["action"] == "append"
+    out = versioned_read(spark, tgt)
+    assert out.count() == 18
+    assert out.select("k").distinct().count() == 18
+
+
 def test_append_node_refuses_upstream_deletes(spark, tmp_path):
     src = str(tmp_path / "src")
     tgt = str(tmp_path / "t")

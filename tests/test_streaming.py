@@ -672,6 +672,48 @@ def test_versioned_stream_upsert_exactly_once_replay_soak(spark, tmp_path):
     assert got3 == {**want, 9: 9.0}
 
 
+def test_stream_ledger_survives_metadata_commits_and_vacuum(spark, tmp_path):
+    """The batch ledger is a carried table property read from the
+    latest commit: two metadata commits and a vacuum that retires the
+    batch commits keep it, so a replay still skips, and two streams on
+    one table keep separate entries."""
+    from skopje_spark.sinks.versioned import (
+        apply_stream_batch,
+        drop_check_constraint,
+        last_stream_batch,
+        latest_version,
+        set_check_constraint,
+        snapshot_meta,
+        stream_incarnation_id,
+        vacuum,
+    )
+
+    table = str(tmp_path / "t")
+    sid = stream_incarnation_id(str(tmp_path / "ck1"))
+    sid2 = stream_incarnation_id(str(tmp_path / "ck2"))
+
+    def batch(*rows):
+        return spark.createDataFrame(list(rows), "k long, v double")
+
+    assert apply_stream_batch(table, ["k"], batch((1, 1.0)), 0, sid)
+    assert apply_stream_batch(table, ["k"], batch((2, 2.0)), 1, sid)
+    set_check_constraint(spark, table, "k_pos", "k > 0")
+    drop_check_constraint(table, "k_pos")
+    vacuum(table, keep=2, min_file_age_s=0)
+    v = latest_version(table)
+    assert last_stream_batch(table, stream_id=sid) == 1
+    assert apply_stream_batch(table, ["k"], batch((2, 99.0)), 1, sid) is False
+    assert latest_version(table) == v
+
+    assert apply_stream_batch(table, ["k"], batch((3, 3.0)), 0, sid2)
+    assert last_stream_batch(table, stream_id=sid) == 1
+    assert last_stream_batch(table, stream_id=sid2) == 0
+    assert last_stream_batch(table) == 1
+    assert json.loads(
+        snapshot_meta(table, "stream_ledger", version=latest_version(table))
+    ) == {sid: 1, sid2: 0}
+
+
 def test_transform_with_state_gate_or_runs(spark, tmp_path):
     """transformWithStateInPandas needs google.protobuf (not shipped in
     this container). The capability gate must say so; where protobuf IS

@@ -725,6 +725,42 @@ def test_compact_materializes_deletion_vectors(spark, tmp_path):
     assert sorted(r["k"] for r in versioned_read(spark, path).collect()) == before
 
 
+def test_compact_records_no_commit_facts_of_its_source(spark, tmp_path):
+    """A compaction records its own facts only: the change-feed files
+    and delete counts of the commit it rewrites are not copied onto
+    it (history would show a compaction that deleted rows, and vacuum
+    would keep the delete's feed files referenced twice)."""
+    from skopje_spark.sinks.versioned import (
+        snapshot_meta,
+        versioned_compact,
+        versioned_delete,
+    )
+
+    path = str(tmp_path / "vcfacts")
+    df = spark.range(0, 40).select(F.col("id").cast("int").alias("k"))
+    versioned_write(df.repartitionByRange(2, "k"), path)
+    vd = versioned_delete(spark, path, "k < 10", change_feed=True)
+    for key in ("cdc_files", "n_rows_deleted", "n_dv_files"):
+        assert snapshot_meta(path, key, version=vd) is not None
+    vc = versioned_compact(spark, path, target_files=1)
+    assert snapshot_meta(path, "op", version=vc) == "compact"
+    for key in ("cdc_files", "n_rows_deleted", "n_dv_files"):
+        assert snapshot_meta(path, key, version=vc) is None, key
+    assert versioned_read(spark, path).count() == 30
+
+
+def test_table_under_glob_characters_reads_its_pool(spark, tmp_path):
+    """Spark expands read paths as globs; a table whose directory name
+    holds glob characters must still write, append and read."""
+    from skopje_spark.sinks.versioned import versioned_append
+
+    path = str(tmp_path / "t['p']")
+    versioned_write(_kv(spark, [(1, "a"), (2, "b")]), path)
+    versioned_append(spark, path, _kv(spark, [(3, "c")]))
+    got = {(r["k"], r["v"]) for r in versioned_read(spark, path).collect()}
+    assert got == {(1, "a"), (2, "b"), (3, "c")}
+
+
 def test_pruned_read_applies_deletion_vectors(spark, tmp_path):
     from skopje_spark.sinks.versioned import (
         versioned_delete,
